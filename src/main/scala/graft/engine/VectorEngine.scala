@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.functions.{MetadataFunctions, VectorExpressions}
 import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, TrainingData}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.graftshim.ColumnBridge
 import java.sql.Timestamp
 import java.nio.file.{Files, Paths}
 
@@ -1235,151 +1237,26 @@ final class VectorEngine private (val spark: SparkSession,
   // Search (§3.1: api.py:279-293 -> services.py:164-181 ->
   // vector_store.py:230-259 -> indexes.py search)
   // -------------------------------------------------------------------
-  /** `probe` (LSH libraries): how wide the bucket probe goes.
-    *   - ProbeAdaptive (DEFAULT): query-directed adaptive probing
-    *     (LshIndex.searchAdaptive) — buckets in flipped-margin-cost order
-    *     until k * `adaptiveMultiplier` candidates; measured recall@10 0.90
-    *     at sf0.1 vs 0.30 single-bucket. The candidate target is O(k),
-    *     independent of table size. The probe set comes from the
-    *     MAINTAINED per-library histogram (bucketHistogram) when there is
-    *     no metadata filter — zero Spark actions before the probe scan; a
-    *     filtered search aggregates the ALLOW-SET's histogram instead (the
-    *     persisted one counts rows the filter excludes, which would
-    *     under-probe), a scan the filter evaluation pays anyway.
-    *   - ProbeMulti: fixed Hamming-1 probe set (recall 0.54).
-    *   - ProbeSingle: the reference's strict single-bucket two-phase
-    *     semantics (indexes.py:206-234) — parity mode.
-    * `adaptiveMultiplier`: the adaptive candidate budget as a multiple of
-    * k — 150 is tuned on near-random synthetic vectors (the hardest case
-    * for sign-bit LSH); a clustered real corpus may want it lower, a
-    * recall-critical one higher. Ignored by the other probe modes.
-    * `nprobeOpt` (IVF libraries): how many nearest cells to scan; None
-    * resolves the storage-aware default (DefaultIvfNProbe = 4, or
-    * DefaultIvfPqNProbe = 6 for a residual-pq library). Falls back to the
-    * full (allow-set) scan when the probed cells hold < k candidates, the
-    * same two-phase contract as LSH. An IVF library with no centroid
-    * model yet searches exactly (flat).
-    * `rescoreOpt` (sq8/pq storage): the exact-rescore short-list depth;
-    * None resolves defaultRescore / DefaultIvfPqRescore. */
   /** Histogram feeding an adaptive probe: the maintained index metadata
     * (no Spark action) for an unfiltered search; None for a filtered one,
     * so the probe recomputes over the allow-set. */
   private def adaptiveHist(libraryId: String, filters: Map[String, Any]): Option[Seq[(Long, Long)]] =
     if (filters.isEmpty) Some(bucketHistogram(libraryId).toSeq) else None
 
+  /** Single-query k-NN: a batch of one. Exactly [[searchBatch]] over
+    * `Seq(0L -> query)` without its query_id column, so every index kind,
+    * storage kind, default, guard and fallback is the batch funnel's (see
+    * its scaladoc for `probe`, `nprobeOpt`, `adaptiveMultiplier` and
+    * `rescoreOpt`). Output: (chunk_id, distance), top-k in (distance,
+    * chunk_id) order. */
   def search(libraryId: String, query: Seq[Float], k: Int,
              filters: Map[String, Any] = Map.empty,
              probe: String = settings.defaultProbe,
              nprobeOpt: Option[Int] = None,
              adaptiveMultiplier: Int = settings.adaptiveMultiplier,
-             rescoreOpt: Option[Int] = None): DataFrame = {
-    val lib = getLibrary(libraryId)
-    // residual IVFPQ resolves WIDER defaults than its parts (see the
-    // DefaultIvfPq* scaladoc): nprobe 6 + R 150 vs ivf's 4 / flat pq's 100
-    val residualPq = lib.storage == StoragePq && pqResidual(lib)
-    val rescore = rescoreOpt.getOrElse(
-      if (residualPq) DefaultIvfPqRescore else defaultRescore(lib.storage))
-    val nprobe = nprobeOpt.getOrElse(
-      if (residualPq) DefaultIvfPqNProbe else DefaultIvfNProbe)
-    if (k <= 0) throw SearchError("k must be > 0")
-    if (!SupportedProbes(probe)) throw SearchError(s"unknown probe mode: $probe")
-    if (nprobe <= 0) throw SearchError("nprobe must be > 0")
-    if (adaptiveMultiplier <= 0) throw SearchError("adaptiveMultiplier must be > 0")
-    if (rescore <= 0) throw SearchError("rescore must be > 0")
-    if (query.length != lib.embedding_dimension)
-      throw SearchError(
-        s"query dimension ${query.length} != library dimension ${lib.embedding_dimension}")
-    val metaPred = MetadataFunctions.filterPredicate(col("metadata"), filters)
-    val scoped = chunks.where(col("library_id") === libraryId).where(metaPred)
-    // empty allow-set short-circuits: the index is never consulted
-    // (vector_store.py:256-258)
-    if (filters.nonEmpty && scoped.limit(1).count() == 0)
-      return spark.emptyDataset[(String, Double)].toDF("chunk_id", "distance")
-    val qvec = array(query.map(f => lit(f)): _*).cast("array<float>")
-    // A storage="sq8" library scans TWO-PHASE wherever a float32 one would
-    // scan flat: approximate top-R over the stored uint8 codes (column
-    // pruning — the float32 embedding bytes are never read in phase 1),
-    // exact rescore of the R survivors. Literally Quantization.search over
-    // the same base the flat scan would read, so an ivf+sq8 library runs
-    // the full funnel: cell prune -> codes scan -> O(R) rescore.
-    def exactScan(base: DataFrame): DataFrame =
-      base.crossJoin(broadcast(spark.range(1).select(qvec.as("qvec"))))
-        .withColumn("distance",
-          round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-            + lit(0.0d))
-        .select(col("id"), col("distance"))
-        .orderBy(col("distance"), col("id"))
-        .limit(k)
-    def flatScan(base: DataFrame, pqCells: Seq[Long] = Nil): DataFrame =
-      if (lib.storage == StorageSq8)
-        Quantization.search(base.toDF(), "embedding", "id", query.toArray,
-          k, math.max(k, rescore), lib.distance_metric)
-      else if (lib.storage == StorageBq)
-        // bq scans TWO-PHASE like sq8: Hamming top-R over the packed
-        // sign words only (1 bit/dim — 1/32 the scanned bytes), exact
-        // cosine rescore of the R survivors; under ivf the base is the
-        // probed cells, so the full funnel composes
-        BinaryQuantization.searchStored(base.toDF(), "embedding", "id",
-          query.toArray, k, math.max(k, rescore), lib.distance_metric)
-      else if (lib.storage == StoragePq && pqModels.contains(libraryId) &&
-          pqResidual(lib))
-        // IVFPQ: residual ADC — per-cell LUTs join on the stored cell
-        // (bucket) column; `pqCells` is the PROBED set only. The
-        // exhaustive `< k` fallback never reaches here (the ivf branch
-        // routes it to exactScan: building per-cell euclidean LUTs for
-        // EVERY cell would be O(C·M·K) driver-built broadcast doubles —
-        // unbounded in C — while the exact scan is the correctness
-        // baseline the fallback exists to guarantee anyway)
-        ProductQuantization.searchResidual(base.toDF(), "embedding", "id",
-          pqModels(libraryId), cellModels(libraryId), pqCells,
-          query.toArray, k, math.max(k, rescore),
-          metric = lib.distance_metric, codesCol = "codes",
-          cellCol = "bucket", normCol = Some("qmin"))
-      else if (lib.storage == StoragePq && pqModels.contains(libraryId))
-        // same two-phase shape: ADC over the stored codes (compact-only
-        // scan — plus the stored qmin norm for cosine), exact rescore of
-        // the R survivors under the library metric
-        ProductQuantization.search(base.toDF(), "embedding", "id",
-          pqModels(libraryId), query.toArray, k, math.max(k, rescore),
-          metric = lib.distance_metric, codesCol = "codes",
-          normCol = Some("qmin"))
-      else exactScan(base)
-    val result =
-      if (lib.index_kind == IndexKindLsh) {
-        val m = matrices(libraryId).matrix.map(_.toArray).toArray
-        val q = spark.range(1).select(qvec.as("qvec"),
-          lshBucket(qvec, m).as("qbucket"))
-        probe match {
-          case ProbeAdaptive =>
-            LshIndex.searchAdaptive(scoped.toDF(), query, m,
-              lib.distance_metric, k, multiplier = adaptiveMultiplier,
-              idCol = "id", hist = adaptiveHist(libraryId, filters),
-              maxHistBuckets = settings.maxAdaptiveHistBuckets)
-          case ProbeMulti =>
-            LshIndex.searchMultiProbe(scoped.toDF(), q, "embedding",
-              lib.distance_metric, k, m.length, idCol = "id")
-          case _ =>
-            LshIndex.searchTwoPhase(scoped.toDF(), q, "embedding",
-              lib.distance_metric, k, idCol = "id")
-        }
-      } else if (lib.index_kind == IndexKindIvf && cellModels.contains(libraryId)) {
-        val probed = IvfIndex.nearestCentroids(query.toArray,
-          cellModels(libraryId), nprobe)
-        val cand = scoped.toDF().where(col("bucket").isin(probed: _*))
-        // two-phase: early-stop candidate count, full scan when < k. A
-        // residual-pq library's exhaustive fallback is the EXACT scan
-        // (see flatScan's residual note: all-cell LUTs are O(C·M·K)
-        // driver work, and exact is what the fallback guarantees)
-        val enough = cand.limit(k).count() >= k
-        if (enough) flatScan(cand, probed)
-        else if (lib.storage == StoragePq && pqModels.contains(libraryId) &&
-            pqResidual(lib))
-          exactScan(scoped.toDF())
-        else flatScan(scoped.toDF())
-      } else
-        flatScan(scoped.toDF())
-    result.withColumnRenamed("id", "chunk_id")
-  }
+             rescoreOpt: Option[Int] = None): DataFrame =
+    searchBatch(libraryId, Seq(0L -> query), k, filters, probe, nprobeOpt,
+      adaptiveMultiplier, rescoreOpt).drop("query_id")
 
   /** MMR-diversified search (operators/MmrRerank.scala; Carbonell &
     * Goldstein 1998): the library's OWN funnel produces the
@@ -1436,17 +1313,59 @@ final class VectorEngine private (val spark: SparkSession,
     }.toDF("rank", "chunk_id", "relevance", "mmr")
   }
 
-  /** Batch k-NN at the facade — "the shape that scales" (J3 batch): ONE
-    * plan scores every query against the library instead of Q sequential
-    * searches. Output: (query_id, chunk_id, distance), top-k per query.
+  /** Batch k-NN at the facade — "the shape that scales" (J3 batch) and
+    * THE search funnel: ONE plan scores every query against the library
+    * instead of Q sequential searches, and [[search]] is a batch of one.
+    * Output: (query_id, chunk_id, distance), top-k per query, ordered by
+    * (query_id, distance, chunk_id). Query ids must be distinct. A filter
+    * whose allow-set is empty yields no rows (vector_store.py:256-258).
     *
-    * LSH-aware two-phase PER QUERY (the reference's two-phase semantics,
-    * vectorized): all query buckets probe in one broadcast equi-join; a
-    * per-query candidate count (ONE tiny action, Q rows) decides which
-    * queries have >= k bucket candidates; the rest fall back to the full
-    * (allow-set-)scan — never fewer results than flat search. The top-k
-    * reduction is the salted two-phase window (operators.TopK), so no
-    * query's candidate set ever funnels through a single reduce slot. */
+    * Every index kind is a candidate generator and every storage kind an
+    * approximate score plus one exact rescore:
+    *   - flat: every (allow-set row, query) pair;
+    *   - lsh / ivf: a probe frame of (query_id, qvec, qbucket) rows
+    *     joined on the stored bucket column (built on the driver for ivf
+    *     cells and adaptive-LSH prefixes), with the reference's two-phase
+    *     semantics per query (a per-query candidate count — ONE tiny
+    *     action, Q rows — sends each query with < k candidates to the
+    *     full allow-set scan instead, so never fewer results than flat
+    *     search);
+    *   - sq8 / bq / pq: top-R per query on the stored codes, then the
+    *     exact distance of the R survivors; float32 scores exactly at once.
+    * Each top-n cut is a global ordered limit (TakeOrderedAndProject) for
+    * one query and the salted two-phase window (operators.TopK) for more,
+    * so no query's candidate set ever funnels through a single reduce
+    * slot.
+    *
+    * `probe` (LSH libraries): how wide the bucket probe goes.
+    *   - ProbeAdaptive (DEFAULT): query-directed adaptive probing
+    *     (LshIndex.probePrefix) — buckets in flipped-margin-cost order
+    *     until k * `adaptiveMultiplier` candidates; measured recall@10 0.90
+    *     at sf0.1 vs 0.30 single-bucket. The candidate target is O(k),
+    *     independent of table size, and needs no `< k` pass: the prefix
+    *     holds >= min(|allow-set|, k) candidates by construction. The probe
+    *     set comes from the MAINTAINED per-library histogram
+    *     (bucketHistogram) when there is no metadata filter — zero Spark
+    *     actions before the probe scan; a filtered search aggregates the
+    *     ALLOW-SET's histogram instead (the persisted one counts rows the
+    *     filter excludes, which would under-probe), a scan the filter
+    *     evaluation pays anyway, with the driver collect BOUNDED — past
+    *     the bound each query falls back to Hamming-1 multi-probe.
+    *   - ProbeMulti: fixed Hamming-1 probe set (recall 0.54).
+    *   - ProbeSingle: the reference's strict single-bucket two-phase
+    *     semantics (indexes.py:206-234) — parity mode.
+    * `adaptiveMultiplier`: the adaptive candidate budget as a multiple of
+    * k — 150 is tuned on near-random synthetic vectors (the hardest case
+    * for sign-bit LSH); a clustered real corpus may want it lower, a
+    * recall-critical one higher. Ignored by the other probe modes.
+    * `nprobeOpt` (IVF libraries): how many nearest cells to scan; None
+    * resolves the storage-aware default (DefaultIvfNProbe = 4, or
+    * DefaultIvfPqNProbe = 6 for a residual-pq library). Falls back to the
+    * full (allow-set) scan when the probed cells hold < k candidates, the
+    * same two-phase contract as LSH. An IVF library with no centroid
+    * model yet searches exactly (flat).
+    * `rescoreOpt` (sq8/bq/pq storage): the exact-rescore short-list depth
+    * R; None resolves defaultRescore / DefaultIvfPqRescore. */
   def searchBatch(libraryId: String, queries: Seq[(Long, Seq[Float])], k: Int,
                   filters: Map[String, Any] = Map.empty,
                   probe: String = settings.defaultProbe,
@@ -1454,6 +1373,8 @@ final class VectorEngine private (val spark: SparkSession,
                   adaptiveMultiplier: Int = settings.adaptiveMultiplier,
                   rescoreOpt: Option[Int] = None): DataFrame = {
     val lib = getLibrary(libraryId)
+    // residual IVFPQ resolves WIDER defaults than its parts (see the
+    // DefaultIvfPq* scaladoc): nprobe 6 + R 150 vs ivf's 4 / flat pq's 100
     val residualPq = lib.storage == StoragePq && pqResidual(lib)
     val rescore = rescoreOpt.getOrElse(
       if (residualPq) DefaultIvfPqRescore else defaultRescore(lib.storage))
@@ -1464,268 +1385,210 @@ final class VectorEngine private (val spark: SparkSession,
     if (nprobe <= 0) throw SearchError("nprobe must be > 0")
     if (adaptiveMultiplier <= 0) throw SearchError("adaptiveMultiplier must be > 0")
     if (rescore <= 0) throw SearchError("rescore must be > 0")
-    val emptyOut = spark.emptyDataset[(Long, String, Double)]
-      .toDF("query_id", "chunk_id", "distance")
-    if (queries.isEmpty) return emptyOut
+    // two queries under one id would share one query_id group: one top-k
+    // over the union of both candidate sets
+    if (queries.map(_._1).distinct.size != queries.size)
+      throw SearchError("duplicate query ids")
+    if (queries.isEmpty)
+      return spark.emptyDataset[(Long, String, Double)]
+        .toDF("query_id", "chunk_id", "distance")
     queries.foreach { case (qid, q) =>
       if (q.length != lib.embedding_dimension)
         throw SearchError(
           s"query $qid dimension ${q.length} != library dimension ${lib.embedding_dimension}")
     }
+    val metric = lib.distance_metric
+    val pqModel = if (lib.storage == StoragePq) pqModels.get(libraryId) else None
     val metaPred = MetadataFunctions.filterPredicate(col("metadata"), filters)
     val scoped = chunks.where(col("library_id") === libraryId).where(metaPred)
       .toDF()
     val qDf = queries.toDF("query_id", "qvec")
       .withColumn("qvec", col("qvec").cast("array<float>"))
-    // Probe plan: a (query_id, qvec, qbucket) frame joined on the stored
-    // index-key column, plus whether the per-query `< k` count/fallback
-    // pass is still needed. Adaptive probing doesn't need it: its prefix
-    // guarantees >= min(|allow-set|, k) candidates per query by
-    // construction, which is exactly what the fallback would deliver.
-    // which queries fell back to the full (every-cell) scan in the ivf
-    // two-phase split below: the residual-pq ADC needs per-(query, cell)
-    // LUTs for exactly the cells each query's rows carry
-    var fallbackSet: Set[Long] = Set.empty
-    val probePlan: Option[(DataFrame, Boolean)] = lib.index_kind match {
+    lazy val qvecs = queries.toMap
+    // Probe plan: the probe frame, the rows it may match, and whether the
+    // per-query `< k` count/fallback pass is needed (adaptive probing
+    // never needs it — see the scaladoc). Driver-known probe buckets
+    // become ONE local relation of (query_id, qvec, qbucket) rows —
+    // broadcasting it runs no Spark job, unlike a join of qDf to a
+    // (query_id, qbucket) frame — and a pushed-down scan filter on the
+    // stored bucket column, so a reopened store skips parquet row groups.
+    // The filter is an InSet, not `isin`: its generated code references
+    // the set instead of inlining each value, so searches with different
+    // probe sets share one compiled class.
+    def localProbe(probes: Seq[(Long, Long)], twoPhase: Boolean) = Some((
+      probes.map { case (qid, b) => (qid, qvecs(qid), b) }
+        .toDF("query_id", "qvec", "qbucket")
+        .withColumn("qvec", col("qvec").cast("array<float>")),
+      scoped.where(ColumnBridge.column(InSet(ColumnBridge.expression(col("bucket")),
+        probes.map(_._2).toSet[Any]))),
+      twoPhase))
+    def hamming1Frame(m: Array[Array[Double]]): DataFrame =
+      qDf.withColumn("qbucket", explode(LshIndex.hamming1Probes(
+        lshBucket(col("qvec"), m), m.length)))
+    // each ivf query's probed cells (the residual-pq LUTs are built for
+    // exactly these)
+    lazy val ivfCells: Seq[(Long, Seq[Long])] = queries.map { case (qid, q) =>
+      qid -> IvfIndex.nearestCentroids(q.toArray, cellModels(libraryId), nprobe)
+    }
+    val probePlan: Option[(DataFrame, DataFrame, Boolean)] = lib.index_kind match {
       case IndexKindLsh =>
         val m = matrices(libraryId).matrix.map(_.toArray).toArray
         probe match {
           case ProbeAdaptive =>
-            // the MAINTAINED histogram serves every query's probe set (a
-            // filtered batch aggregates the allow-set's instead, with the
-            // driver collect BOUNDED — past the bound each query falls
-            // back to fixed Hamming-1 multi-probe, like ProbeMulti)
             adaptiveHist(libraryId, filters)
               .orElse(LshIndex.boundedHistogram(scoped,
                 settings.maxAdaptiveHistBuckets)) match {
               case Some(hist) =>
                 val target = math.max(k.toLong, k.toLong * adaptiveMultiplier)
-                val pairs = queries.flatMap { case (qid, q) =>
+                localProbe(queries.flatMap { case (qid, q) =>
                   val ms = LshIndex.margins(m, q)
                   LshIndex.probePrefix(hist, LshIndex.bucketOf(ms), ms, target)
                     .map(b => (qid, b))
-                }
-                Some((qDf.join(broadcast(pairs.toDF("query_id", "qbucket")),
-                  Seq("query_id")), false))
-              case None =>
-                val qb = qDf.withColumn("qbucket", lshBucket(col("qvec"), m))
-                  .withColumn("qbucket",
-                    explode(LshIndex.hamming1Probes(col("qbucket"), m.length)))
-                Some((qb, true))
+                }, twoPhase = false)
+              case None => Some((hamming1Frame(m), scoped, true))
             }
-          case ProbeMulti =>
-            // each query probes its bucket AND every Hamming-1 neighbor
-            // (P+1 distinct values — a chunk matches at most one probe per
-            // query, so no candidate duplicates)
-            val qb = qDf.withColumn("qbucket", lshBucket(col("qvec"), m))
-              .withColumn("qbucket",
-                explode(LshIndex.hamming1Probes(col("qbucket"), m.length)))
-            Some((qb, true))
+          // each query probes its bucket AND every Hamming-1 neighbor
+          // (P+1 distinct values — a chunk matches at most one probe per
+          // query, so no candidate duplicates)
+          case ProbeMulti => Some((hamming1Frame(m), scoped, true))
           case _ =>
-            Some((qDf.withColumn("qbucket", lshBucket(col("qvec"), m)), true))
+            Some((qDf.withColumn("qbucket", lshBucket(col("qvec"), m)), scoped, true))
         }
       case IndexKindIvf if cellModels.contains(libraryId) =>
-        val cs = cellModels(libraryId)
-        val pairs = queries.flatMap { case (qid, q) =>
-          IvfIndex.nearestCentroids(q.toArray, cs, nprobe).map(c => (qid, c))
-        }
-        Some((qDf.join(broadcast(pairs.toDF("query_id", "qbucket")),
-          Seq("query_id")), true))
+        localProbe(ivfCells.flatMap { case (qid, cs) => cs.map(qid -> _) },
+          twoPhase = true)
       case _ => None
     }
-    // phase-1 width is storage-dependent: an sq8 library's approximate
-    // pass reads the compact columns (codes/qmin/qmax) and NEVER the
-    // float32 embedding bytes — those are read once, for the O(Q x R)
-    // rescore survivors only.
+    // phase-1 width is storage-dependent: a compact-storage library's
+    // approximate pass reads the compact columns and NEVER the float32
+    // embedding bytes — those are read once, for the O(Q x R) rescore
+    // survivors only.
     val dataCols: Seq[Column] =
       if (lib.storage == StorageSq8)
         Seq(col("codes"), col("qmin"), col("qmax"))
       else if (lib.storage == StorageBq)
         Seq(col("codes"))
-      else if (lib.storage == StoragePq && pqModels.contains(libraryId))
+      else if (pqModel.isDefined)
         Seq(col("codes")) ++
-          (if (pqResidual(lib)) Seq(col("bucket")) else Nil) ++
-          (if (lib.distance_metric == "cosine") Seq(col("qmin")) else Nil)
+          (if (residualPq) Seq(col("bucket")) else Nil) ++
+          (if (metric == "cosine") Seq(col("qmin")) else Nil)
       else Seq(col("embedding"))
     val pairCols = Seq(col("query_id"), col("id")) ++ dataCols :+ col("qvec")
-    val pairs: DataFrame = probePlan match {
+    // (query, row) candidate pairs, plus the queries whose probe held < k
+    // candidates: they scan the whole allow-set
+    val (pairs, fallbackQs): (DataFrame, Seq[Long]) = probePlan match {
       case None =>
-        scoped.crossJoin(broadcast(qDf)).select(pairCols: _*)
-      case Some((qb, needTwoPhase)) =>
-        val cand = scoped.join(broadcast(qb), col("bucket") === col("qbucket"))
+        (scoped.crossJoin(broadcast(qDf)).select(pairCols: _*), Nil)
+      case Some((qb, probed, needTwoPhase)) =>
+        val cand = probed.join(broadcast(qb), col("bucket") === col("qbucket"))
           .select(pairCols: _*)
-        if (!needTwoPhase) cand
+        if (!needTwoPhase) (cand, Nil)
         else {
           // The count pass re-runs the probe join but over a COLUMN-PRUNED
           // scan (bucket only — no embedding bytes): the expensive width is
           // read once, in the result plan below. No caching, so repeated
           // batch searches leave no storage residue behind.
-          val counts = scoped.select(col("bucket"))
+          val counts = probed.select(col("bucket"))
             .join(broadcast(qb.select(col("query_id"), col("qbucket"))),
               col("bucket") === col("qbucket"))
             .groupBy("query_id").count().collect()
             .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val bucketQs = queries.map(_._1).filter(counts.getOrElse(_, 0L) >= k)
-          val fallbackQs = queries.map(_._1).filterNot(bucketQs.toSet)
-          fallbackSet = fallbackQs.toSet
-          val parts = Seq(
+          val (bucketQs, fallback) =
+            queries.map(_._1).partition(counts.getOrElse(_, 0L) >= k)
+          (Seq(
             if (bucketQs.nonEmpty)
               Some(cand.where(col("query_id").isin(bucketQs: _*)))
             else None,
-            if (fallbackQs.nonEmpty)
+            if (fallback.nonEmpty)
               Some(scoped.crossJoin(
-                  broadcast(qDf.where(col("query_id").isin(fallbackQs: _*))))
+                  broadcast(qDf.where(col("query_id").isin(fallback: _*))))
                 .select(pairCols: _*))
-            else None).flatten
-          parts.reduce(_ unionByName _)
+            else None).flatten.reduce(_ unionByName _), fallback)
         }
     }
-    val scored =
-      if (lib.storage == StorageBq) {
-        // batch bq two-phase: per-pair Hamming over the stored int
-        // words (the query's words re-packed in-plan from qvec — a
-        // handful of 31-bit words, e.g. 3 at dim 64; cheaper than
-        // another broadcast join), salted
-        // top-R per query, ONE exact-rescore join. Bit-identical to Q
-        // single bq searches (EngineSpec locks this).
-        val r = math.max(k, rescore)
-        val approx = pairs
-          .withColumn("approx", graft.operators.BinaryQuantization.hamming(
-            col("codes"), graft.operators.BinaryQuantization.encodeWordsInt(
-              col("qvec"), lib.embedding_dimension)))
-          .select(col("query_id"), col("id"), col("approx"))
-        val survivors = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else if (lib.storage == StorageSq8) {
-        // batch two-phase: approx top-R per query on the codes (the salted
-        // TopK reduction, like the exact phase), then ONE exact-rescore
-        // join touching O(Q x R) embedding rows. Bit-identical to Q single
-        // sq8 searches (EngineSpec locks this).
-        val r = math.max(k, rescore)
-        val approx = pairs
-          .withColumn("approx", VectorExpressions.sq8DistanceBatch(
-            col("codes"), col("qmin"), col("qmax"), col("qvec"),
-            lib.distance_metric))
-          .select(col("query_id"), col("id"), col("approx"))
-        val survivors = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else if (lib.storage == StoragePq && pqModels.contains(libraryId) &&
-          pqResidual(lib)) {
-        // batch RESIDUAL ADC (IVFPQ): the LUT frame is keyed by
-        // (query_id, cell) — probed cells per query, every cell for the
-        // fallback queries — carrying the same (const, luts) doubles the
-        // single-query path builds, joined on the stored bucket cell, so
-        // batch results stay bit-identical to Q single searches. Per
-        // query the frame is O(nprobe · M · K) doubles (euclidean) or
+    // Each compact storage kind supplies only its approximate score over
+    // the candidate pairs; float32 (and a pq library with no codebooks
+    // yet) scores exactly in one pass.
+    val approx: Option[DataFrame] =
+      if (lib.storage == StorageBq)
+        // Hamming over the stored int words (the query's words re-packed
+        // in-plan from qvec — a handful of 31-bit words, e.g. 3 at dim
+        // 64; cheaper than another broadcast join)
+        Some(pairs.withColumn("approx", BinaryQuantization.hamming(
+          col("codes"), BinaryQuantization.encodeWordsInt(
+            col("qvec"), lib.embedding_dimension))))
+      else if (lib.storage == StorageSq8)
+        Some(pairs.withColumn("approx", VectorExpressions.sq8DistanceBatch(
+          col("codes"), col("qmin"), col("qmax"), col("qvec"), metric)))
+      else pqModel.map { model =>
+        // ADC: each query's lookup table rides in as a broadcast column
+        // (added in the same order as ProductQuantization.search's
+        // literal tables). Residual (IVFPQ) tables are keyed by (query_id,
+        // cell) over each query's probed cells, joined on the stored
+        // bucket cell: O(nprobe · M · K) doubles per query (euclidean) or
         // O(M · K + nprobe) (dot/cosine — the LUT is cell-independent).
-        val model = pqModels(libraryId)
-        val cs = cellModels(libraryId)
-        val metric = lib.distance_metric
-        val r = math.max(k, rescore)
-        // LUTs only for queries whose rows are cell-pruned; a FALLBACK
-        // query scans every cell, and its exact path below needs no LUT
-        // at all — building per-cell LUTs for all C cells would be
-        // O(C·M·K) driver work per fallback query (the single path's
-        // exactScan note)
-        val lutRows = queries.filterNot(q => fallbackSet(q._1))
-          .flatMap { case (qid, q) =>
-            val cells = IvfIndex.nearestCentroids(q.toArray, cs, nprobe)
-            val qn = ProductQuantization.normLocal(q)
-            ProductQuantization.residualLutRows(model, cs, cells,
-              q.toArray, metric)
-              .map { case (cell, const, luts) => (qid, cell, const, luts, qn) }
-          }
-        val lutDf = broadcast(
-          lutRows.toDF("query_id", "__cell", "__const", "__lut", "__qnorm"))
-        val sumLut = model.indices.map { m =>
-          element_at(element_at(col("__lut"), m + 1),
-            col("codes").getItem(m).cast("int") + lit(1))
-        }.foldLeft(col("__const"))(_ + _)
-        val approxCol = ProductQuantization.approxColumn(sumLut, metric,
-          if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm"))
-        // the inner LUT join keeps only the cell-pruned queries' pairs
-        val approx = pairs.join(lutDf, Seq("query_id"))
-          .where(col("bucket") === col("__cell"))
-          .withColumn("approx", approxCol)
-          .select(col("query_id"), col("id"), col("approx"))
-        val survApprox = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        // fallback queries: EVERY candidate survives to the exact rescore
-        // — the batch twin of the single path's exactScan fallback
-        // (identical distance formula, so batch == single stays exact)
-        val survivors =
-          if (fallbackSet.isEmpty) survApprox
-          else survApprox.unionByName(
-            pairs.where(col("query_id").isin(fallbackSet.toSeq: _*))
-              .select(col("query_id"), col("id")))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else if (lib.storage == StoragePq && pqModels.contains(libraryId)) {
-        // batch ADC: each query's M x K lookup table rides in as a
-        // broadcast column (the same doubles the single-query path embeds
-        // as literals, added in the same order — batch results are
-        // bit-identical to Q single searches, like sq8), approx top-R per
-        // query on the codes, ONE exact-rescore join for O(Q x R) rows.
         // Cosine additionally divides by the stored qmin norm and the
         // per-query norm riding in the same broadcast frame.
-        val model = pqModels(libraryId)
-        val metric = lib.distance_metric
-        val r = math.max(k, rescore)
-        val luts = queries.map { case (qid, q) =>
-          (qid, ProductQuantization.adcLut(model, q.toArray, metric)
-            .map(_.toSeq).toSeq,
-            ProductQuantization.normLocal(q))
-        }
-        val lutDf = broadcast(luts.toDF("query_id", "__lut", "__qnorm"))
-        val sumLut = model.indices.map { m =>
+        val terms = model.indices.map { m =>
           element_at(element_at(col("__lut"), m + 1),
             col("codes").getItem(m).cast("int") + lit(1))
-        }.reduce(_ + _)
-        val approxCol = ProductQuantization.approxColumn(sumLut, metric,
-          if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm"))
-        val approx = pairs.join(lutDf, Seq("query_id"))
-          .withColumn("approx", approxCol)
-          .select(col("query_id"), col("id"), col("approx"))
-        val survivors = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        scoped.select(col("id"), col("embedding"))
+        }
+        val (withLut, lutSum) =
+          if (residualPq) {
+            // LUTs only for the cell-pruned queries; a FALLBACK query
+            // scans every cell and goes straight to the exact rescore —
+            // per-cell LUTs for all C cells would be O(C·M·K) driver work
+            val fallback = fallbackQs.toSet
+            val lutRows = ivfCells.filterNot(c => fallback(c._1)).flatMap {
+              case (qid, cells) =>
+                val qn = ProductQuantization.normLocal(qvecs(qid))
+                ProductQuantization.residualLutRows(model, cellModels(libraryId),
+                  cells, qvecs(qid).toArray, metric)
+                  .map { case (cell, const, luts) => (qid, cell, const, luts, qn) }
+            }
+            (pairs.join(broadcast(lutRows.toDF("query_id", "__cell", "__const",
+                "__lut", "__qnorm")), Seq("query_id"))
+              .where(col("bucket") === col("__cell")),
+              terms.foldLeft(col("__const"))(_ + _))
+          } else {
+            val luts = queries.map { case (qid, q) =>
+              (qid, ProductQuantization.adcLut(model, q.toArray, metric)
+                .map(_.toSeq).toSeq, ProductQuantization.normLocal(q))
+            }
+            (pairs.join(broadcast(luts.toDF("query_id", "__lut", "__qnorm")),
+                Seq("query_id")),
+              terms.reduce(_ + _))
+          }
+        withLut.withColumn("approx", ProductQuantization.approxColumn(
+          lutSum, metric,
+          if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm")))
+      }
+    def exact(df: DataFrame): DataFrame = df
+      .withColumn("distance",
+        round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d))
+      .select(col("query_id"), col("id"), col("distance"))
+    def topN(df: DataFrame, score: String, n: Int): DataFrame =
+      if (queries.size == 1) df.orderBy(col(score), col("id")).limit(n)
+      else graft.operators.TopK.perGroup(df, "query_id", score, "id", n)
+    val scored = approx match {
+      case None => exact(pairs)
+      case Some(a) =>
+        val cut = topN(a.select(col("query_id"), col("id"), col("approx")),
+          "approx", math.max(k, rescore)).select(col("query_id"), col("id"))
+        // a residual-pq fallback query has no LUT rows: EVERY candidate
+        // survives to the exact rescore
+        val survivors =
+          if (!residualPq || fallbackQs.isEmpty) cut
+          else cut.unionByName(pairs.where(col("query_id").isin(fallbackQs: _*))
+            .select(col("query_id"), col("id")))
+        // ONE exact-rescore join touching O(Q x R) embedding rows
+        exact(scoped.select(col("id"), col("embedding"))
           .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else pairs
-        .withColumn("distance",
-          round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-            + lit(0.0d))
-        .select(col("query_id"), col("id"), col("distance"))
-    graft.operators.TopK.perGroup(scored, "query_id", "distance", "id", k)
-      .withColumnRenamed("id", "chunk_id")
-      .orderBy(col("query_id"), col("distance"), col("chunk_id"))
+          .join(broadcast(qDf), Seq("query_id")))
+    }
+    val top = topN(scored, "distance", k).withColumnRenamed("id", "chunk_id")
+    if (queries.size == 1) top
+    else top.orderBy(col("query_id"), col("distance"), col("chunk_id"))
   }
 
   /** HYBRID retrieval at the facade — BM25 lexical ranking over the

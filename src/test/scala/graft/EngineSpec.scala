@@ -1,7 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{array, col, lit, round}
 import graft.engine._
+import graft.operators.{IvfIndex, LshIndex, ProductQuantization}
 
 /** Engine CRUD + lifecycle semantics (mirrors the reference's
   * tests/test_vector_store.py, tests/test_services.py and
@@ -23,6 +26,54 @@ class EngineSpec extends AnyFunSuite {
       ChunkInput("d", vec(0, 0, 1, 0), Map("tag" -> "1"), 3, Some("c3"))))
     (e, lib.id, doc.id)
   }
+
+  // Independent references for the batch-parity checks. `search` is a
+  // one-query `searchBatch`, so comparing the two would compare the funnel
+  // with itself: each check compares the funnel with the operator-level
+  // single-query search (or a brute-force scan) over the library's own rows.
+  private def libRows(e: VectorEngine, lib: String): DataFrame =
+    e.chunksDf.where(col("library_id") === lib)
+
+  private def qvecLit(q: Seq[Float]) =
+    array(q.map(x => lit(x)): _*).cast("array<float>")
+
+  private def ranked(df: DataFrame): Seq[(String, Double)] =
+    df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+
+  private def byQuery(batch: DataFrame): Map[Long, Seq[(String, Double)]] =
+    batch.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+
+  /** Exact top-k over every row of the library. */
+  private def bruteForce(e: VectorEngine, lib: String, q: Seq[Float],
+                         k: Int): Seq[(String, Double)] =
+    ranked(libRows(e, lib)
+      .select(col("id"), (round(graft.functions.VectorFunctions.distance(
+        e.getLibrary(lib).distance_metric)(col("embedding"), qvecLit(q)), 6)
+        + lit(0.0d)).as("distance"))
+      .orderBy(col("distance"), col("id")).limit(k))
+
+  /** LshIndex.searchAdaptive over the maintained histogram. */
+  private def lshAdaptive(e: VectorEngine, lib: String, q: Seq[Float], k: Int,
+                          multiplier: Int = LshIndex.AdaptiveMultiplier): Seq[(String, Double)] =
+    ranked(LshIndex.searchAdaptive(libRows(e, lib), q, e.lshProjectionMatrix(lib),
+      e.getLibrary(lib).distance_metric, k, multiplier, idCol = "id",
+      hist = Some(e.bucketHistogram(lib).toSeq)))
+
+  /** LshIndex.searchMultiProbe (Hamming-1 probe set, `< k` fallback). */
+  private def lshMulti(e: VectorEngine, lib: String, q: Seq[Float],
+                       k: Int): Seq[(String, Double)] = {
+    val m = e.lshProjectionMatrix(lib)
+    val query = spark.range(1).select(qvecLit(q).as("qvec"),
+      graft.functions.VectorFunctions.lshBucket(qvecLit(q), m).as("qbucket"))
+    ranked(LshIndex.searchMultiProbe(libRows(e, lib), query, "embedding",
+      e.getLibrary(lib).distance_metric, k, m.length, idCol = "id"))
+  }
+
+  private def pqModel(cb: Seq[(Int, Long, Seq[Float])]): ProductQuantization.Model =
+    cb.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, cs) =>
+      cs.sortBy(_._2).map { case (_, cid, v) => IvfIndex.Centroid(cid, v.toArray) }
+    }
 
   test("create/get/list round-trip with derived counts") {
     val (e, lib, doc) = freshWithData()
@@ -380,19 +431,21 @@ class EngineSpec extends AnyFunSuite {
     for (kind <- Seq("flat", "random_projection")) {
       val (e, lib, _) = freshWithData(kind)
       val qs = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 0.9, 0.1, 0))
-      val batch = e.searchBatch(lib, qs, k = 2).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+      val batch = byQuery(e.searchBatch(lib, qs, k = 2))
       qs.foreach { case (qid, q) =>
-        val single = e.search(lib, q, 2).collect()
-          .map(r => (r.getString(0), r.getDouble(1))).toSeq
-        assert(batch(qid) == single, s"kind=$kind query=$qid")
+        val ref = if (kind == "flat") bruteForce(e, lib, q, 2)
+                  else lshAdaptive(e, lib, q, 2)
+        assert(batch(qid) == ref, s"kind=$kind query=$qid")
+        assert(ranked(e.search(lib, q, 2)) == ref, s"kind=$kind query=$qid")
       }
     }
     // guards + filter parity
     val (e, lib, _) = freshWithData()
     intercept[SearchError] { e.searchBatch(lib, Seq(0L -> vec(1, 0)), 2) }
     intercept[SearchError] { e.searchBatch(lib, Seq(0L -> vec(1, 0, 0, 0)), 0) }
+    intercept[SearchError] { // duplicate query ids would share one top-k
+      e.searchBatch(lib, Seq(0L -> vec(1, 0, 0, 0), 0L -> vec(0, 1, 0, 0)), 2)
+    }
     assert(e.searchBatch(lib, Seq.empty, 3).count() == 0)
     val filtered = e.searchBatch(lib, Seq(0L -> vec(1, 0, 0, 0)), 10,
       Map("tag" -> 1)).collect().map(_.getString(1)).toSet
@@ -418,16 +471,12 @@ class EngineSpec extends AnyFunSuite {
     val (ef, libF, _) = freshWithData("flat")
     assert(ef.search(libF, q, 3, probe = VectorEngine.ProbeMulti).collect().toSeq ==
       ef.search(libF, q, 3).collect().toSeq)
-    // batch parity: searchBatch(multiProbe) == per-query search(multiProbe)
+    // batch parity: searchBatch(multiProbe) == operator-level searchMultiProbe
     val (eb, libB, _) = freshWithData("random_projection")
     val qs = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 0.9, 0.1, 0))
-    val batch = eb.searchBatch(libB, qs, k = 2, probe = VectorEngine.ProbeMulti).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+    val batch = byQuery(eb.searchBatch(libB, qs, k = 2, probe = VectorEngine.ProbeMulti))
     qs.foreach { case (qid, qv) =>
-      val one = eb.search(libB, qv, 2, probe = VectorEngine.ProbeMulti).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq
-      assert(batch(qid) == one, s"multiProbe batch query=$qid")
+      assert(batch(qid) == lshMulti(eb, libB, qv, 2), s"multiProbe batch query=$qid")
     }
   }
 
@@ -438,13 +487,9 @@ class EngineSpec extends AnyFunSuite {
     e.save(dir)
     val e2 = VectorEngine.open(spark, dir)
     val qs = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 0.9, 0.1, 0))
-    val batch = e2.searchBatch(lib, qs, k = 2).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+    val batch = byQuery(e2.searchBatch(lib, qs, k = 2))
     qs.foreach { case (qid, q) =>
-      val single = e2.search(lib, q, 2).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq
-      assert(batch(qid) == single, s"reopened query=$qid")
+      assert(batch(qid) == lshAdaptive(e2, lib, q, 2), s"reopened query=$qid")
     }
   }
 
@@ -603,14 +648,15 @@ class EngineSpec extends AnyFunSuite {
     e.addChunk(doc, ChunkInput("e", vec(0, 0.6, 0.4, 0), id = Some("c4")))
     assert(e.search(lib, vec(0, 0.6, 0.4, 0), k = 1, nprobeOpt = Some(1)).collect()
       .head.getString(0) == "c4")
-    // batch parity with per-query search at the same nprobe
+    // batch parity with the operator-level IVF search at the same nprobe
+    // (each query's nearest cell holds >= k rows: no fallback)
     val qs = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 1, 0, 0))
-    val batch = e.searchBatch(lib, qs, k = 2, nprobeOpt = Some(1)).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+    val batch = byQuery(e.searchBatch(lib, qs, k = 2, nprobeOpt = Some(1)))
+    val cents = Seq(IvfIndex.Centroid(0L, Array(1f, 0f, 0f, 0f)),
+      IvfIndex.Centroid(1L, Array(0f, 0.5f, 0.5f, 0f)))
     qs.foreach { case (qid, q) =>
-      val one = e.search(lib, q, 2, nprobeOpt = Some(1)).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val one = ranked(IvfIndex.search(libRows(e, lib).withColumnRenamed("bucket", "cell"),
+        "embedding", "id", cents, q.toArray, nprobe = 1, "cosine", k = 2))
       assert(batch(qid) == one, s"ivf batch query=$qid")
     }
     // save -> reopen: centroids.parquet persisted, cells re-derived, and
@@ -690,9 +736,7 @@ class EngineSpec extends AnyFunSuite {
     // batch parity at a non-default budget
     val batch = e.searchBatch(lib, Seq(0L -> q), 2, adaptiveMultiplier = 2).collect()
       .map(r => (r.getString(1), r.getDouble(2))).toSeq
-    val single = e.search(lib, q, 2, adaptiveMultiplier = 2).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    assert(batch == single)
+    assert(batch == lshAdaptive(e, lib, q, 2, multiplier = 2))
   }
 
   test("sq8 storage library: create/patch guards, codes derived at ingest " +
@@ -742,14 +786,12 @@ class EngineSpec extends AnyFunSuite {
     assert(e.search(lib.id, q, 4).collect().toSeq ==
       ef.search(libF.id, q, 4).collect().toSeq)
     intercept[SearchError] { e.search(lib.id, q, 2, rescoreOpt = Some(0)) }
-    // batch == per-query single searches
+    // batch == the operator-level two-phase search per query
     val qs = Seq(0L -> q, 1L -> vec(0, 1, 0, 0))
-    val batch = e.searchBatch(lib.id, qs, k = 2).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+    val batch = byQuery(e.searchBatch(lib.id, qs, k = 2))
     qs.foreach { case (qid, qv) =>
-      val one = e.search(lib.id, qv, 2).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val one = ranked(graft.operators.Quantization.search(libRows(e, lib.id),
+        "embedding", "id", qv.toArray, 2, VectorEngine.DefaultSq8Rescore, "euclidean"))
       assert(batch(qid) == one, s"sq8 batch query=$qid")
     }
     // patching the embedding recomputes the codes
@@ -828,14 +870,13 @@ class EngineSpec extends AnyFunSuite {
     assert(e.search(lib.id, q, 4).collect().toSeq ==
       ef.search(libF.id, q, 4).collect().toSeq)
     intercept[SearchError] { e.search(lib.id, q, 2, rescoreOpt = Some(0)) }
-    // batch == per-query single searches
+    // batch == the operator-level two-phase search per query
     val qs = Seq(0L -> q, 1L -> vec(-0.5, 1, 0, 0))
-    val batch = e.searchBatch(lib.id, qs, k = 2).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+    val batch = byQuery(e.searchBatch(lib.id, qs, k = 2))
     qs.foreach { case (qid, qv) =>
-      val one = e.search(lib.id, qv, 2).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val one = ranked(graft.operators.BinaryQuantization.searchStored(
+        libRows(e, lib.id), "embedding", "id", qv.toArray, 2,
+        VectorEngine.DefaultBqRescore, "cosine"))
       assert(batch(qid) == one, s"bq batch query=$qid")
     }
     // patching the embedding recomputes the packed words
@@ -891,14 +932,12 @@ class EngineSpec extends AnyFunSuite {
       // R saturates at this size, so two-phase must equal the flat scan
       assert(e.search(lib.id, q, 5).collect().toSeq ==
         ef.search(libF.id, q, 5).collect().toSeq, s"metric=$metric")
-      // batch == per-query single searches
+      // batch == the operator-level two-phase search per query
       val qs = Seq(0L -> q, 1L -> vec(0, 1, 0, 0))
-      val batch = e.searchBatch(lib.id, qs, k = 3).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+      val batch = byQuery(e.searchBatch(lib.id, qs, k = 3))
       qs.foreach { case (qid, qv) =>
-        val one = e.search(lib.id, qv, 3).collect()
-          .map(r => (r.getString(0), r.getDouble(1))).toSeq
+        val one = ranked(graft.operators.Quantization.search(libRows(e, lib.id),
+          "embedding", "id", qv.toArray, 3, VectorEngine.DefaultSq8Rescore, metric))
         assert(batch(qid) == one, s"sq8 batch metric=$metric query=$qid")
       }
       // a metric change on an sq8 library is allowed (codes are raw-vector)
@@ -941,9 +980,10 @@ class EngineSpec extends AnyFunSuite {
         ChunkInput("x", vec(1, 0, 0, 0), Map.empty, 0, Some("px"))))
     }
     // 2 subspaces x 2 centroids over dim 4
-    e.setPqCodebooks("pql", Seq(
+    val cb = Seq(
       (0, 0L, Seq(1.0f, 0.0f)), (0, 1L, Seq(0.0f, 1.0f)),
-      (1, 0L, Seq(1.0f, 0.0f)), (1, 1L, Seq(0.0f, 1.0f))))
+      (1, 0L, Seq(1.0f, 0.0f)), (1, 1L, Seq(0.0f, 1.0f)))
+    e.setPqCodebooks("pql", cb)
     // a metric change is fine for pq, like sq8: codes are the L2-argmin
     // encoding of the raw vector (metric-independent) and the stored qmin
     // norm serves the cosine denominator — flip it and flip it back
@@ -972,15 +1012,15 @@ class EngineSpec extends AnyFunSuite {
     val got = e2.search("pql", Seq(1f, 0f, 1f, 0f), k = 2).collect()
       .map(_.getString(0)).toSeq
     assert(got == Seq("p0", "p1"))
-    // batch search is bit-identical to per-query searches
+    // batch search is bit-identical to the operator-level ADC search
     val qs = Seq(0L -> Seq(1f, 0f, 1f, 0f), 1L -> Seq(0f, 1f, 0f, 1f))
-    val batch = e2.searchBatch("pql", qs, k = 2).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    val singles = qs.flatMap { case (qid, q) =>
-      e2.search("pql", q, k = 2).collect()
-        .map(r => (qid, r.getString(0), r.getDouble(1)))
+    val batch = byQuery(e2.searchBatch("pql", qs, k = 2))
+    qs.foreach { case (qid, q) =>
+      val one = ranked(ProductQuantization.search(libRows(e2, "pql"), "embedding",
+        "id", pqModel(cb), q.toArray, 2, VectorEngine.DefaultPqRescore,
+        metric = "euclidean", codesCol = "codes", normCol = Some("qmin")))
+      assert(batch(qid) == one, s"pq batch query=$qid")
     }
-    assert(batch.sorted == singles.sorted)
   }
 
   test("pq storage under cosine and dot_product: stored qmin norm, " +
@@ -1025,15 +1065,15 @@ class EngineSpec extends AnyFunSuite {
       val flat = e2.search("flatm", q, k = 4, rescoreOpt = Some(10)).collect()
         .map(r => (r.getString(0).stripPrefix("f"), r.getDouble(1))).toSeq
       assert(pq == flat, s"$metric pq != flat twin")
-      // batch search is bit-identical to per-query searches
+      // batch search is bit-identical to the operator-level ADC search
       val qs = Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 1f))
-      val batch = e2.searchBatch("pqm", qs, k = 3).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-      val singles = qs.flatMap { case (qid, qq) =>
-        e2.search("pqm", qq, k = 3).collect()
-          .map(r => (qid, r.getString(0), r.getDouble(1)))
+      val batch = byQuery(e2.searchBatch("pqm", qs, k = 3))
+      qs.foreach { case (qid, qq) =>
+        val one = ranked(ProductQuantization.search(libRows(e2, "pqm"), "embedding",
+          "id", pqModel(cb), qq.toArray, 3, VectorEngine.DefaultPqRescore,
+          metric = metric, codesCol = "codes", normCol = Some("qmin")))
+        assert(batch(qid) == one, s"$metric batch != operator query=$qid")
       }
-      assert(batch.sorted == singles.sorted, s"$metric batch != single")
     }
   }
 
@@ -1113,14 +1153,17 @@ class EngineSpec extends AnyFunSuite {
     val expected = e.search("ivfpq", q, k = 3).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(got == expected)
+    // batch == the operator-level residual ADC search; the default nprobe
+    // (6) covers both cells, so no query falls back
     val qs = Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 1f))
-    val batch = e2.searchBatch("ivfpq", qs, k = 2).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    val singles = qs.flatMap { case (qid, qq) =>
-      e2.search("ivfpq", qq, k = 2).collect()
-        .map(r => (qid, r.getString(0), r.getDouble(1)))
+    val batch = byQuery(e2.searchBatch("ivfpq", qs, k = 2))
+    qs.foreach { case (qid, qq) =>
+      val one = ranked(ProductQuantization.searchResidual(libRows(e2, "ivfpq"),
+        "embedding", "id", model2, cs2, cs2.map(_.id), qq.toArray, 2,
+        VectorEngine.DefaultIvfPqRescore, metric = "euclidean", codesCol = "codes",
+        cellCol = "bucket", normCol = Some("qmin")))
+      assert(batch(qid) == one, s"ivfpq batch query=$qid")
     }
-    assert(batch.sorted == singles.sorted)
   }
 
   test("trainPqCodebooks on a residual (ivf+centroids) library trains on " +

@@ -481,6 +481,58 @@ class PlanSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  /** A 4-d library with two chunks near each axis; `ivf` installs one
+    * centroid per axis, so each query's nearest cell holds >= 2 rows. */
+  private def axisEngine(indexKind: String): VectorEngine = {
+    val e = VectorEngine.create(spark)
+    e.createLibrary("axes", dim = 4, indexKind = indexKind, id = Some("axes"))
+    val axes = (0 until 4).map(i => Seq.tabulate(4)(j => if (j == i) 1f else 0f))
+    if (indexKind == VectorEngine.IndexKindIvf)
+      e.setIvfCentroids("axes", axes.zipWithIndex.map { case (v, i) => i.toLong -> v })
+    val d = e.createDocument("axes", "d")
+    e.addChunksBatch(d.id, axes.zipWithIndex.flatMap { case (v, i) =>
+      Seq(ChunkInput("x", v, id = Some(s"a$i")),
+        ChunkInput("y", v.updated((i + 1) % 4, 0.1f), id = Some(s"b$i")))
+    })
+    e
+  }
+
+  private def physical(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+
+  test("one-query search: the top-k is ONE TakeOrderedAndProject — no " +
+    "per-query window, no shuffle on query_id; a two-query batch keeps " +
+    "the salted window") {
+    val e = axisEngine(VectorEngine.IndexKindFlat)
+    val q = Seq(1f, 0.2f, 0f, 0f)
+    val single = e.search("axes", q, 2).queryExecution.executedPlan.toString
+    assert(single.contains("TakeOrderedAndProject"), single)
+    assert(!single.contains("WindowGroupLimit"), single)
+    assert(!single.contains("hashpartitioning(query_id"), single)
+    val batch = e.searchBatch("axes", Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 0f)), 2)
+      .queryExecution.executedPlan.toString
+    assert(batch.contains("WindowGroupLimit"), batch)
+  }
+
+  test("one-query ivf search: the probe side is a driver-built local " +
+    "relation — no join under the broadcast") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val e = axisEngine(VectorEngine.IndexKindIvf)
+    val df = e.search("axes", Seq(1f, 0.2f, 0f, 0f), 2, nprobeOpt = Some(1))
+    val joins = physical(df).collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, physical(df).toString)
+    val j = joins.head
+    val probeSide = if (j.buildSide == BuildRight) j.right else j.left
+    assert(probeSide.collect { case j: BaseJoinExec => j }.isEmpty, probeSide.toString)
+    assert(probeSide.collect { case l: LocalTableScanExec => l }.nonEmpty, probeSide.toString)
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("b0", "a0"))
+  }
+
   test("reopened engine scans partition-prune to the searched library") {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-planspec").toString
     val e = VectorEngine.create(spark)

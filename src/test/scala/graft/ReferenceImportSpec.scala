@@ -117,13 +117,28 @@ class ReferenceImportSpec extends AnyFunSuite {
       .orderBy("chunk_index", "id").limit(3)
       .select("embedding").collect().zipWithIndex
       .map { case (r, i) => i.toLong -> r.getSeq[Float](0) }.toSeq
+    // `search` is a one-query searchBatch, so the per-query reference is
+    // independent of the funnel: a brute-force scan of the flat library,
+    // LshIndex.searchAdaptive over the lsh library's maintained histogram
     for (lib <- Seq(flatLib, lshLib)) {
       val batch = e.searchBatch(lib, qs, k = 4).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
         .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+      val rows = e.chunksDf.where(col("library_id") === lib)
+      val metric = e.getLibrary(lib).distance_metric
       qs.foreach { case (qid, q) =>
-        val one = e.search(lib, q, 4).collect()
-          .map(r => (r.getString(0), r.getDouble(1))).toSeq
+        val ref =
+          if (lib == flatLib)
+            rows.select(col("id"), (round(graft.functions.VectorFunctions
+                .distance(metric)(col("embedding"),
+                  array(q.map(x => lit(x)): _*).cast("array<float>")), 6)
+                + lit(0.0d)).as("distance"))
+              .orderBy(col("distance"), col("id")).limit(4)
+          else
+            graft.operators.LshIndex.searchAdaptive(rows, q,
+              e.lshProjectionMatrix(lib), metric, 4, idCol = "id",
+              hist = Some(e.bucketHistogram(lib).toSeq))
+        val one = ref.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
         assert(batch(qid) == one, s"lib $lib query $qid")
       }
     }

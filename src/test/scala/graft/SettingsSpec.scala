@@ -161,11 +161,21 @@ class SettingsSpec extends AnyFunSuite {
       ChunkInput("e", vec(0, -1, 0, 0), Map("t" -> 2), 4, Some("f4"))))
     assert(e.search(lib.id, q, 3).collect().toSeq.toString ==
       free.search(lib2.id, q, 3).collect().toSeq.toString)
-    // batch parity under the bound
+    // batch parity under the bound, against the operator-level
+    // multi-probe search over the allow-set (`search` is itself a
+    // one-query searchBatch)
     val batch = e.searchBatch(lib.id, Seq(0L -> q), 3, filters = filt)
       .collect().map(r => (r.getString(1), r.getDouble(2))).toSeq
-    val single = adaptive.map(r => (r.getString(0), r.getDouble(1)))
-    assert(batch == single)
+    val m = e.lshProjectionMatrix(lib.id)
+    val qLit = array(q.map(x => lit(x)): _*).cast("array<float>")
+    val allowSet = e.chunksDf.where(col("library_id") === lib.id)
+      .where(graft.functions.MetadataFunctions.filterPredicate(col("metadata"), filt))
+    val ref = LshIndex.searchMultiProbe(allowSet,
+      spark.range(1).select(qLit.as("qvec"),
+        graft.functions.VectorFunctions.lshBucket(qLit, m).as("qbucket")),
+      "embedding", "cosine", 3, m.length, idCol = "id")
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    assert(batch == ref)
     // operator-level: searchAdaptive with an overflowing bound ==
     // searchMultiProbe
     val cfg = LshIndex.Config(numProjections = 4, dim = 4, seed = 123L)
