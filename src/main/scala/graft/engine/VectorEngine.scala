@@ -48,13 +48,15 @@ final class VectorEngine private (val spark: SparkSession,
     * metadata exactly like the LSH matrix: O(C x dim), persisted beside it,
     * and the stored `bucket` column holds the chunk's CELL id. */
   private var cellModels: Map[String, Seq[IvfIndex.Centroid]] = Map.empty
-  /** Per-library LSH (bucket -> count) histogram — the THIRD piece of index
-    * metadata (<= 2^P rows per library, like the matrix is P x dim): the
-    * adaptive probe's input, maintained INCREMENTALLY by every chunk
-    * mutation whose buckets are driver-known (single adds, patches, single
-    * deletes) and by one O(batch) aggregate per bulk ingest — so the
-    * default search path never aggregates the chunks table. Persisted at
-    * save beside the matrices, loaded on open. */
+  /** Per-library (bucket -> count) histogram of every BUCKETED library —
+    * an LSH library (its sign-bit buckets, <= 2^P rows) and an ivf library
+    * with a centroid model (its cells, <= C rows): the THIRD piece of index
+    * metadata. It is the adaptive probe's input, every search's `< k`
+    * candidate count and the occupancy health signal, maintained
+    * INCREMENTALLY by every chunk mutation whose buckets are driver-known
+    * (single adds, patches, single deletes) and by one O(batch) aggregate
+    * per bulk ingest — so an unfiltered search never aggregates the chunks
+    * table. Persisted at save beside the matrices, loaded on open. */
   private var hists: Map[String, Map[Long, Long]] = Map.empty
   /** Libraries whose histogram needs a recompute: cascade deletes remove an
     * unbounded, driver-unknown set of buckets, so they mark the library
@@ -142,8 +144,9 @@ final class VectorEngine private (val spark: SparkSession,
   private def markDirty(libraryId: String): Unit = dirtyLibs += libraryId
 
   /** Apply driver-known (bucket -> count-delta) updates to a library's
-    * histogram. A no-op for libraries without one (flat/ivf); zero-count
-    * buckets are dropped so the map stays <= |occupied buckets|. */
+    * histogram. A no-op for libraries without one (flat, and ivf before
+    * its centroid model); zero-count buckets are dropped so the map stays
+    * <= |occupied buckets|. */
   private def histUpdate(libId: String, deltas: Iterable[(Long, Long)]): Unit =
     hists.get(libId).foreach { h =>
       val next = deltas.foldLeft(h) { case (m, (b, d)) =>
@@ -153,21 +156,23 @@ final class VectorEngine private (val spark: SparkSession,
       hists += libId -> next
     }
 
-  private def histRecompute(libId: String): Map[Long, Long] =
-    chunks.where(col("library_id") === libId && col("bucket").isNotNull)
+  /** Rebuild a library's histogram with one column-pruned aggregate over
+    * its partition and mark it clean. */
+  private def histRecompute(libId: String): Unit = {
+    hists += libId -> chunks.where(col("library_id") === libId && col("bucket").isNotNull)
       .groupBy("bucket").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    staleHists -= libId
+  }
 
-  /** The library's LSH (bucket -> count) histogram — index metadata, NOT a
-    * table aggregate: O(1) when clean; the first read after a cascade
-    * delete (or after opening a pre-histogram state dir) rebuilds it with
-    * one column-pruned aggregate over the library's partition. Empty for
-    * non-LSH libraries. */
+  /** The library's (bucket -> count) histogram — LSH buckets or IVF cells;
+    * index metadata, NOT a table aggregate: O(1) when clean; the first read
+    * after a cascade delete (or after opening a state dir that holds no
+    * histogram for the library) rebuilds it with one column-pruned
+    * aggregate over the library's partition. Empty for flat libraries and
+    * for ivf libraries without a centroid model. */
   def bucketHistogram(libraryId: String): Map[Long, Long] = {
-    if (staleHists(libraryId)) {
-      hists += libraryId -> histRecompute(libraryId)
-      staleHists -= libraryId
-    }
+    if (staleHists(libraryId)) histRecompute(libraryId)
     hists.getOrElse(libraryId, Map.empty)
   }
 
@@ -479,7 +484,7 @@ final class VectorEngine private (val spark: SparkSession,
   }
 
   /** Cascade delete document -> chunks (vector_store.py:131-147). The
-    * removed chunks' buckets are not driver-known, so the library's LSH
+    * removed chunks' buckets are not driver-known, so the library's bucket
     * histogram is marked stale (rebuilt once on next read) rather than
     * aggregated eagerly here — deletes stay lazy. */
   def deleteDocument(id: String): Unit = {
@@ -589,6 +594,13 @@ final class VectorEngine private (val spark: SparkSession,
     * codes and their reader always agree. */
   private def pqResidual(lib: LibraryRow): Boolean =
     lib.index_kind == IndexKindIvf && cellModels.contains(lib.id)
+
+  /** Whether a library stores an index key in its `bucket` column (and
+    * keeps a histogram of it): always for lsh, for ivf once a centroid
+    * model is installed. */
+  private def bucketed(lib: LibraryRow): Boolean =
+    lib.index_kind == IndexKindLsh ||
+      (lib.index_kind == IndexKindIvf && cellModels.contains(lib.id))
 
   /** The stored-codes expression of a pq library: residual codes when
     * [[pqResidual]] (reading the stored `bucket` cell column), raw codes
@@ -921,10 +933,11 @@ final class VectorEngine private (val spark: SparkSession,
   // IVF index management (the scale index the reference lacks — SURVEY
   // §2 extension family; the model is index metadata like the LSH matrix)
   // -------------------------------------------------------------------
-  /** Install an explicit centroid model on an `ivf` library and (re)derive
-    * the stored cell of every existing chunk. Explicit centroids make the
-    * index REPRODUCIBLE (and SQL-replayable by an oracle); `trainIvfIndex`
-    * is the self-training convenience on top. */
+  /** Install an explicit centroid model on an `ivf` library, (re)derive
+    * the stored cell of every existing chunk, and rebuild the library's
+    * cell histogram with one aggregate (as [[setLshProjections]] does).
+    * Explicit centroids make the index REPRODUCIBLE (and SQL-replayable by
+    * an oracle); `trainIvfIndex` is the self-training convenience on top. */
   def setIvfCentroids(libraryId: String, centroids: Seq[(Long, Seq[Float])]): Unit = {
     val lib = getLibrary(libraryId)
     if (lib.index_kind != IndexKindIvf)
@@ -959,6 +972,7 @@ final class VectorEngine private (val spark: SparkSession,
           when(col("library_id") === libraryId, pqCodesColumnFor(lib))
             .otherwise(col("codes")))
         .as[ChunkRow]
+    histRecompute(libraryId)
     touchLibrary(libraryId, now())
     markDirty(libraryId)
     afterMutation()
@@ -988,23 +1002,18 @@ final class VectorEngine private (val spark: SparkSession,
     * everything in one cell. The drift signal for a LIVING corpus:
     * centroids are trained once, ingest keeps moving — when new data
     * concentrates in few cells, nprobe search degrades toward a full
-    * scan (hot cells) while paying full model overhead. One
-    * C-row aggregation over the library partition — health checks are
-    * cheap enough to run per ingest batch at any corpus size. */
+    * scan (hot cells) while paying full model overhead. Read off the
+    * maintained cell histogram, like [[lshMaxBucketRows]]: free when it is
+    * clean, so health checks are cheap enough to run per ingest batch at
+    * any corpus size. */
   def ivfCellSkew(libraryId: String): Double = {
     val lib = getLibrary(libraryId)
     if (lib.index_kind != IndexKindIvf)
       throw ValidationError(s"library index_kind is ${lib.index_kind}, not $IndexKindIvf")
     val model = cellModels.getOrElse(libraryId,
       throw ValidationError("library has no centroid model installed"))
-    val n = chunkCount(libraryId)
-    if (n == 0L) 0.0
-    else {
-      val maxCell = chunks.where(col("library_id") === libraryId)
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-        .agg(max(col("n"))).head().getLong(0)
-      maxCell.toDouble * model.size / n
-    }
+    val h = bucketHistogram(libraryId)
+    if (h.isEmpty) 0.0 else h.values.max.toDouble * model.size / h.values.sum
   }
 
   /** Retrain the ivf model ONLY when the occupancy bound trips —
@@ -1069,8 +1078,7 @@ final class VectorEngine private (val spark: SparkSession,
         when(col("library_id") === libraryId, lshBucket(col("embedding"), m))
           .otherwise(col("bucket")))
       .as[ChunkRow]
-    hists += libraryId -> histRecompute(libraryId)
-    staleHists -= libraryId
+    histRecompute(libraryId)
     touchLibrary(libraryId, now())
     markDirty(libraryId)
     afterMutation()
@@ -1103,16 +1111,16 @@ final class VectorEngine private (val spark: SparkSession,
     * at the installed model's own cell count /
     * [[reprojectLshIndexIfCrowded]]). Flat libraries, empty libraries,
     * and ivf libraries without a model yet are always healthy (false).
-    * The health checks themselves are cheap by design — one C-row
-    * aggregate (ivf) or driver-side O(1) off the maintained histogram
-    * (lsh) — so calling this every batch is fine at any corpus size. */
+    * The health checks themselves are cheap by design — driver-side off
+    * the maintained bucket histogram (ivf cells or lsh buckets) — so
+    * calling this every batch is fine at any corpus size. */
   def maintainIndexIfNeeded(libraryId: String,
       maxCellSkew: Double = 3.0,
       maxBucketRows: Long = VectorEngine.DefaultLshMaxBucketRows): Boolean = {
     val lib = getLibrary(libraryId)
     lib.index_kind match {
       case IndexKindIvf
-          if cellModels.contains(libraryId) && chunkCount(libraryId) > 0 =>
+          if cellModels.contains(libraryId) && bucketHistogram(libraryId).nonEmpty =>
         retrainIvfIndexIfSkewed(libraryId, cellModels(libraryId).size,
           maxSkew = maxCellSkew)
       case IndexKindLsh =>
@@ -1237,12 +1245,6 @@ final class VectorEngine private (val spark: SparkSession,
   // Search (§3.1: api.py:279-293 -> services.py:164-181 ->
   // vector_store.py:230-259 -> indexes.py search)
   // -------------------------------------------------------------------
-  /** Histogram feeding an adaptive probe: the maintained index metadata
-    * (no Spark action) for an unfiltered search; None for a filtered one,
-    * so the probe recomputes over the allow-set. */
-  private def adaptiveHist(libraryId: String, filters: Map[String, Any]): Option[Seq[(Long, Long)]] =
-    if (filters.isEmpty) Some(bucketHistogram(libraryId).toSeq) else None
-
   /** Single-query k-NN: a batch of one. Exactly [[searchBatch]] over
     * `Seq(0L -> query)` without its query_id column, so every index kind,
     * storage kind, default, guard and fallback is the batch funnel's (see
@@ -1322,14 +1324,20 @@ final class VectorEngine private (val spark: SparkSession,
     *
     * Every index kind is a candidate generator and every storage kind an
     * approximate score plus one exact rescore:
-    *   - flat: every (allow-set row, query) pair;
-    *   - lsh / ivf: a probe frame of (query_id, qvec, qbucket) rows
-    *     joined on the stored bucket column (built on the driver for ivf
-    *     cells and adaptive-LSH prefixes), with the reference's two-phase
-    *     semantics per query (a per-query candidate count — ONE tiny
-    *     action, Q rows — sends each query with < k candidates to the
-    *     full allow-set scan instead, so never fewer results than flat
-    *     search);
+    *   - lsh / ivf: each query's probe buckets (LSH buckets or IVF cells)
+    *     are computed on the driver and joined to the stored bucket column
+    *     as ONE local relation of (query_id, qvec, qbucket) rows, behind a
+    *     bucket filter pushed to the scan. The reference's two-phase
+    *     semantics hold per query: its candidate count is the allow-set's
+    *     bucket histogram summed over its probe buckets, and a query with
+    *     < k candidates scans the full allow-set instead, so never fewer
+    *     results than flat search. Unfiltered, that histogram is the
+    *     maintained index metadata (bucketHistogram — no Spark job before
+    *     the result job); filtered, it is the adaptive probe's bounded
+    *     allow-set aggregate, or one aggregate restricted to the probed
+    *     buckets;
+    *   - flat (and ivf before its centroid model): no probe, so every
+    *     query takes the fallback — every (allow-set row, query) pair;
     *   - sq8 / bq / pq: top-R per query on the stored codes, then the
     *     exact distance of the R survivors; float32 scores exactly at once.
     * Each top-n cut is a global ordered limit (TakeOrderedAndProject) for
@@ -1342,8 +1350,9 @@ final class VectorEngine private (val spark: SparkSession,
     *     (LshIndex.probePrefix) — buckets in flipped-margin-cost order
     *     until k * `adaptiveMultiplier` candidates; measured recall@10 0.90
     *     at sf0.1 vs 0.30 single-bucket. The candidate target is O(k),
-    *     independent of table size, and needs no `< k` pass: the prefix
-    *     holds >= min(|allow-set|, k) candidates by construction. The probe
+    *     independent of table size, and the prefix holds
+    *     >= min(|allow-set|, k) candidates by construction, so only a
+    *     query over fewer than k allow-set rows falls back. The probe
     *     set comes from the MAINTAINED per-library histogram
     *     (bucketHistogram) when there is no metadata filter — zero Spark
     *     actions before the probe scan; a filtered search aggregates the
@@ -1402,63 +1411,66 @@ final class VectorEngine private (val spark: SparkSession,
     val metaPred = MetadataFunctions.filterPredicate(col("metadata"), filters)
     val scoped = chunks.where(col("library_id") === libraryId).where(metaPred)
       .toDF()
+    val qvecs = queries.toMap
+    def local(rows: Seq[(Long, Seq[Float], Long)]): DataFrame =
+      rows.toDF("query_id", "qvec", "qbucket")
+        .withColumn("qvec", col("qvec").cast("array<float>"))
     val qDf = queries.toDF("query_id", "qvec")
       .withColumn("qvec", col("qvec").cast("array<float>"))
-    lazy val qvecs = queries.toMap
-    // Probe plan: the probe frame, the rows it may match, and whether the
-    // per-query `< k` count/fallback pass is needed (adaptive probing
-    // never needs it — see the scaladoc). Driver-known probe buckets
-    // become ONE local relation of (query_id, qvec, qbucket) rows —
-    // broadcasting it runs no Spark job, unlike a join of qDf to a
-    // (query_id, qbucket) frame — and a pushed-down scan filter on the
-    // stored bucket column, so a reopened store skips parquet row groups.
-    // The filter is an InSet, not `isin`: its generated code references
-    // the set instead of inlining each value, so searches with different
-    // probe sets share one compiled class.
-    def localProbe(probes: Seq[(Long, Long)], twoPhase: Boolean) = Some((
-      probes.map { case (qid, b) => (qid, qvecs(qid), b) }
-        .toDF("query_id", "qvec", "qbucket")
-        .withColumn("qvec", col("qvec").cast("array<float>")),
-      scoped.where(ColumnBridge.column(InSet(ColumnBridge.expression(col("bucket")),
-        probes.map(_._2).toSet[Any]))),
-      twoPhase))
-    def hamming1Frame(m: Array[Array[Double]]): DataFrame =
-      qDf.withColumn("qbucket", explode(LshIndex.hamming1Probes(
-        lshBucket(col("qvec"), m), m.length)))
-    // each ivf query's probed cells (the residual-pq LUTs are built for
-    // exactly these)
-    lazy val ivfCells: Seq[(Long, Seq[Long])] = queries.map { case (qid, q) =>
-      qid -> IvfIndex.nearestCentroids(q.toArray, cellModels(libraryId), nprobe)
-    }
-    val probePlan: Option[(DataFrame, DataFrame, Boolean)] = lib.index_kind match {
+    // The stored bucket column restricted to a driver-known bucket set: a
+    // filter pushed to the scan, so a reopened store skips parquet row
+    // groups. An InSet, not `isin`: its generated code references the set
+    // instead of inlining each value, so searches with different probe
+    // sets share one compiled class.
+    def inBuckets(df: DataFrame, buckets: Iterable[Long]): DataFrame =
+      df.where(ColumnBridge.column(InSet(ColumnBridge.expression(col("bucket")),
+        buckets.toSet[Any])))
+    // The allow-set's (bucket -> rows) histogram when it is known before
+    // the probe: the maintained index metadata when unfiltered (no Spark
+    // job); for a filtered adaptive probe, its bounded aggregate over the
+    // allow-set (None past the bound).
+    val knownHist: Option[Map[Long, Long]] =
+      if (filters.isEmpty) Some(bucketHistogram(libraryId))
+      else if (lib.index_kind == IndexKindLsh && probe == ProbeAdaptive)
+        LshIndex.boundedHistogram(scoped, settings.maxAdaptiveHistBuckets).map(_.toMap)
+      else None
+    // Probe plan: each query's probe buckets, computed on the driver.
+    // A library with no index probes nothing.
+    val probes: Seq[(Long, Seq[Long])] = lib.index_kind match {
       case IndexKindLsh =>
         val m = matrices(libraryId).matrix.map(_.toArray).toArray
-        probe match {
-          case ProbeAdaptive =>
-            adaptiveHist(libraryId, filters)
-              .orElse(LshIndex.boundedHistogram(scoped,
-                settings.maxAdaptiveHistBuckets)) match {
-              case Some(hist) =>
-                val target = math.max(k.toLong, k.toLong * adaptiveMultiplier)
-                localProbe(queries.flatMap { case (qid, q) =>
-                  val ms = LshIndex.margins(m, q)
-                  LshIndex.probePrefix(hist, LshIndex.bucketOf(ms), ms, target)
-                    .map(b => (qid, b))
-                }, twoPhase = false)
-              case None => Some((hamming1Frame(m), scoped, true))
+        val margins = queries.map { case (qid, q) => qid -> LshIndex.margins(m, q) }
+        // the query's bucket AND every Hamming-1 neighbor (P+1 distinct
+        // values — a chunk matches at most one probe per query, so no
+        // candidate duplicates)
+        def hamming1 = margins.map { case (qid, ms) =>
+          val b = LshIndex.bucketOf(ms)
+          qid -> (b +: m.indices.map(i => b ^ (1L << i)))
+        }
+        (probe, knownHist) match {
+          case (ProbeAdaptive, Some(hist)) =>
+            val target = math.max(k.toLong, k.toLong * adaptiveMultiplier)
+            margins.map { case (qid, ms) =>
+              qid -> LshIndex.probePrefix(hist.toSeq, LshIndex.bucketOf(ms), ms, target)
             }
-          // each query probes its bucket AND every Hamming-1 neighbor
-          // (P+1 distinct values — a chunk matches at most one probe per
-          // query, so no candidate duplicates)
-          case ProbeMulti => Some((hamming1Frame(m), scoped, true))
-          case _ =>
-            Some((qDf.withColumn("qbucket", lshBucket(col("qvec"), m)), scoped, true))
+          case (ProbeAdaptive | ProbeMulti, _) => hamming1
+          case _ => margins.map { case (qid, ms) => qid -> Seq(LshIndex.bucketOf(ms)) }
         }
       case IndexKindIvf if cellModels.contains(libraryId) =>
-        localProbe(ivfCells.flatMap { case (qid, cs) => cs.map(qid -> _) },
-          twoPhase = true)
-      case _ => None
+        queries.map { case (qid, q) =>
+          qid -> IvfIndex.nearestCentroids(q.toArray, cellModels(libraryId), nprobe)
+        }
+      case _ => Nil
     }
+    // The `< k` rule (see the scaladoc). A filtered probe with no known
+    // histogram counts its probed buckets with ONE aggregate, whose
+    // collect is bounded by their number.
+    val hist = knownHist.getOrElse(
+      if (probes.isEmpty) Map.empty[Long, Long]
+      else inBuckets(scoped, probes.flatMap(_._2)).groupBy("bucket").count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val probed = probes.filter(_._2.iterator.map(hist.getOrElse(_, 0L)).sum >= k)
+    val fallbackQs = queries.map(_._1).filterNot(probed.map(_._1).toSet)
     // phase-1 width is storage-dependent: a compact-storage library's
     // approximate pass reads the compact columns and NEVER the float32
     // embedding bytes — those are read once, for the O(Q x R) rescore
@@ -1474,38 +1486,21 @@ final class VectorEngine private (val spark: SparkSession,
           (if (metric == "cosine") Seq(col("qmin")) else Nil)
       else Seq(col("embedding"))
     val pairCols = Seq(col("query_id"), col("id")) ++ dataCols :+ col("qvec")
-    // (query, row) candidate pairs, plus the queries whose probe held < k
-    // candidates: they scan the whole allow-set
-    val (pairs, fallbackQs): (DataFrame, Seq[Long]) = probePlan match {
-      case None =>
-        (scoped.crossJoin(broadcast(qDf)).select(pairCols: _*), Nil)
-      case Some((qb, probed, needTwoPhase)) =>
-        val cand = probed.join(broadcast(qb), col("bucket") === col("qbucket"))
-          .select(pairCols: _*)
-        if (!needTwoPhase) (cand, Nil)
-        else {
-          // The count pass re-runs the probe join but over a COLUMN-PRUNED
-          // scan (bucket only — no embedding bytes): the expensive width is
-          // read once, in the result plan below. No caching, so repeated
-          // batch searches leave no storage residue behind.
-          val counts = probed.select(col("bucket"))
-            .join(broadcast(qb.select(col("query_id"), col("qbucket"))),
-              col("bucket") === col("qbucket"))
-            .groupBy("query_id").count().collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val (bucketQs, fallback) =
-            queries.map(_._1).partition(counts.getOrElse(_, 0L) >= k)
-          (Seq(
-            if (bucketQs.nonEmpty)
-              Some(cand.where(col("query_id").isin(bucketQs: _*)))
-            else None,
-            if (fallback.nonEmpty)
-              Some(scoped.crossJoin(
-                  broadcast(qDf.where(col("query_id").isin(fallback: _*))))
-                .select(pairCols: _*))
-            else None).flatten.reduce(_ unionByName _), fallback)
-        }
-    }
+    // (query, row) candidate pairs: the probed queries join the stored
+    // bucket column through ONE local relation of (query_id, qvec,
+    // qbucket) rows (broadcasting it runs no Spark job); the fallback
+    // queries cross the whole allow-set
+    val pairs = Seq(
+      if (probed.isEmpty) None
+      else Some(inBuckets(scoped, probed.flatMap(_._2))
+        .join(broadcast(local(probed.flatMap { case (qid, bs) =>
+          bs.map(b => (qid, qvecs(qid), b)) })), col("bucket") === col("qbucket"))
+        .select(pairCols: _*)),
+      if (fallbackQs.isEmpty) None
+      else Some(scoped.crossJoin(broadcast(
+          if (probed.isEmpty) qDf else qDf.where(col("query_id").isin(fallbackQs: _*))))
+        .select(pairCols: _*))
+    ).flatten.reduce(_ unionByName _)
     // Each compact storage kind supplies only its approximate score over
     // the candidate pairs; float32 (and a pq library with no codebooks
     // yet) scores exactly in one pass.
@@ -1538,8 +1533,7 @@ final class VectorEngine private (val spark: SparkSession,
             // LUTs only for the cell-pruned queries; a FALLBACK query
             // scans every cell and goes straight to the exact rescore —
             // per-cell LUTs for all C cells would be O(C·M·K) driver work
-            val fallback = fallbackQs.toSet
-            val lutRows = ivfCells.filterNot(c => fallback(c._1)).flatMap {
+            val lutRows = probed.flatMap {
               case (qid, cells) =>
                 val qn = ProductQuantization.normLocal(qvecs(qid))
                 ProductQuantization.residualLutRows(model, cellModels(libraryId),
@@ -2405,24 +2399,22 @@ final class VectorEngine private (val spark: SparkSession,
     lastSaveHadChunks = !chunks.isEmpty
     dirtyLibs = Set.empty
     val allLibs = libs.collect()
-    // Histogram index metadata: read the persisted table when present; a
-    // pre-histogram state dir marks every LSH library stale instead, so
-    // the first adaptive read rebuilds it (one aggregate, once). Every LSH
-    // library gets an entry either way — hists membership is what marks a
-    // library's histogram as maintained.
-    val lshIds = allLibs.filter(_.index_kind == IndexKindLsh).map(_.id)
+    // Histogram index metadata: read the persisted table when present.
+    // Every bucketed library gets an entry — hists membership is what
+    // marks a library's histogram as maintained — and one with no rows in
+    // the table (a state dir saved before the library kind kept one, or
+    // with no histogram table at all) loads STALE, so its first read
+    // rebuilds it (one aggregate, once) instead of probing an empty map.
+    val bucketedIds = allLibs.filter(bucketed).map(_.id)
     val histPath = new org.apache.hadoop.fs.Path(s"$base/histograms.parquet")
     val histFs = histPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (histFs.exists(histPath)) {
-      val loaded = spark.read.parquet(s"$base/histograms.parquet").as[HistRow]
+    val loaded =
+      if (!histFs.exists(histPath)) Map.empty[String, Map[Long, Long]]
+      else spark.read.parquet(s"$base/histograms.parquet").as[HistRow]
         .collect().groupBy(_.library_id)
         .map { case (lid, rows) => lid -> rows.map(r => r.bucket -> r.n).toMap }
-      hists = lshIds.map(lid => lid -> loaded.getOrElse(lid, Map.empty[Long, Long])).toMap
-      staleHists = Set.empty
-    } else {
-      hists = lshIds.map(_ -> Map.empty[Long, Long]).toMap
-      staleHists = lshIds.toSet
-    }
+    hists = bucketedIds.map(lid => lid -> loaded.getOrElse(lid, Map.empty[Long, Long])).toMap
+    staleHists = bucketedIds.filterNot(loaded.contains).toSet
     // Bloom filters: absent in pre-bloom state dirs — treat as "no gates
     // enabled" (a caller re-opts-in with enableBloomGate, which rebuilds
     // from the loaded chunk ids), never an error
@@ -2455,15 +2447,13 @@ final class VectorEngine private (val spark: SparkSession,
 
   /** S5 explicit cold-start rebuild: re-derive every indexed library's
     * stored key column (LSH bucket / IVF cell) from the persisted index
-    * metadata, and mark LSH histograms for recompute. Loading TRUSTS the
-    * stored keys (they are written by the same save as the metadata);
-    * call this to heal a state dir produced or modified outside the
-    * engine. One narrow projection — no shuffle. */
+    * metadata, and mark their bucket histograms for recompute. Loading
+    * TRUSTS the stored keys (they are written by the same save as the
+    * metadata); call this to heal a state dir produced or modified outside
+    * the engine. One narrow projection — no shuffle. */
   def rebuildIndexKeys(): Unit = {
     val allLibs = libs.collect()
-    val idxLibs = allLibs.filter(l =>
-      l.index_kind == IndexKindLsh ||
-        (l.index_kind == IndexKindIvf && cellModels.contains(l.id)))
+    val idxLibs = allLibs.filter(bucketed)
     if (idxLibs.nonEmpty) {
       val bucketCol = idxLibs.foldLeft(lit(null).cast("long")) { (acc, l) =>
         val keyExpr =

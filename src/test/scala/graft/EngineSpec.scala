@@ -702,23 +702,162 @@ class EngineSpec extends AnyFunSuite {
     val e2 = VectorEngine.open(spark, dir)
     assert(e2.bucketHistogram(lib) == e.bucketHistogram(lib))
     assert(e2.bucketHistogram(lib) == recomputed(e2))
-    // non-LSH library has no histogram
+    // a flat library has no histogram
     val (ef, libF, _) = freshWithData("flat")
     assert(ef.bucketHistogram(libF).isEmpty)
+    ivfHistogramMaintained()
+  }
+
+  private def histOf(e: VectorEngine, lib: String): Map[Long, Long] =
+    libRows(e, lib).where(col("bucket").isNotNull).groupBy("bucket").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private val twoCells = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 0.5, 0.5, 0))
+
+  /** The IVF cell histogram is the same maintained index metadata: built
+    * by setIvfCentroids, equal to a recompute across adds, bulk ingest,
+    * patches, deletes, cascades and a reopen; dropped by a kind flip. */
+  private def ivfHistogramMaintained(): Unit = {
+    import spark.implicits._
+    val (e, lib, doc) = freshWithData("ivf")
+    assert(e.bucketHistogram(lib).isEmpty, "no histogram before a model")
+    e.setIvfCentroids(lib, twoCells)
+    assert(e.bucketHistogram(lib) == Map(0L -> 2L, 1L -> 2L))
+    assert(e.bucketHistogram(lib) == histOf(e, lib))
+    e.addChunksDf(lib, Seq(("h1", doc, "t", Seq(0f, 0f, 1f, 1f),
+      Map.empty[String, String], 5))
+      .toDF("id", "document_id", "text", "embedding", "metadata", "chunk_index"))
+    assert(e.bucketHistogram(lib) == histOf(e, lib))
+    e.patchChunk("c0", embedding = Some(vec(0, 1, 1, 0))) // cell 0 -> cell 1
+    assert(e.bucketHistogram(lib) == Map(0L -> 1L, 1L -> 4L))
+    assert(e.bucketHistogram(lib) == histOf(e, lib))
+    e.deleteChunk("c1")
+    assert(e.bucketHistogram(lib) == histOf(e, lib))
+    val d2 = e.createDocument(lib, "d2")
+    e.addChunk(d2.id, ChunkInput("x", vec(1, 0.1, 0, 0), id = Some("h2")))
+    e.deleteDocument(d2.id)
+    assert(e.bucketHistogram(lib) == histOf(e, lib))
+    val dir = Files.tmp("graft-ivf-hist")
+    e.save(dir)
+    val e2 = VectorEngine.open(spark, dir)
+    assert(e2.bucketHistogram(lib) == e.bucketHistogram(lib))
+    assert(e2.bucketHistogram(lib) == histOf(e2, lib))
+    // a kind flip on the (emptied) library drops the histogram, so a flat
+    // bulk ingest (null buckets) leaves it empty
+    Seq("c2", "c3", "h1", "c0").foreach(e2.deleteChunk)
+    e2.patchLibrary(lib, indexKind = Some(VectorEngine.IndexKindFlat))
+    e2.addChunksDf(lib, Seq(("f1", doc, "t", Seq(1f, 0f, 0f, 0f),
+      Map.empty[String, String], 0))
+      .toDF("id", "document_id", "text", "embedding", "metadata", "chunk_index"))
+    assert(e2.bucketHistogram(lib).isEmpty)
+    e2.deleteChunk("f1")
+    e2.patchLibrary(lib, indexKind = Some(VectorEngine.IndexKindIvf))
+    assert(e2.bucketHistogram(lib).isEmpty, "flip back: no model, no histogram")
+  }
+
+  test("a state dir saved without IVF histogram rows reopens with the ivf " +
+    "histogram stale: it equals a recompute and searches are unchanged") {
+    import spark.implicits._
+    val (e, lib, doc) = freshWithData("ivf")
+    e.setIvfCentroids(lib, twoCells)
+    e.addChunksBatch(doc, Seq(
+      ChunkInput("e", vec(0, 1, 0.2, 0), id = Some("c4")),
+      ChunkInput("f", vec(0, 0.2, 1, 0), id = Some("c5"))))
+    // an lsh library beside it keeps histograms.parquet non-empty
+    val lsh = e.createLibrary("l", dim = 4, indexKind = VectorEngine.IndexKindLsh)
+    val ld = e.createDocument(lsh.id, "ld")
+    e.addChunk(ld.id, ChunkInput("l", vec(1, 0, 0, 0), id = Some("l0")))
+    val dir = Files.tmp("graft-ivf-hist-compat")
+    e.save(dir)
+    // rewrite the histogram table the way a build that kept histograms for
+    // lsh libraries only wrote it
+    val version = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("v")).sorted.last
+    val histPath = s"$dir/$version/histograms.parquet"
+    val lshOnly = spark.read.parquet(histPath).where(col("library_id") =!= lib)
+      .as[(String, Long, Long)].collect().toSeq
+    assert(lshOnly.nonEmpty && lshOnly.forall(_._1 == lsh.id))
+    lshOnly.toDF("library_id", "bucket", "n").write.mode("overwrite").parquet(histPath)
+    val e2 = VectorEngine.open(spark, dir)
+    assert(e2.bucketHistogram(lib) == histOf(e2, lib))
+    assert(e2.bucketHistogram(lib) == e.bucketHistogram(lib))
+    assert(e2.bucketHistogram(lsh.id) == e.bucketHistogram(lsh.id))
+    // the probe result differs from an exhaustive scan, so a search that
+    // fell back on an empty histogram would show here
+    val q = vec(0.6, 0.5, 0.5, 0)
+    val probed = ranked(e.search(lib, q, 2, nprobeOpt = Some(1)))
+    assert(probed != bruteForce(e, lib, q, 2))
+    assert(ranked(e2.search(lib, q, 2, nprobeOpt = Some(1))) == probed)
+  }
+
+  test("filtered probes count candidates in the ALLOW-SET: probed buckets " +
+    "holding >= k rows but < k matching ones fall back to the allow-set scan") {
+    def library(kind: String): (VectorEngine, String) = {
+      val e = VectorEngine.create(spark)
+      val lib = e.createLibrary(kind, dim = 4, indexKind = kind,
+        lshProjections = 4, lshSeed = 123L)
+      if (kind == VectorEngine.IndexKindIvf)
+        e.setIvfCentroids(lib.id, Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(-1, 0, 0, 0)))
+      val d = e.createDocument(lib.id, "d")
+      // three rows in the query's own bucket, only one of them tagged "a";
+      // the other "a" rows sit in the opposite bucket
+      e.addChunksBatch(d.id, Seq(
+        ChunkInput("x", vec(1, 0, 0, 0), Map("tag" -> "a"), 0, Some("x1")),
+        ChunkInput("x", vec(1, 0, 0, 0), Map("tag" -> "b"), 1, Some("x2")),
+        ChunkInput("x", vec(1, 0, 0, 0), Map("tag" -> "b"), 2, Some("x3")),
+        ChunkInput("y", vec(-1, 0, 0, 0), Map("tag" -> "a"), 3, Some("y1")),
+        ChunkInput("y", vec(-1, 0, 0, 0), Map("tag" -> "a"), 4, Some("y2"))))
+      (e, lib.id)
+    }
+    val q = vec(1, 0, 0, 0)
+    val f = Map[String, Any]("tag" -> "a")
+    // brute force over the allow-set {x1, y1, y2}
+    def allowSet(e: VectorEngine): Seq[(String, Double)] =
+      ranked(e.chunksDf.where(col("id").isin("x1", "y1", "y2"))
+        .select(col("id"), (round(graft.functions.VectorFunctions.distance("cosine")(
+          col("embedding"), qvecLit(q)), 6) + lit(0.0d)).as("distance"))
+        .orderBy(col("distance"), col("id")).limit(2))
+    val (ei, ivf) = library(VectorEngine.IndexKindIvf)
+    assert(ei.bucketHistogram(ivf)(0L) == 3L)
+    assert(allowSet(ei).map(_._1) == Seq("x1", "y1"))
+    assert(ranked(ei.search(ivf, q, 2, f, nprobeOpt = Some(1))) == allowSet(ei))
+    val (el, lsh) = library(VectorEngine.IndexKindLsh)
+    val qBucket = el.chunksDf.where(col("id") === "x1").head().getAs[Long]("bucket")
+    assert(el.bucketHistogram(lsh)(qBucket) == 3L)
+    assert(ranked(el.search(lsh, q, 2, f, probe = VectorEngine.ProbeSingle)) == allowSet(el))
   }
 
   test("adaptive search on a clean histogram launches ZERO Spark jobs " +
     "(the default probe path never aggregates the chunks table)") {
     val (e, lib, _) = freshWithData("random_projection")
     e.bucketHistogram(lib) // clean by construction; read it once anyway
-    spark.sparkContext.setJobGroup("adaptive-lazy", "EngineSpec")
-    val df = try e.search(lib, vec(1, 0, 0, 0), 2)
-             finally spark.sparkContext.clearJobGroup()
-    // deterministic drain (bounded) — a fixed sleep flakes on loaded CI
-    org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
-    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup("adaptive-lazy")
-    assert(jobs.isEmpty, s"adaptive search launched jobs ${jobs.mkString(",")}")
-    assert(df.collect().map(_.getString(0)).toSeq == Seq("c0", "c1"))
+    val (ei, libI, _) = freshWithData("ivf")
+    ei.setIvfCentroids(libI, twoCells) // rebuilds the cell histogram
+    def jobsOf(group: String)(body: => DataFrame): (DataFrame, Int) = {
+      spark.sparkContext.setJobGroup(group, "EngineSpec")
+      val df = try body finally spark.sparkContext.clearJobGroup()
+      // deterministic drain (bounded) — a fixed sleep flakes on loaded CI
+      org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
+      (df, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val q = vec(1, 0, 0, 0)
+    // every index kind and probe mode plans its probe from the histogram
+    val inputs: Seq[(String, Map[String, Any] => DataFrame)] = Seq(
+      "adaptive" -> (f => e.search(lib, q, 2, f)),
+      "multi" -> (f => e.search(lib, q, 2, f, probe = VectorEngine.ProbeMulti)),
+      "single" -> (f => e.search(lib, q, 2, f, probe = VectorEngine.ProbeSingle)),
+      "ivf" -> (f => ei.search(libI, q, 2, f, nprobeOpt = Some(1))))
+    inputs.foreach { case (name, run) =>
+      val (df, jobs) = jobsOf(s"lazy-$name")(run(Map.empty))
+      assert(jobs == 0, s"$name search launched $jobs jobs before collect")
+      assert(df.collect().map(_.getString(0)).toSeq == Seq("c0", "c1"), name)
+      // a filtered search runs ONE allow-set aggregate before collect (the
+      // adaptive probe's bounded histogram, or the probed buckets' counts);
+      // AQE materializes its stages as separate jobs, which measure as 2
+      val (fdf, fjobs) = jobsOf(s"lazy-filtered-$name")(run(Map("tag" -> 1)))
+      assert(fjobs <= 2, s"filtered $name search launched $fjobs jobs before collect")
+      assert(fdf.collect().map(_.getString(0)).toSeq == Seq("c0", "c2"), name)
+    }
   }
 
   test("facade exposes the adaptive probe budget: a larger multiplier " +

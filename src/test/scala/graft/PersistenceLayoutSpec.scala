@@ -66,20 +66,24 @@ class PersistenceLayoutSpec extends AnyFunSuite {
     val q = (0 until 8).map(i => math.sin(17.0 * (i * 7 + 3)).toFloat)
     // tight probe budget -> few buckets -> few row groups under the
     // clustered layout (an unclustered one reads every row group: each
-    // spans the full bucket range and min/max prunes nothing)
-    val res = e2.search(lib.id, q, k = 5, adaptiveMultiplier = 1)
-    val rows = res.collect()
-    assert(rows.length == 5)
-    // identical results to the pre-save engine (layout is invisible to
-    // semantics)
-    assert(rows.toSeq.toString ==
-      e.search(lib.id, q, k = 5, adaptiveMultiplier = 1).collect().toSeq.toString)
-    val scan = fileScans(res.queryExecution.executedPlan).head
-    assert(scan.metadata("PushedFilters").contains("bucket"),
-      s"bucket filter not pushed to parquet: ${scan.metadata("PushedFilters")}")
-    val read = scan.metrics("numOutputRows").value
-    assert(read > 0 && read < n / 2,
-      s"probe scan read $read of $n rows — row groups not skipped")
+    // spans the full bucket range and min/max prunes nothing). The
+    // single-bucket and Hamming-1 probes prune the same way.
+    Seq(VectorEngine.ProbeAdaptive, VectorEngine.ProbeSingle, VectorEngine.ProbeMulti)
+      .foreach { mode =>
+        val res = e2.search(lib.id, q, k = 5, probe = mode, adaptiveMultiplier = 1)
+        val rows = res.collect()
+        assert(rows.length == 5, mode)
+        // identical results to the pre-save engine (layout is invisible to
+        // semantics)
+        assert(rows.toSeq.toString == e.search(lib.id, q, k = 5, probe = mode,
+          adaptiveMultiplier = 1).collect().toSeq.toString, mode)
+        val scan = fileScans(res.queryExecution.executedPlan).head
+        assert(scan.metadata("PushedFilters").contains("In(bucket"),
+          s"$mode: bucket filter not pushed to parquet: ${scan.metadata("PushedFilters")}")
+        val read = scan.metrics("numOutputRows").value
+        assert(read > 0 && read < n / 2,
+          s"$mode: probe scan read $read of $n rows — row groups not skipped")
+      }
   }
 
   test("reopened IVF cell probe skips row groups the same way") {

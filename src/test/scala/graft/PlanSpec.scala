@@ -522,15 +522,33 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
     import org.apache.spark.sql.execution.LocalTableScanExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    def probeSide(df: org.apache.spark.sql.DataFrame) = {
+      val joins = physical(df).collect { case j: BroadcastHashJoinExec => j }
+      assert(joins.size == 1, physical(df).toString)
+      val j = joins.head
+      val side = if (j.buildSide == BuildRight) j.right else j.left
+      assert(side.collect { case j: BaseJoinExec => j }.isEmpty, side.toString)
+      assert(side.collect { case g: GenerateExec => g }.isEmpty, side.toString)
+      assert(side.collect { case l: LocalTableScanExec => l }.nonEmpty, side.toString)
+    }
     val e = axisEngine(VectorEngine.IndexKindIvf)
     val df = e.search("axes", Seq(1f, 0.2f, 0f, 0f), 2, nprobeOpt = Some(1))
-    val joins = physical(df).collect { case j: BroadcastHashJoinExec => j }
-    assert(joins.size == 1, physical(df).toString)
-    val j = joins.head
-    val probeSide = if (j.buildSide == BuildRight) j.right else j.left
-    assert(probeSide.collect { case j: BaseJoinExec => j }.isEmpty, probeSide.toString)
-    assert(probeSide.collect { case l: LocalTableScanExec => l }.nonEmpty, probeSide.toString)
+    probeSide(df)
     assert(df.collect().map(_.getString(0)).toSeq == Seq("b0", "a0"))
+    // the single-bucket and Hamming-1 LSH probes take the same path: on a
+    // reopened store the chunk scan carries the pushed bucket filter
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-planspec-lsh").toString
+    axisEngine(VectorEngine.IndexKindLsh).save(stateDir)
+    val lsh = VectorEngine.open(spark, stateDir)
+    Seq(VectorEngine.ProbeSingle, VectorEngine.ProbeMulti).foreach { mode =>
+      val ldf = lsh.search("axes", Seq(1f, 0f, 0f, 0f), 1, probe = mode)
+      probeSide(ldf)
+      val pushed = physical(ldf).collect { case s: FileSourceScanExec => s }
+        .map(_.metadata("PushedFilters"))
+      assert(pushed.exists(_.contains("In(bucket")), s"$mode: $pushed")
+      assert(ldf.collect().map(_.getString(0)).toSeq == Seq("a0"), mode)
+    }
   }
 
   test("reopened engine scans partition-prune to the searched library") {
