@@ -6,6 +6,13 @@ SCALING.md is rewritten to the ratio in the working-tree BENCH.json
 (stress / stress_100 sections), so prose and record cannot drift when a
 new record lands (ScalingQuoteSpec gates the result). Spans whose task
 is absent from the record are left untouched and reported.
+
+The `quoted-cpus=N` declaration is rewritten to the record's `cpus`, so
+the prose always names the core count its numbers came from:
+ScalingQuoteSpec enforces only records whose `cpus` equals the
+declaration, and a stale declaration would let a requote from another
+core count pass unchecked. A record without an integer `cpus` leaves
+the declaration as it is, with a warning.
 """
 import json
 import pathlib
@@ -42,6 +49,19 @@ def main():
         return f"`{key}={new}{suffix}`"  # preserve a trailing 'x' verbatim
 
     out = re.sub(r"`([a-z_0-9]+(?:@100x)?)=([0-9.]+)(x?)`", sub, text)
+
+    cpus = bench.get("cpus")
+    if type(cpus) is int:  # not bool, which is an int subclass
+        def sub_cpus(m):
+            new = str(cpus)
+            if new != m.group(1):
+                changed.append(("quoted-cpus", m.group(1), new))
+            return f"`quoted-cpus={new}`"
+
+        out = re.sub(r"`quoted-cpus=([0-9]+)`", sub_cpus, out)
+    else:
+        print(f"WARNING: BENCH.json cpus is {cpus!r}, not a core count; "
+              "quoted-cpus left as it is", file=sys.stderr)
     (ROOT / "SCALING.md").write_text(out)
     for key, old, new in changed:
         print(f"requoted {key}: {old} -> {new}")
