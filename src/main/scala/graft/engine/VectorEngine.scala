@@ -1341,9 +1341,10 @@ final class VectorEngine private (val spark: SparkSession,
     *   - sq8 / bq / pq: top-R per query on the stored codes, then the
     *     exact distance of the R survivors; float32 scores exactly at once.
     * Each top-n cut is a global ordered limit (TakeOrderedAndProject) for
-    * one query and the salted two-phase window (operators.TopK) for more,
-    * so no query's candidate set ever funnels through a single reduce
-    * slot.
+    * one query and the per-partition top-k (operators.TopK: each task keeps
+    * k rows per query, one window merges them hash-partitioned on the
+    * query) for more, so no query's candidate set ever funnels through a
+    * single reduce slot.
     *
     * `probe` (LSH libraries): how wide the bucket probe goes.
     *   - ProbeAdaptive (DEFAULT): query-directed adaptive probing
@@ -1639,7 +1640,8 @@ final class VectorEngine private (val spark: SparkSession,
     * query (corpus length stats and union-term document frequencies
     * computed once — [[graft.operators.Lexical.bm25Batch]]), the vector
     * leg is the existing vectorized [[searchBatch]] funnel, and fusion
-    * runs per query through the salted per-group top-k window.
+    * runs per query through the per-partition per-group top-k
+    * ([[graft.operators.TopK.perGroup]]).
     *
     * Semantics per query are EXACTLY [[searchHybrid]]'s: the same typed
     * metadata filter composes with BOTH legs, each leg contributes its

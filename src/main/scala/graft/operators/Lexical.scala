@@ -199,7 +199,7 @@ object Lexical {
   val Bm25ProjectionBatch = 100
 
   /** Per-group twin of [[topRanks]]: top-`n` rows of each group via the
-    * salted two-phase window ([[graft.operators.TopK.perGroup]] — no
+    * per-partition top-k ([[graft.operators.TopK.perGroup]] — no
     * single-reducer funnel), then 1-based ranks inside the surviving
     * n-row groups. */
   def topRanksBatch(scored: DataFrame, groupCol: String, idCol: String,
@@ -217,7 +217,7 @@ object Lexical {
   /** Batch reciprocal-rank fusion: [[hybridRrf]] per group in one plan.
     * Each leg contributes its per-group top-`candidates`; fusion is a
     * (group, id) full-outer join bounded by Q x candidates rows; the
-    * final top-`k` is again the salted per-group window. Output:
+    * final top-`k` is again [[graft.operators.TopK.perGroup]]. Output:
     * (groupCol, idCol, rrf). */
   def hybridRrfBatch(lexScores: DataFrame, vecScores: DataFrame,
                      groupCol: String, idCol: String, k: Int,

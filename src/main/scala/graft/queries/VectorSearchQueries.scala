@@ -78,12 +78,12 @@ object VectorSearchQueries {
     * (reference has only 1-query search; this is the shape that scales —
     * BroadcastNestedLoopJoin with the small query side broadcast).
     *
-    * Two-phase salted top-k: a single window over query_id would shuffle
+    * Per-partition top-k: a single window over query_id would shuffle
     * all NxQ rows into only Q partitions — a skew killer when Q is small.
-    * Phase 1 takes top-k per (query_id, salt) — SALT× more reduce slots and
-    * each emits at most k rows — so phase 2's per-query window sees only
-    * SALT*k rows per query. Identical results: the true per-query top-k is
-    * a subset of the union of per-salt top-k. */
+    * Each task keeps its own top-k per query_id (one bounded heap per
+    * query, no sort), so the per-query window sees only tasks*k rows per
+    * query. Identical results: the true per-query top-k is a subset of
+    * the union of per-task top-k. */
   private val knnBatch: QueryFn = (s, dir) => {
     val k = 5
     val emb = table(s, dir, "embeddings")

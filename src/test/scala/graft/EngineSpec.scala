@@ -70,6 +70,15 @@ class EngineSpec extends AnyFunSuite {
       e.getLibrary(lib).distance_metric, k, m.length, idCol = "id"))
   }
 
+  /** `body`'s result and the number of Spark jobs it launched. */
+  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    spark.sparkContext.setJobGroup(group, "EngineSpec")
+    val out = try body finally spark.sparkContext.clearJobGroup()
+    // deterministic drain (bounded) — a fixed sleep flakes on loaded CI
+    org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
+    (out, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   private def pqModel(cb: Seq[(Int, Long, Seq[Float])]): ProductQuantization.Model =
     cb.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, cs) =>
       cs.sortBy(_._2).map { case (_, cid, v) => IvfIndex.Centroid(cid, v.toArray) }
@@ -833,13 +842,6 @@ class EngineSpec extends AnyFunSuite {
     e.bucketHistogram(lib) // clean by construction; read it once anyway
     val (ei, libI, _) = freshWithData("ivf")
     ei.setIvfCentroids(libI, twoCells) // rebuilds the cell histogram
-    def jobsOf(group: String)(body: => DataFrame): (DataFrame, Int) = {
-      spark.sparkContext.setJobGroup(group, "EngineSpec")
-      val df = try body finally spark.sparkContext.clearJobGroup()
-      // deterministic drain (bounded) — a fixed sleep flakes on loaded CI
-      org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
-      (df, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
-    }
     val q = vec(1, 0, 0, 0)
     // every index kind and probe mode plans its probe from the histogram
     val inputs: Seq[(String, Map[String, Any] => DataFrame)] = Seq(
@@ -857,6 +859,21 @@ class EngineSpec extends AnyFunSuite {
       val (fdf, fjobs) = jobsOf(s"lazy-filtered-$name")(run(Map("tag" -> 1)))
       assert(fjobs <= 2, s"filtered $name search launched $fjobs jobs before collect")
       assert(fdf.collect().map(_.getString(0)).toSeq == Seq("c0", "c2"), name)
+    }
+  }
+
+  test("a 2-query flat and a 2-query ivf searchBatch collect in at most " +
+    "5 jobs (one query_id exchange per top-n cut), equal to brute force") {
+    val (e, lib, _) = freshWithData()
+    val (ei, libI, _) = freshWithData("ivf")
+    ei.setIvfCentroids(libI, twoCells)
+    val qs = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 0.9, 0.1, 0))
+    Seq("flat" -> (e, lib), "ivf" -> (ei, libI)).foreach { case (name, (eng, l)) =>
+      val (got, jobs) = jobsOf(s"batch-$name")(byQuery(eng.searchBatch(l, qs, 2)))
+      assert(jobs <= 5, s"$name batch launched $jobs jobs")
+      qs.foreach { case (qid, q) =>
+        assert(got(qid) == bruteForce(eng, l, q, 2), s"$name query=$qid")
+      }
     }
   }
 

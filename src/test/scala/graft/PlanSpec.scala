@@ -28,13 +28,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window ["))
   }
 
-  test("knn_batch_topk: partial window-group-limit before every exchange, " +
-    "windows partitioned (never global)") {
-    val p = plan("knn_batch_topk")
-    assert(p.contains("WindowGroupLimit"))
-    assert(p.contains("hashpartitioning(query_id"))
+  test("knn_batch_topk: per-partition top-k (PartialTopK) below every " +
+    "query_id exchange, windows partitioned (never global)") {
+    val df = SparkEntry.queries("knn_batch_topk")(spark, dir)
+    partialTopKBelowQueryExchanges(df)
     // a global window would shuffle everything to a single partition
-    assert(!p.contains("SinglePartition, ENSURE_REQUIREMENTS"))
+    assert(!df.queryExecution.executedPlan.toString
+      .contains("SinglePartition, ENSURE_REQUIREMENTS"))
   }
 
   test("agg_lineitem_pushdown: map-side partial aggregation and a pushed " +
@@ -462,12 +462,13 @@ class PlanSpec extends AnyFunSuite {
       writePlan)
   }
 
-  test("lifecycle_hybrid_batch: per-query top-k runs as partial window-" +
-    "group limits on the query key — never a global window or nested loop " +
-    "over Q x corpus") {
-    val p = plan("lifecycle_hybrid_batch")
-    assert(p.contains("WindowGroupLimit"), p)
-    assert(p.contains("hashpartitioning(query_id"), p)
+  test("lifecycle_hybrid_batch: per-query top-k runs as per-partition " +
+    "top-k (PartialTopK) below every query_id exchange — never a global " +
+    "window or nested loop over Q x corpus") {
+    val df = SparkEntry.queries("lifecycle_hybrid_batch")(spark, dir)
+    partialTopKBelowQueryExchanges(df)
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("SinglePartition, ENSURE_REQUIREMENTS"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -503,18 +504,69 @@ class PlanSpec extends AnyFunSuite {
       case p => p
     }
 
+  /** Each task cuts its rows to k per query BEFORE any shuffle on the
+    * query key: every exchange hashing on query_id has a PartialTopK below
+    * it, so the merge moves at most tasks x queries x k rows. (Exchanges
+    * exist only after AQE's preparation rules, hence `executedPlan`.) */
+  private def partialTopKBelowQueryExchanges(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exchanges = p.collect {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.toString.startsWith("hashpartitioning(query_id") => e
+    }
+    assert(exchanges.nonEmpty, p.toString)
+    exchanges.foreach(e =>
+      assert(e.child.exists(_.isInstanceOf[graft.plans.PartialTopKExec]), p.toString))
+  }
+
   test("one-query search: the top-k is ONE TakeOrderedAndProject — no " +
-    "per-query window, no shuffle on query_id; a two-query batch keeps " +
-    "the salted window") {
+    "per-query top-k, no shuffle on query_id; a two-query batch runs " +
+    "PartialTopK below its query_id exchange") {
     val e = axisEngine(VectorEngine.IndexKindFlat)
     val q = Seq(1f, 0.2f, 0f, 0f)
     val single = e.search("axes", q, 2).queryExecution.executedPlan.toString
     assert(single.contains("TakeOrderedAndProject"), single)
     assert(!single.contains("WindowGroupLimit"), single)
+    assert(!single.contains("PartialTopK"), single)
     assert(!single.contains("hashpartitioning(query_id"), single)
-    val batch = e.searchBatch("axes", Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 0f)), 2)
-      .queryExecution.executedPlan.toString
-    assert(batch.contains("WindowGroupLimit"), batch)
+    partialTopKBelowQueryExchanges(
+      e.searchBatch("axes", Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 0f)), 2))
+  }
+
+  test("TopK.perGroup plans and answers in a fresh session without " +
+    "GraftExtensions; installing twice keeps one strategy; planning keeps " +
+    "no reference to the session") {
+    import org.apache.spark.sql.SparkSession
+    import graft.plans.{PartialTopKExec, PartialTopKStrategy}
+    def planned(fresh: SparkSession) = {
+      import fresh.implicits._
+      assert(!fresh.experimental.extraStrategies.contains(PartialTopKStrategy))
+      val df = Seq((0L, 3.0, 1L), (0L, 1.0, 2L), (0L, 2.0, 3L), (1L, 5.0, 4L))
+        .toDF("g", "d", "id")
+      graft.operators.TopK.perGroup(df, "g", "d", "id", 2)
+      val top = graft.operators.TopK.perGroup(df, "g", "d", "id", 2)
+      assert(fresh.experimental.extraStrategies.count(_ eq PartialTopKStrategy) == 1)
+      assert(physical(top).exists(_.isInstanceOf[PartialTopKExec]))
+      top
+    }
+    val fresh = spark.newSession()
+    assert(planned(fresh).orderBy("g", "d").select("g", "id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((0L, 2L), (0L, 3L), (1L, 4L)))
+    // Spark itself pins a session that has run a job, so this one only plans
+    def plannedOnly() = {
+      val s = spark.newSession()
+      planned(s)
+      new java.lang.ref.WeakReference(s)
+    }
+    val session = plannedOnly()
+    var tries = 0
+    while (session.get != null && tries < 20) { System.gc(); Thread.sleep(50); tries += 1 }
+    assert(session.get == null, "a process-level structure keeps the session alive")
   }
 
   test("one-query ivf search: the probe side is a driver-built local " +

@@ -305,20 +305,40 @@ object PropertySpec extends Properties("graft") {
       got.forall(all.contains) && got == got.sortBy(r => (r._2, r._1))
     }
 
-  property("salted TopK.perGroup == unsalted global window, any salt") = {
+  property("TopK.perGroup == global window on ties, duplicate ids, " +
+    "-0.0/NaN/Inf/null scores, UTF-8-ordered string ids, short groups") = {
     import org.apache.spark.sql.expressions.Window
-    forAll(Gen.listOfN(40, Gen.zip(Gen.chooseNum(0L, 3L), Gen.chooseNum(0, 50))),
-      Gen.chooseNum(1, 6), Gen.oneOf(1, 2, 8, 17)) { (rows, k, salt) =>
-      val df = rows.zipWithIndex
-        .map { case ((g, v), i) => (g, v.toDouble, i.toLong) }
-        .toDF("g", "d", "id")
-      val salted = graft.operators.TopK.perGroup(df, "g", "d", "id", k, salt)
-        .select("g", "d", "id").as[(Long, Double, Long)].collect().toSet
-      val w = Window.partitionBy(col("g")).orderBy(col("d"), col("id"))
-      val plain = df.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= k).select("g", "d", "id")
-        .as[(Long, Double, Long)].collect().toSet
-      salted == plain
+    // "\uE000" < "\uD83D\uDE00" in UTF-8 bytes (Spark's order), ">" in UTF-16
+    val strIds = Seq("a", "b", "\uE000", "\uD83D\uDE00", "\uFFFF", "z")
+    val score: Gen[Option[Double]] = Gen.frequency(
+      6 -> Gen.chooseNum(0, 4).map(i => Some(i.toDouble)), // ties
+      1 -> Gen.const(Some(0.0)), 1 -> Gen.const(Some(-0.0)),
+      1 -> Gen.const(Some(Double.NaN)),
+      1 -> Gen.const(Some(Double.PositiveInfinity)), 1 -> Gen.const(None))
+    // group 3 is rare, so it often holds fewer than k rows
+    val group = Gen.frequency(5 -> Gen.const(0L), 5 -> Gen.const(1L),
+      2 -> Gen.const(2L), 1 -> Gen.const(3L))
+    val row = Gen.zip(group, score, Gen.chooseNum(0, strIds.size - 1))
+    // equal-ordering scores (-0.0 == 0.0, NaN == NaN) may pick either row
+    def canon(d: Any): String = d match {
+      case null => "null"
+      case x: Double if x.isNaN => "NaN"
+      case x: Double if x == 0.0 => "0.0"
+      case x => x.toString
+    }
+    forAll(Gen.listOfN(40, row), Gen.chooseNum(1, 8), Gen.oneOf(false, true)) {
+      (rows, k, stringIds) =>
+        val raw = spark.sparkContext.parallelize(rows, 3).toDF("g", "d", "i")
+        val df = raw.withColumn("id",
+          if (stringIds) element_at(typedLit(strIds), col("i") + 1)
+          else col("i").cast("long")).drop("i")
+        def multiset(out: org.apache.spark.sql.DataFrame) =
+          out.select("g", "d", "id").collect()
+            .map(r => (r.getLong(0), canon(r.get(1)), String.valueOf(r.get(2))))
+            .toSeq.sorted
+        val got = multiset(graft.operators.TopK.perGroup(df, "g", "d", "id", k))
+        val w = Window.partitionBy(col("g")).orderBy(col("d"), col("id"))
+        got == multiset(df.withColumn("rn", row_number().over(w)).where(col("rn") <= k))
     }
   }
 
