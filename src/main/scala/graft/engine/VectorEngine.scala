@@ -1342,8 +1342,8 @@ final class VectorEngine private (val spark: SparkSession,
     *     exact distance of the R survivors; float32 scores exactly at once.
     * Each top-n cut is a global ordered limit (TakeOrderedAndProject) for
     * one query and the per-partition top-k (operators.TopK: each task keeps
-    * k rows per query, one window merges them hash-partitioned on the
-    * query) for more, so no query's candidate set ever funnels through a
+    * k rows per query, the same heap merges them after a hash exchange on
+    * the query) for more, so no query's candidate set ever funnels through a
     * single reduce slot.
     *
     * `probe` (LSH libraries): how wide the bucket probe goes.

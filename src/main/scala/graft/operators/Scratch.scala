@@ -34,30 +34,39 @@ object Scratch {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong()
   private val live = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  @volatile private var hookRoot: Option[java.nio.file.Path] = None
+  private var rootDir: Option[java.nio.file.Path] = None
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  /** The one recursive delete of the project. */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.exists(p)) {
       java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
     }
   }
 
-  /** Scratch root for this JVM: under java.io.tmpdir (the same disk
-    * Spark's own block/spill files use), salted with the application id
-    * so concurrent sessions never collide. The shutdown hook removes it
-    * with the JVM. */
-  private def root(df: DataFrame): java.nio.file.Path = synchronized {
-    val appId = df.sparkSession.sparkContext.applicationId
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft-scratch-$appId")
-    if (hookRoot.isEmpty) {
+  /** Scratch root for this JVM: a fresh `graft-scratch-*` directory under
+    * java.io.tmpdir (the same disk Spark's own block/spill files use), so
+    * concurrent JVMs never collide. Created on first use together with
+    * the one shutdown hook that removes it with the JVM. */
+  private def root: java.nio.file.Path = synchronized {
+    rootDir.getOrElse {
+      val p = java.nio.file.Files.createTempDirectory("graft-scratch-")
       java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() =>
         try deleteRecursively(p) catch { case _: Exception => () }))
-      hookRoot = Some(p)
+      rootDir = Some(p)
+      p
     }
-    p
   }
+
+  private def child(label: String): java.nio.file.Path = {
+    require(label.matches("[A-Za-z0-9._-]+"), s"unsafe scratch label: $label")
+    root.resolve(s"$label-${counter.incrementAndGet()}")
+  }
+
+  /** A fresh, empty directory under the scratch root. The caller may
+    * delete it early; the shutdown hook removes whatever is left. */
+  private[graft] def newDir(label: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectories(child(label))
 
   /** Materialize `df` ONCE to scratch parquet and return the read-back
     * frame. Eager (runs the write job now). The previous staging for
@@ -74,9 +83,7 @@ object Scratch {
     * live plan. Cross-thread copies are reclaimed by the shutdown hook
     * (bounded: one copy per label per thread that ever staged it). */
   def stage(df: DataFrame, label: String): DataFrame = {
-    require(label.matches("[A-Za-z0-9._-]+"), s"unsafe stage label: $label")
-    val dir = root(df).resolve(s"$label-${counter.incrementAndGet()}")
-      .toString
+    val dir = child(label).toString
     df.write.mode("overwrite").parquet(dir)
     val previous = live.put(s"$label@${Thread.currentThread().getId}", dir)
     if (previous != null)

@@ -16,9 +16,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Per-partition top-`k` of every `grouping` value under `order`: each
   * task keeps at most k rows per group — a superset of those rows' share
-  * of the global per-group top-k — so a per-group window above it merges
-  * P x groups x k rows instead of every input row. Rows are not moved, so
-  * the node neither needs nor changes a distribution. */
+  * of the global per-group top-k — so the merge above it sees P x groups
+  * x k rows instead of every input row. Rows are not moved, so the node
+  * neither needs nor changes a distribution; over input hash-partitioned
+  * on `grouping` it is the exact per-group top-k. */
 case class PartialTopK(grouping: Seq[Expression], order: Seq[SortOrder], k: Int,
                        child: LogicalPlan) extends UnaryNode {
   require(k > 0, s"k must be > 0, got $k")

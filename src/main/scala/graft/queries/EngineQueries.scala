@@ -64,30 +64,22 @@ object EngineQueries {
     table(s, dir, "embeddings").where(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0)
 
-  /** Built-and-saved engine states, one per distinct configuration per
-    * process. Every lifecycle row's DELIVERABLE is the reopen-from-disk +
-    * search path; the create + bulk ingest + save prologue is a pure
-    * function of (session, sf dir, kind, delete flag, metric, storage),
-    * so it runs ONCE and each row (and each timed bench pass) opens the
-    * saved state fresh. That is also the honest split at scale: ingest is
-    * a pipeline job, open + search is the serving path being measured.
-    * Single global lock: builds are rare (<= 5 per process) and the
-    * cached engines are only ever read after construction. */
-  private val stateCache = scala.collection.mutable.HashMap[
-    (SparkSession, String, String, Boolean, String, String),
-    (VectorEngine, String, String)]()
-
+  /** Built-and-saved engine states, one per distinct configuration, in
+    * [[Artifacts]]. Every lifecycle row's DELIVERABLE is the reopen-from-
+    * disk + search path; the create + bulk ingest + save prologue is a
+    * pure function of (sf dir, kind, delete flag, metric, storage), so it
+    * runs ONCE and each row (and each timed bench pass) opens the saved
+    * state fresh. That is also the honest split at scale: ingest is a
+    * pipeline job, open + search is the serving path being measured. */
   private def builtState(s: SparkSession, dir: String, kind: String,
                          deleteDoc7: Boolean, metric: String = "cosine",
                          storage: String = VectorEngine.StorageFloat32)
-      : (VectorEngine, String, String) = stateCache.synchronized {
-    stateCache.getOrElseUpdate((s, dir, kind, deleteDoc7, metric, storage), {
+      : (VectorEngine, String, String) =
+    Artifacts.memo(s, dir, s"lifecycle-$kind-$deleteDoc7-$metric-$storage") { state =>
       val (eng, lib) = buildEngine(s, dir, kind, deleteDoc7, metric, storage)
-      val state = java.nio.file.Files.createTempDirectory("graft-lifecycle").toString
       eng.save(state)
       (eng, lib, state)
-    })
-  }
+    }
 
   /** A2/J6: derived chunk counts per document after a cascade delete —
     * counts are a groupBy at read time, so the cascade can never leave a
@@ -719,45 +711,12 @@ object EngineQueries {
   private val CurateQualityMin = 0.6
   private val CurateMaxDup = 0.5
 
-  // One curated engine per (session, sf dir) — the builtState
-  // convention: the chunk+gate+ingest prologue is a deterministic
-  // pipeline job (at sf0.1 it ingests ~65k gated chunks), so it runs
-  // ONCE per process and each invocation (and each timed bench pass)
-  // reads the resulting library — the serving path. Correctness is
-  // unaffected: the oracle predicts the final library contents either
-  // way, and the e2e pipeline itself is exercised by the build plus
-  // the EngineSpec composition test.
-  // Keyed by dir with the owning session alongside the VALUE (not in
-  // the key): an engine is session-bound, so a (session, dir) KEY
-  // would strongly retain every stopped session's engine for the JVM
-  // lifetime — the exact hazard bpeMergeCache's dir-only key avoids.
-  // A call from a NEWER session replaces (and so releases) the stale
-  // entry instead of accumulating beside it.
-  private[graft] val curatedEngines = scala.collection.mutable.HashMap[
-    String, (SparkSession, VectorEngine)]()
-
-  /** Shared lookup for the per-dir engine caches: a hit requires the
-    * SAME owning session; any miss first EVICTS every entry owned by a
-    * different session — an engine is session-bound, so entries of a
-    * replaced session (and their ingested state) are unusable and would
-    * otherwise accumulate for the process lifetime, across ALL dirs,
-    * not just the one being rebuilt. */
-  private[graft] def cachedEngine(
-      cache: scala.collection.mutable.HashMap[String, (SparkSession, VectorEngine)],
-      s: SparkSession, dir: String)(build: => VectorEngine): VectorEngine =
-    cache.synchronized {
-      cache.get(dir) match {
-        case Some((owner, e)) if owner eq s => e
-        case _ =>
-          cache.filterInPlace { case (_, (owner, _)) => owner eq s }
-          val e = build
-          cache(dir) = (s, e)
-          e
-      }
-    }
-
+  // The chunk+gate+ingest prologue (at sf0.1 it ingests ~65k gated
+  // chunks) is an [[Artifacts]] entry, like builtState: each invocation
+  // reads the resulting library — the serving path. The e2e pipeline
+  // itself is exercised by the build plus the EngineSpec composition test.
   private val curateIngest: QueryFn = (s, dir) => {
-    val eng = cachedEngine(curatedEngines, s, dir)(buildCuratedEngine(s, dir))
+    val eng = Artifacts.memo(s, dir, "curated")(_ => buildCuratedEngine(s, dir))
     eng.chunksDf.where(col("library_id") === "curlib")
       .select(col("id").as("chunk_id"), col("chunk_index"), col("text"))
       .orderBy(col("chunk_id"))
@@ -799,11 +758,8 @@ object EngineQueries {
     * shared implementation both paths call). */
   private val DsirIngestBuckets = 64
 
-  private[graft] val dsirEngines = scala.collection.mutable.HashMap[
-    String, (SparkSession, VectorEngine)]()
-
   private val dsirIngest: QueryFn = (s, dir) => {
-    val eng = cachedEngine(dsirEngines, s, dir)(buildDsirEngine(s, dir))
+    val eng = Artifacts.memo(s, dir, "dsir-curated")(_ => buildDsirEngine(s, dir))
     eng.chunksDf.where(col("library_id") === "dsirlib")
       .select(col("id").as("chunk_id"), col("chunk_index"), col("text"))
       .orderBy(col("chunk_id"))
@@ -851,21 +807,6 @@ object EngineQueries {
   private val BloomIngestK = 2
   private val BloomIngestCap = 100
 
-  private[graft] val bloomEngines = scala.collection.mutable.HashMap[
-    String, (SparkSession, VectorEngine, DataFrame, Long, Long)]()
-
-  private def cachedBloomBuild(s: SparkSession, dir: String)
-      : (VectorEngine, DataFrame, Long, Long) = bloomEngines.synchronized {
-    bloomEngines.get(dir) match {
-      case Some((owner, e, v, a, b)) if owner eq s => (e, v, a, b)
-      case _ =>
-        bloomEngines.filterInPlace { case (_, (owner, _, _, _, _)) => owner eq s }
-        val r = buildBloomEngine(s, dir)
-        bloomEngines(dir) = (s, r._1, r._2, r._3, r._4)
-        r
-    }
-  }
-
   private def buildBloomEngine(s: SparkSession, dir: String)
       : (VectorEngine, DataFrame, Long, Long) = {
     val docs = table(s, dir, "documents")
@@ -902,7 +843,8 @@ object EngineQueries {
   }
 
   private val bloomIngest: QueryFn = (s, dir) => {
-    val (_, verdicts, nDefNew, nIngested) = cachedBloomBuild(s, dir)
+    val (_, verdicts, nDefNew, nIngested) =
+      Artifacts.memo(s, dir, "bloom-gated")(_ => buildBloomEngine(s, dir))
     verdicts.select(col("id").as("chunk_id"), col("bloom_positive"),
         col("is_seen"))
       .withColumn("n_bloom_definite_new", lit(nDefNew))

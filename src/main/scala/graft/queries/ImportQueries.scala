@@ -24,25 +24,19 @@ object ImportQueries {
   // the oracle SQL where a path must be a literal.
   private val LshLibId = "179f2fd8-7ad2-5559-baaf-2cf8b6711157"
 
-  /** One import + save + reopen per process: every row's deliverable is
-    * the REOPENED engine (import -> persist -> open -> search), the same
-    * honest split as EngineQueries' lifecycle cache. */
-  private val cache =
-    scala.collection.mutable.HashMap[SparkSession, (VectorEngine, String, String)]()
-
+  /** One import + save + reopen per process ([[Artifacts]]): every row's
+    * deliverable is the REOPENED engine (import -> persist -> open ->
+    * search), the same honest split as EngineQueries' lifecycle states. */
   private def imported(s: SparkSession): (VectorEngine, String, String) =
-    cache.synchronized {
-      cache.getOrElseUpdate(s, {
-        val eng = VectorEngine.create(s)
-        eng.importReferenceStore(RefstoreDir)
-        val state = java.nio.file.Files.createTempDirectory("graft-import").toString
-        eng.save(state)
-        val eng2 = VectorEngine.open(s, state)
-        def libId(name: String): String =
-          eng2.librariesDf.where(col("name") === name).select("id")
-            .head().getString(0)
-        (eng2, libId("corpus-flat"), libId("corpus-lsh"))
-      })
+    Artifacts.memo(s, RefstoreDir, "import") { state =>
+      val eng = VectorEngine.create(s)
+      eng.importReferenceStore(RefstoreDir)
+      eng.save(state)
+      val eng2 = VectorEngine.open(s, state)
+      def libId(name: String): String =
+        eng2.librariesDf.where(col("name") === name).select("id")
+          .head().getString(0)
+      (eng2, libId("corpus-flat"), libId("corpus-lsh"))
     }
 
   /** The embedding of a named document's chunk_index-0 chunk, read back
@@ -179,23 +173,17 @@ object ImportQueries {
     * committed fixture bytes — any information the export path loses
     * (an embedding digit, a metadata type, a bucket assignment)
     * hash-mismatches. */
-  private val exportCache =
-    scala.collection.mutable.HashMap[SparkSession, (VectorEngine, String, String)]()
-
   private def roundTripped(s: SparkSession): (VectorEngine, String, String) =
-    exportCache.synchronized {
-      exportCache.getOrElseUpdate(s, {
-        val first = VectorEngine.create(s)
-        first.importReferenceStore(RefstoreDir)
-        val out = java.nio.file.Files.createTempDirectory("graft-export").toString
-        first.exportReferenceStore(out)
-        val eng = VectorEngine.create(s)
-        eng.importReferenceStore(out)
-        def libId(name: String): String =
-          eng.librariesDf.where(col("name") === name).select("id")
-            .head().getString(0)
-        (eng, libId("corpus-flat"), libId("corpus-lsh"))
-      })
+    Artifacts.memo(s, RefstoreDir, "export") { out =>
+      val first = VectorEngine.create(s)
+      first.importReferenceStore(RefstoreDir)
+      first.exportReferenceStore(out)
+      val eng = VectorEngine.create(s)
+      eng.importReferenceStore(out)
+      def libId(name: String): String =
+        eng.librariesDf.where(col("name") === name).select("id")
+          .head().getString(0)
+      (eng, libId("corpus-flat"), libId("corpus-lsh"))
     }
 
   private val exportRoundtrip: QueryFn = (s, _) => {

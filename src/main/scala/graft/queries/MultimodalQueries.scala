@@ -309,34 +309,21 @@ object MultimodalQueries {
     * (DISTINCT → anti-join → union with the primed history) and the same
     * window aggregation, so a double-insert OR an over-drop flips the
     * hash. */
-  // One sink per (process, sf dir): the gate's content is deterministic
-  // (same priming + same batch), so repeated invocations — the bench runs
-  // every query 4x — reuse the first build instead of re-writing ~1.6x
-  // the events table each time; the shutdown hook removes the temp sink
-  // (it is proportional to the events table, not KB-scale like the spec
-  // temp dirs).
-  private val dedupSinks =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-    f.delete(); ()
-  }
-
+  // One sink per sf dir in [[Artifacts]]: the gate's content is
+  // deterministic (same priming + same batch), so repeated invocations
+  // reuse the first build instead of re-writing ~1.6x the events table.
   private val eventsDedupGated: QueryFn = (s, dir) => {
-    val sink = dedupSinks.getOrElseUpdate(dir, {
+    val sink = Artifacts.memo(s, dir, "dedup-sink") { root =>
       val ev = eventsTable(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val root = java.nio.file.Files.createTempDirectory("graft-dedup-sink")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => rmrf(root.toFile)))
-      val path = root.toString + "/events"
+      val path = root + "/events"
       StreamingIngest.upsertBatch(ev.where(col("event_id") % 3 =!= 0), path)
       val batch = ev.where(col("event_id") % 2 === 0)
         .unionAll(ev.where(col("event_id") % 10 === 0))
       StreamingIngest.upsertBatch(batch, path)
       path
-    })
+    }
     StreamingIngest.windowedEventCounts(
         s.read.parquet(sink)
           .select(col("event_id"), col("ts"), col("user_id"),

@@ -213,18 +213,12 @@ object PipelineQueries {
     (a0 +: iters :+ tail).mkString(",\n")
   }
 
-  // The trained merge list is a pure deterministic function of the
-  // corpus parquet (an ingest-time artifact, like the IVF centroid
-  // fixture) — train once per sf DIR per process instead of once per
-  // invocation across the four BPE rows x the bench's four passes.
-  // Keyed by dir ALONE: any session over the same (immutable, per the
-  // driver contract) testdata trains the identical list, and a session
-  // key would strongly retain stopped sessions for the JVM lifetime.
-  private val bpeMergeCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[BpeTokenizer.Merge]]
+  // The trained merge list is an ingest-time artifact (like the IVF
+  // centroid fixture): trained once per sf dir in [[Artifacts]] instead of
+  // once per invocation across the four BPE rows x the bench's passes.
   private def bpeMergesFor(s: org.apache.spark.sql.SparkSession,
                            dir: String): Seq[BpeTokenizer.Merge] =
-    bpeMergeCache.getOrElseUpdate(dir,
+    Artifacts.memo(s, dir, "bpe-merges")(_ =>
       BpeTokenizer.trainMerges(table(s, dir, "documents"), col("text")))
 
   /** The learned merge table itself — gates TRAINING: pair counting over
@@ -377,32 +371,20 @@ object PipelineQueries {
     * wrong shard assignment all hash-mismatch against bytes that went
     * through a real parquet roundtrip.
     *
-    * One sink per (process, sf dir), same rationale as the dedup sink:
-    * content is deterministic, the bench runs every query 4x. */
-  private val shardSinks =
-    new scala.collection.concurrent.TrieMap[String, String]
-
-  /** ONE home for the one-sink-per-(process, sf dir) lifecycle both
-    * shard-sink queries share (temp root + shutdown-hook cleanup +
-    * the `/shards` path + the manifest read): a lifecycle fix applies
-    * once instead of diverging between near-verbatim copies. */
-  private def shardSinkManifest(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      cache: scala.collection.concurrent.TrieMap[String, String],
-      tmpPrefix: String)(build: String => Unit)
+    * One sink per sf dir in [[Artifacts]], like the dedup sink. */
+  private def shardSinkManifest(s: org.apache.spark.sql.SparkSession, dir: String,
+                                name: String)(build: String => Unit)
       : org.apache.spark.sql.DataFrame = {
-    val sink = cache.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory(tmpPrefix)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmrfDir(root.toFile)))
-      val path = root.toString + "/shards"
+    val sink = Artifacts.memo(s, dir, name) { root =>
+      val path = root + "/shards"
       build(path)
       path
-    })
+    }
     s.read.parquet(s"$sink/_graft_manifest").orderBy(col("shard"))
   }
 
   private val writeShards: QueryFn = (s, dir) =>
-    shardSinkManifest(s, dir, shardSinks, "graft-shard-sink") { path =>
+    shardSinkManifest(s, dir, "shard-sink") { path =>
       val packed = TrainingData.packAssignments(table(s, dir, "documents"),
         col("doc_id"), size(tokens(col("text"))), budget = 64L, shards = 8)
       TrainingData.writeShards(
@@ -410,11 +392,6 @@ object PipelineQueries {
         seqsPerShard = 8)
       ()
     }
-
-  private def rmrfDir(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrfDir))
-    f.delete(); ()
-  }
 
   private val writeShardsSql: String =
     s"""WITH n AS (
@@ -972,11 +949,8 @@ object PipelineQueries {
     * recurrence and the shard arithmetic in SQL — a wrong break point,
     * a dropped doc, or a mis-sharded sequence all hash-mismatch
     * against bytes that went through a real parquet roundtrip. */
-  private val wholeShardSinks =
-    new scala.collection.concurrent.TrieMap[String, String]
-
   private val packWholeShards: QueryFn = (s, dir) =>
-    shardSinkManifest(s, dir, wholeShardSinks, "graft-wshard-sink") { path =>
+    shardSinkManifest(s, dir, "wshard-sink") { path =>
       val packed = TrainingData.packWholeDocs(table(s, dir, "documents"),
         col("doc_id"), size(tokens(col("text"))),
         budget = PwdBudget, bucketDocs = PwdBucketDocs)

@@ -81,9 +81,9 @@ object VectorSearchQueries {
     * Per-partition top-k: a single window over query_id would shuffle
     * all NxQ rows into only Q partitions — a skew killer when Q is small.
     * Each task keeps its own top-k per query_id (one bounded heap per
-    * query, no sort), so the per-query window sees only tasks*k rows per
-    * query. Identical results: the true per-query top-k is a subset of
-    * the union of per-task top-k. */
+    * query, no sort), so the per-query merge after the query_id exchange
+    * sees only tasks*k rows per query. Identical results: the true
+    * per-query top-k is a subset of the union of per-task top-k. */
   private val knnBatch: QueryFn = (s, dir) => {
     val k = 5
     val emb = table(s, dir, "embeddings")

@@ -35,6 +35,15 @@ class PlanSpec extends AnyFunSuite {
     // a global window would shuffle everything to a single partition
     assert(!df.queryExecution.executedPlan.toString
       .contains("SinglePartition, ENSURE_REQUIREMENTS"))
+    // the merge is PartialTopK again: no sort + window (or its inferred
+    // WindowGroupLimit) re-cuts rows the heaps already cut to k
+    val p = adaptiveFinal(df)
+    val windowsAbove = p.collect {
+      case w @ (_: org.apache.spark.sql.execution.window.WindowExec |
+                _: org.apache.spark.sql.execution.window.WindowGroupLimitExec)
+        if w.exists(_.isInstanceOf[graft.plans.PartialTopKExec]) => w.nodeName
+    }
+    assert(windowsAbove.isEmpty, p.toString)
   }
 
   test("agg_lineitem_pushdown: map-side partial aggregation and a pushed " +
@@ -508,13 +517,17 @@ class PlanSpec extends AnyFunSuite {
     * query key: every exchange hashing on query_id has a PartialTopK below
     * it, so the merge moves at most tasks x queries x k rows. (Exchanges
     * exist only after AQE's preparation rules, hence `executedPlan`.) */
-  private def partialTopKBelowQueryExchanges(df: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val p = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
+  private def adaptiveFinal(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
       case p => p
     }
+
+  private def partialTopKBelowQueryExchanges(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val p = adaptiveFinal(df)
     val exchanges = p.collect {
       case e: ShuffleExchangeExec
         if e.outputPartitioning.toString.startsWith("hashpartitioning(query_id") => e

@@ -31,7 +31,7 @@ class ScratchSpec extends AnyFunSuite {
     val pruned = staged.select("id").queryExecution.executedPlan.toString
     assert(pruned.contains("ReadSchema") && !pruned.contains("x:"), pruned)
     assert(sc.getPersistentRDDs.keySet == rddsBefore)
-    // the files live under the app-scoped scratch root
+    // the files live under the JVM's scratch root
     val dir1 = staged.inputFiles.head
     assert(dir1.contains("graft-scratch-") && dir1.contains("spec-label-"))
     // restaging the label bounds storage to ONE live copy: the previous
