@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.functions.{MetadataFunctions, VectorExpressions}
-import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, TrainingData}
+import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, TopK, TrainingData}
+import graft.plans.QueryProbes
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.graftshim.ColumnBridge
 import java.sql.Timestamp
@@ -36,6 +37,11 @@ final class VectorEngine private (val spark: SparkSession,
   import spark.implicits._
   import VectorEngine._
 
+  /** The libraries table — one row per library — held on the driver:
+    * every lookup (each search, batch and hybrid call starts with one)
+    * reads it without a Spark job. `libs` is its Dataset view; [[setLibs]]
+    * is the one assignment to both. */
+  private var libRows: Vector[LibraryRow] = Vector.empty
   private var libs: Dataset[LibraryRow] = spark.emptyDataset[LibraryRow]
   private var docs: Dataset[DocumentRow] = spark.emptyDataset[DocumentRow]
   private var chunks: Dataset[ChunkRow] = spark.emptyDataset[ChunkRow]
@@ -189,10 +195,18 @@ final class VectorEngine private (val spark: SparkSession,
     matrices(libraryId).matrix.map(_.toArray).toArray
   }
 
+  private def setLibs(rows: Seq[LibraryRow]): Unit = {
+    libRows = rows.toVector
+    libs = libRows.toDS()
+  }
+
+  /** Replace library `row.id` (appended last, like [[replaceById]]). */
+  private def replaceLib(row: LibraryRow): Unit =
+    setLibs(libRows.filterNot(_.id == row.id) :+ row)
+
   private def afterMutation(): Unit = {
     mutationsSinceCompact += 1
     if (mutationsSinceCompact >= CompactEvery) {
-      libs = libs.localCheckpoint()
       docs = docs.localCheckpoint()
       chunks = chunks.localCheckpoint()
       mutationsSinceCompact = 0
@@ -204,7 +218,7 @@ final class VectorEngine private (val spark: SparkSession,
     * library for every child add/remove). Counts here are derived, but
     * the TIMESTAMP bump is API-observable and must match. */
   private def touchLibrary(id: String, t: Timestamp): Unit =
-    findLibrary(id).foreach(l => libs = replaceById(libs, id, l.copy(updated_at = t)))
+    findLibrary(id).foreach(l => replaceLib(l.copy(updated_at = t)))
 
   private def touchDocument(id: String, t: Timestamp): Unit =
     findDocument(id).foreach(d => docs = replaceById(docs, id, d.copy(updated_at = t)))
@@ -258,7 +272,7 @@ final class VectorEngine private (val spark: SparkSession,
     val t = now()
     val row = LibraryRow(lid, name, description, encodeMeta(metadata),
       dim, metric, indexKind, storage, t, t)
-    libs = libs.unionByName(Seq(row).toDS())
+    setLibs(libRows :+ row)
     // The MatrixRow doubles as the remembered LSH configuration: recorded
     // for LSH libraries AND for flat libraries created with non-default
     // params, so a later index_kind flip (patchLibrary) rebuilds with the
@@ -272,8 +286,7 @@ final class VectorEngine private (val spark: SparkSession,
     row
   }
 
-  private def findLibrary(id: String): Option[LibraryRow] =
-    libs.where(col("id") === id).collect().headOption
+  private def findLibrary(id: String): Option[LibraryRow] = libRows.find(_.id == id)
 
   def getLibrary(id: String): LibraryRow =
     findLibrary(id).getOrElse(throw NotFoundError("library", id))
@@ -326,7 +339,7 @@ final class VectorEngine private (val spark: SparkSession,
       distance_metric = metric.getOrElse(cur.distance_metric),
       index_kind = indexKind.getOrElse(cur.index_kind),
       updated_at = now())
-    libs = replaceById(libs, id, next)
+    replaceLib(next)
     if ((dimChange || kindChange) && cur.storage == StoragePq)
       // the installed codebooks partition the OLD dimension (dim change)
       // or were trained for the OLD index kind's encoding (kind change:
@@ -380,7 +393,7 @@ final class VectorEngine private (val spark: SparkSession,
     * J6 anti-join semantics via the denormalized library_id). */
   def deleteLibrary(id: String): Unit = {
     getLibrary(id)
-    libs = libs.where(col("id") =!= id).as[LibraryRow]
+    setLibs(libRows.filterNot(_.id == id))
     docs = docs.where(col("library_id") =!= id).as[DocumentRow]
     chunks = chunks.where(col("library_id") =!= id).as[ChunkRow]
     matrices -= id
@@ -1322,29 +1335,35 @@ final class VectorEngine private (val spark: SparkSession,
     * (query_id, distance, chunk_id). Query ids must be distinct. A filter
     * whose allow-set is empty yields no rows (vector_store.py:256-258).
     *
-    * Every index kind is a candidate generator and every storage kind an
-    * approximate score plus one exact rescore:
+    * Every index kind is a candidate generator; float32 storage scores
+    * exactly, every compact storage kind is an approximate score plus one
+    * exact rescore:
     *   - lsh / ivf: each query's probe buckets (LSH buckets or IVF cells)
-    *     are computed on the driver and joined to the stored bucket column
-    *     as ONE local relation of (query_id, qvec, qbucket) rows, behind a
-    *     bucket filter pushed to the scan. The reference's two-phase
-    *     semantics hold per query: its candidate count is the allow-set's
-    *     bucket histogram summed over its probe buckets, and a query with
-    *     < k candidates scans the full allow-set instead, so never fewer
-    *     results than flat search. Unfiltered, that histogram is the
-    *     maintained index metadata (bucketHistogram — no Spark job before
-    *     the result job); filtered, it is the adaptive probe's bounded
-    *     allow-set aggregate, or one aggregate restricted to the probed
-    *     buckets;
+    *     are computed on the driver and reach the scan as a bucket filter.
+    *     The reference's two-phase semantics hold per query: its candidate
+    *     count is the allow-set's bucket histogram summed over its probe
+    *     buckets, and a query with < k candidates scans the full allow-set
+    *     instead, so never fewer results than flat search. Unfiltered,
+    *     that histogram is the maintained index metadata (bucketHistogram
+    *     — no Spark job before the result job); filtered, it is the
+    *     adaptive probe's bounded allow-set aggregate, or one aggregate
+    *     restricted to the probed buckets;
     *   - flat (and ivf before its centroid model): no probe, so every
-    *     query takes the fallback — every (allow-set row, query) pair;
-    *   - sq8 / bq / pq: top-R per query on the stored codes, then the
-    *     exact distance of the R survivors; float32 scores exactly at once.
+    *     query takes the fallback — every allow-set row;
+    *   - float32: ONE scan of the allow-set (of the probed buckets when no
+    *     query falls back) through [[graft.operators.TopK.nearest]]: each
+    *     task scores each row against the queries the probe plan assigns
+    *     it, inside one bounded heap of k per query, so no (query, row)
+    *     pair is materialized and the queries ride in the plan, not in a
+    *     broadcast;
+    *   - sq8 / bq / pq: top-R per query on the stored codes over the
+    *     (query, row) candidate pairs, then the exact distance of the R
+    *     survivors.
     * Each top-n cut is a global ordered limit (TakeOrderedAndProject) for
-    * one query and the per-partition top-k (operators.TopK: each task keeps
-    * k rows per query, the same heap merges them after a hash exchange on
-    * the query) for more, so no query's candidate set ever funnels through a
-    * single reduce slot.
+    * one query and per-task heaps merged after a hash exchange on the
+    * query (operators.TopK) for more, so no query's candidate set ever
+    * funnels through a single reduce slot. The final (query_id, distance,
+    * chunk_id) order is one TakeOrderedAndProject over the <= Q x k rows.
     *
     * `probe` (LSH libraries): how wide the bucket probe goes.
     *   - ProbeAdaptive (DEFAULT): query-directed adaptive probing
@@ -1402,6 +1421,8 @@ final class VectorEngine private (val spark: SparkSession,
     if (queries.isEmpty)
       return spark.emptyDataset[(Long, String, Double)]
         .toDF("query_id", "chunk_id", "distance")
+    if (queries.size.toLong * k > Int.MaxValue)
+      throw SearchError(s"${queries.size} queries x k = $k exceeds ${Int.MaxValue} rows")
     queries.foreach { case (qid, q) =>
       if (q.length != lib.embedding_dimension)
         throw SearchError(
@@ -1412,20 +1433,6 @@ final class VectorEngine private (val spark: SparkSession,
     val metaPred = MetadataFunctions.filterPredicate(col("metadata"), filters)
     val scoped = chunks.where(col("library_id") === libraryId).where(metaPred)
       .toDF()
-    val qvecs = queries.toMap
-    def local(rows: Seq[(Long, Seq[Float], Long)]): DataFrame =
-      rows.toDF("query_id", "qvec", "qbucket")
-        .withColumn("qvec", col("qvec").cast("array<float>"))
-    val qDf = queries.toDF("query_id", "qvec")
-      .withColumn("qvec", col("qvec").cast("array<float>"))
-    // The stored bucket column restricted to a driver-known bucket set: a
-    // filter pushed to the scan, so a reopened store skips parquet row
-    // groups. An InSet, not `isin`: its generated code references the set
-    // instead of inlining each value, so searches with different probe
-    // sets share one compiled class.
-    def inBuckets(df: DataFrame, buckets: Iterable[Long]): DataFrame =
-      df.where(ColumnBridge.column(InSet(ColumnBridge.expression(col("bucket")),
-        buckets.toSet[Any])))
     // The allow-set's (bucket -> rows) histogram when it is known before
     // the probe: the maintained index metadata when unfiltered (no Spark
     // job); for a filtered adaptive probe, its bounded aggregate over the
@@ -1472,25 +1479,71 @@ final class VectorEngine private (val spark: SparkSession,
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val probed = probes.filter(_._2.iterator.map(hist.getOrElse(_, 0L)).sum >= k)
     val fallbackQs = queries.map(_._1).filterNot(probed.map(_._1).toSet)
-    // phase-1 width is storage-dependent: a compact-storage library's
-    // approximate pass reads the compact columns and NEVER the float32
+    val top =
+      if (lib.storage == StorageSq8 || lib.storage == StorageBq || pqModel.isDefined)
+        compactSearch(lib, queries, k, rescore, scoped, probed, fallbackQs, pqModel)
+      else {
+        // float32 (and a pq library with no codebooks yet) scores exactly,
+        // inside the per-task heaps: one scan of the allow-set, or of the
+        // probed buckets when no query falls back
+        val scan = if (fallbackQs.isEmpty) inBuckets(scoped, probed.flatMap(_._2)) else scoped
+        TopK.nearest(scan.select(Seq(col("id"), col("embedding")) ++
+            (if (probed.isEmpty) Nil else Seq(col("bucket"))): _*),
+          QueryProbes(queries.map { case (qid, q) => qid -> q.toArray }, probed), metric, k)
+      }
+    val ranked = top.withColumnRenamed("id", "chunk_id")
+    if (queries.size == 1) ranked
+    else {
+      // at most Q x k rows by construction, so the limit drops nothing; it
+      // plans the sort as TakeOrderedAndProject, whose collect merges the
+      // per-partition cuts on the driver — no range sample, no exchange
+      ranked.orderBy(col("query_id"), col("distance"), col("chunk_id"))
+        .limit((queries.size.toLong * k).toInt)
+    }
+  }
+
+  /** The stored bucket column restricted to a driver-known bucket set: a
+    * filter pushed to the scan, so a reopened store skips parquet row
+    * groups. An InSet, not `isin`: its generated code references the set
+    * instead of inlining each value, so searches with different probe sets
+    * share one compiled class. */
+  private def inBuckets(df: DataFrame, buckets: Iterable[Long]): DataFrame =
+    df.where(ColumnBridge.column(InSet(ColumnBridge.expression(col("bucket")),
+      buckets.toSet[Any])))
+
+  /** The sq8 / bq / pq leg of [[searchBatch]]: top-R per query on the
+    * stored codes over the (query, row) candidate pairs, then ONE exact
+    * rescore of the O(Q x R) survivors. Output: (query_id, id, distance),
+    * top-k per query, unordered. */
+  private def compactSearch(lib: LibraryRow, queries: Seq[(Long, Seq[Float])], k: Int,
+                            rescore: Int, scoped: DataFrame,
+                            probed: Seq[(Long, Seq[Long])], fallbackQs: Seq[Long],
+                            pqModel: Option[ProductQuantization.Model]): DataFrame = {
+    val libraryId = lib.id
+    val metric = lib.distance_metric
+    val residualPq = lib.storage == StoragePq && pqResidual(lib)
+    val qvecs = queries.toMap
+    def local(rows: Seq[(Long, Seq[Float], Long)]): DataFrame =
+      rows.toDF("query_id", "qvec", "qbucket")
+        .withColumn("qvec", col("qvec").cast("array<float>"))
+    val qDf = queries.toDF("query_id", "qvec")
+      .withColumn("qvec", col("qvec").cast("array<float>"))
+    // the approximate pass reads the compact columns and NEVER the float32
     // embedding bytes — those are read once, for the O(Q x R) rescore
-    // survivors only.
+    // survivors only
     val dataCols: Seq[Column] =
       if (lib.storage == StorageSq8)
         Seq(col("codes"), col("qmin"), col("qmax"))
       else if (lib.storage == StorageBq)
         Seq(col("codes"))
-      else if (pqModel.isDefined)
+      else
         Seq(col("codes")) ++
           (if (residualPq) Seq(col("bucket")) else Nil) ++
           (if (metric == "cosine") Seq(col("qmin")) else Nil)
-      else Seq(col("embedding"))
     val pairCols = Seq(col("query_id"), col("id")) ++ dataCols :+ col("qvec")
     // (query, row) candidate pairs: the probed queries join the stored
     // bucket column through ONE local relation of (query_id, qvec,
-    // qbucket) rows (broadcasting it runs no Spark job); the fallback
-    // queries cross the whole allow-set
+    // qbucket) rows; the fallback queries cross the whole allow-set
     val pairs = Seq(
       if (probed.isEmpty) None
       else Some(inBuckets(scoped, probed.flatMap(_._2))
@@ -1502,21 +1555,21 @@ final class VectorEngine private (val spark: SparkSession,
           if (probed.isEmpty) qDf else qDf.where(col("query_id").isin(fallbackQs: _*))))
         .select(pairCols: _*))
     ).flatten.reduce(_ unionByName _)
-    // Each compact storage kind supplies only its approximate score over
-    // the candidate pairs; float32 (and a pq library with no codebooks
-    // yet) scores exactly in one pass.
-    val approx: Option[DataFrame] =
+    // each compact storage kind supplies only its approximate score over
+    // the candidate pairs
+    val approx: DataFrame =
       if (lib.storage == StorageBq)
         // Hamming over the stored int words (the query's words re-packed
         // in-plan from qvec — a handful of 31-bit words, e.g. 3 at dim
         // 64; cheaper than another broadcast join)
-        Some(pairs.withColumn("approx", BinaryQuantization.hamming(
+        pairs.withColumn("approx", BinaryQuantization.hamming(
           col("codes"), BinaryQuantization.encodeWordsInt(
-            col("qvec"), lib.embedding_dimension))))
+            col("qvec"), lib.embedding_dimension)))
       else if (lib.storage == StorageSq8)
-        Some(pairs.withColumn("approx", VectorExpressions.sq8DistanceBatch(
-          col("codes"), col("qmin"), col("qmax"), col("qvec"), metric)))
-      else pqModel.map { model =>
+        pairs.withColumn("approx", VectorExpressions.sq8DistanceBatch(
+          col("codes"), col("qmin"), col("qmax"), col("qvec"), metric))
+      else {
+        val model = pqModel.get
         // ADC: each query's lookup table rides in as a broadcast column
         // (added in the same order as ProductQuantization.search's
         // literal tables). Residual (IVFPQ) tables are keyed by (query_id,
@@ -1558,32 +1611,24 @@ final class VectorEngine private (val spark: SparkSession,
           lutSum, metric,
           if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm")))
       }
-    def exact(df: DataFrame): DataFrame = df
-      .withColumn("distance",
-        round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d))
-      .select(col("query_id"), col("id"), col("distance"))
     def topN(df: DataFrame, score: String, n: Int): DataFrame =
       if (queries.size == 1) df.orderBy(col(score), col("id")).limit(n)
-      else graft.operators.TopK.perGroup(df, "query_id", score, "id", n)
-    val scored = approx match {
-      case None => exact(pairs)
-      case Some(a) =>
-        val cut = topN(a.select(col("query_id"), col("id"), col("approx")),
-          "approx", math.max(k, rescore)).select(col("query_id"), col("id"))
-        // a residual-pq fallback query has no LUT rows: EVERY candidate
-        // survives to the exact rescore
-        val survivors =
-          if (!residualPq || fallbackQs.isEmpty) cut
-          else cut.unionByName(pairs.where(col("query_id").isin(fallbackQs: _*))
-            .select(col("query_id"), col("id")))
-        // ONE exact-rescore join touching O(Q x R) embedding rows
-        exact(scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id")))
-    }
-    val top = topN(scored, "distance", k).withColumnRenamed("id", "chunk_id")
-    if (queries.size == 1) top
-    else top.orderBy(col("query_id"), col("distance"), col("chunk_id"))
+      else TopK.perGroup(df, "query_id", score, "id", n)
+    val cut = topN(approx.select(col("query_id"), col("id"), col("approx")),
+      "approx", math.max(k, rescore)).select(col("query_id"), col("id"))
+    // a residual-pq fallback query has no LUT rows: EVERY candidate
+    // survives to the exact rescore
+    val survivors =
+      if (!residualPq || fallbackQs.isEmpty) cut
+      else cut.unionByName(pairs.where(col("query_id").isin(fallbackQs: _*))
+        .select(col("query_id"), col("id")))
+    // ONE exact-rescore join touching O(Q x R) embedding rows
+    topN(scoped.select(col("id"), col("embedding"))
+      .join(broadcast(survivors), Seq("id"))
+      .join(broadcast(qDf), Seq("query_id"))
+      .withColumn("distance",
+        round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d))
+      .select(col("query_id"), col("id"), col("distance")), "distance", k)
   }
 
   /** HYBRID retrieval at the facade — BM25 lexical ranking over the
@@ -2364,9 +2409,9 @@ final class VectorEngine private (val spark: SparkSession,
     val base = s"$dir/$version"
     val libsRaw = spark.read.parquet(s"$base/libraries.parquet")
     // pre-sq8 state dirs have no storage column: everything was float32
-    libs = (if (libsRaw.columns.contains("storage")) libsRaw
-            else libsRaw.withColumn("storage", lit(StorageFloat32)))
-      .as[LibraryRow]
+    setLibs((if (libsRaw.columns.contains("storage")) libsRaw
+             else libsRaw.withColumn("storage", lit(StorageFloat32)))
+      .as[LibraryRow].collect().toSeq)
     docs = spark.read.parquet(s"$base/documents.parquet").as[DocumentRow]
     chunks = readChunksTable(dir)
     matrices = spark.read.parquet(s"$base/matrices.parquet").as[MatrixRow]
@@ -2400,7 +2445,7 @@ final class VectorEngine private (val spark: SparkSession,
     lastSaveDir = Some(dir)
     lastSaveHadChunks = !chunks.isEmpty
     dirtyLibs = Set.empty
-    val allLibs = libs.collect()
+    val allLibs = libRows
     // Histogram index metadata: read the persisted table when present.
     // Every bucketed library gets an entry — hists membership is what
     // marks a library's histogram as maintained — and one with no rows in
@@ -2454,7 +2499,7 @@ final class VectorEngine private (val spark: SparkSession,
     * metadata); call this to heal a state dir produced or modified outside
     * the engine. One narrow projection — no shuffle. */
   def rebuildIndexKeys(): Unit = {
-    val allLibs = libs.collect()
+    val allLibs = libRows
     val idxLibs = allLibs.filter(bucketed)
     if (idxLibs.nonEmpty) {
       val bucketCol = idxLibs.foldLeft(lit(null).cast("long")) { (acc, l) =>
@@ -2528,7 +2573,7 @@ final class VectorEngine private (val spark: SparkSession,
     * Requires an empty engine (migration is whole-store; partial merges
     * would need id-conflict policy the reference has no answer for). */
   def importReferenceStore(dir: String): ReferenceStore.ImportSummary = {
-    if (!libs.isEmpty)
+    if (libRows.nonEmpty)
       throw ConflictError("importReferenceStore requires an empty engine")
     val root = Paths.get(dir)
     for (sub <- Seq("libraries", "documents", "chunks", "indexes"))
@@ -2711,10 +2756,9 @@ final class VectorEngine private (val spark: SparkSession,
     // aggregates prune the metadata column), and a failed import must
     // leave the engine exactly as it was — empty — not partially
     // hydrated.
-    val newLibs = libsRaw.toDS().localCheckpoint()
     val newDocs = docsAssembled.localCheckpoint()
     val newChunks = chunksAssembled.localCheckpoint()
-    libs = newLibs
+    setLibs(libsRaw)
     docs = newDocs
     chunks = newChunks
     matrices ++= sidecars.map { case (lid, sc) =>

@@ -66,13 +66,15 @@ case class PartialTopKExec(grouping: Seq[Expression], order: Seq[SortOrder], k: 
     copy(child = newChild)
 }
 
-/** Plans [[PartialTopK]]. [[graft.operators.TopK.perGroup]] installs it
-  * on the frame's session, so sessions built without [[GraftExtensions]]
-  * (Verify, Bench, the tests) plan the node too. */
-object PartialTopKStrategy extends SparkStrategy {
+/** Plans [[PartialTopK]] and [[VectorTopK]]. [[graft.operators.TopK]]
+  * installs it on the frame's session, so sessions built without
+  * [[GraftExtensions]] (Verify, Bench, the tests) plan the nodes too. */
+object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PartialTopK(grouping, order, k, child) =>
       PartialTopKExec(grouping, order, k, planLater(child)) :: Nil
+    case VectorTopK(queries, metric, k, input, output, child) =>
+      VectorTopKExec(queries, metric, k, input, output, planLater(child)) :: Nil
     case _ => Nil
   }
 

@@ -863,14 +863,15 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("a 2-query flat and a 2-query ivf searchBatch collect in at most " +
-    "5 jobs (one query_id exchange per top-n cut), equal to brute force") {
+    "2 jobs (the scoring stage, then the merge collected by " +
+    "TakeOrderedAndProject), equal to brute force") {
     val (e, lib, _) = freshWithData()
     val (ei, libI, _) = freshWithData("ivf")
     ei.setIvfCentroids(libI, twoCells)
     val qs = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 0.9, 0.1, 0))
     Seq("flat" -> (e, lib), "ivf" -> (ei, libI)).foreach { case (name, (eng, l)) =>
       val (got, jobs) = jobsOf(s"batch-$name")(byQuery(eng.searchBatch(l, qs, 2)))
-      assert(jobs <= 5, s"$name batch launched $jobs jobs")
+      assert(jobs <= 2, s"$name batch launched $jobs jobs")
       qs.foreach { case (qid, q) =>
         assert(got(qid) == bruteForce(eng, l, q, 2), s"$name query=$qid")
       }
@@ -1105,7 +1106,7 @@ class EngineSpec extends AnyFunSuite {
   test("no-arg save() after open(spark, dir) writes back to the OPENED " +
     "dir, not the global default state dir") {
     val (e, lib, doc) = freshWithData()
-    val dir = java.nio.file.Files.createTempDirectory("graft-saveback").toString
+    val dir = graft.operators.Scratch.newDir("saveback").toString
     e.save(dir)
     val e2 = VectorEngine.open(spark, dir)
     val d2 = e2.listDocuments(lib).items.head.id
@@ -1162,7 +1163,7 @@ class EngineSpec extends AnyFunSuite {
     assert(codes("p2") == Seq(1, 1) && codes("p3") == Seq(1, 1))
     // save -> reopen -> search: codebooks persist as index metadata and
     // the funnel (ADC over stored codes + exact rescore) still ranks
-    val state = java.nio.file.Files.createTempDirectory("graft-pq-life").toString
+    val state = graft.operators.Scratch.newDir("pq-life").toString
     e.save(state)
     val e2 = VectorEngine.open(spark, state)
     val got = e2.search("pql", Seq(1f, 0f, 1f, 0f), k = 2).collect()
@@ -1209,8 +1210,7 @@ class EngineSpec extends AnyFunSuite {
         assert(norms(id).contains(
           graft.operators.ProductQuantization.normLocal(v)))
       }
-      val state = java.nio.file.Files
-        .createTempDirectory(s"graft-pq-$metric").toString
+      val state = graft.operators.Scratch.newDir(s"pq-$metric").toString
       e.save(state)
       val e2 = VectorEngine.open(spark, state)
       val q = Seq(1f, 0f, 0.9f, 0.1f)
@@ -1299,8 +1299,7 @@ class EngineSpec extends AnyFunSuite {
         graft.operators.ProductQuantization.encodeLocal(model2, resid))
     }
     // save -> reopen -> funnel search; and batch == single
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-resid").toString
+    val state = graft.operators.Scratch.newDir("ivfpq-resid").toString
     e.save(state)
     val e2 = VectorEngine.open(spark, state)
     val q = Seq(1f, 0f, 1f, 0f)
@@ -2180,6 +2179,6 @@ class EngineSpec extends AnyFunSuite {
 
   private object Files {
     def tmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
+      graft.operators.Scratch.newDir(prefix).toString
   }
 }

@@ -71,7 +71,7 @@ class ModelCheckSpec extends AnyFunSuite {
     (0 until 300).foreach { step =>
       if (step == reopenAt) {
         // persistence under an arbitrary history: save, reopen, continue
-        val dir = java.nio.file.Files.createTempDirectory("graft-walk").toString
+        val dir = graft.operators.Scratch.newDir("walk").toString
         e.save(dir)
         e = VectorEngine.open(spark, dir)
       }

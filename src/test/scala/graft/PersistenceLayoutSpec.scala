@@ -59,7 +59,7 @@ class PersistenceLayoutSpec extends AnyFunSuite {
       indexKind = VectorEngine.IndexKindLsh, lshProjections = 8)
     val doc = e.createDocument(lib.id, "d")
     e.addChunksDf(lib.id, synthBatch(n, 8, doc.id, "c"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-lsh").toString
+    val dir = graft.operators.Scratch.newDir("layout-lsh").toString
     saveSmallRowGroups(e, dir)
     val e2 = VectorEngine.open(spark, dir)
 
@@ -97,7 +97,7 @@ class PersistenceLayoutSpec extends AnyFunSuite {
     })
     val doc = e.createDocument(lib.id, "d")
     e.addChunksDf(lib.id, synthBatch(n, 8, doc.id, "v"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-ivf").toString
+    val dir = graft.operators.Scratch.newDir("layout-ivf").toString
     saveSmallRowGroups(e, dir)
     val e2 = VectorEngine.open(spark, dir)
 
@@ -119,7 +119,7 @@ class PersistenceLayoutSpec extends AnyFunSuite {
       indexKind = VectorEngine.IndexKindLsh, lshProjections = 8)
     val doc = e.createDocument(lib.id, "d")
     e.addChunksDf(lib.id, synthBatch(500, 8, doc.id, "h"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-heal").toString
+    val dir = graft.operators.Scratch.newDir("layout-heal").toString
     e.save(dir)
     val e2 = VectorEngine.open(spark, dir)
     val stored = e2.chunksDf.select("id", "bucket").collect()

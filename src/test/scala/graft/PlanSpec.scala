@@ -307,7 +307,7 @@ class PlanSpec extends AnyFunSuite {
     // materialize the encoded table — the ingest-time shape (the oracle
     // query encodes on the fly, which necessarily reads the embeddings;
     // at scale codes are stored like the LSH bucket / IVF cell columns)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sq8").toString
+    val tmp = graft.operators.Scratch.newDir("sq8").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     graft.operators.Quantization.encode(emb, col("embedding"))
       .select("vec_id", "embedding", "qmin", "qmax", "codes")
@@ -334,7 +334,7 @@ class PlanSpec extends AnyFunSuite {
     "the packed int words (1/32 the float32 bytes); rescore is a " +
     "broadcast semi-join touching R rows") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bqplan").toString
+    val tmp = graft.operators.Scratch.newDir("bqplan").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     emb.withColumn("codes", graft.operators.BinaryQuantization
         .encodeWordsInt(col("embedding"), 64))
@@ -361,7 +361,7 @@ class PlanSpec extends AnyFunSuite {
     "pq_codes (numSub bytes-ish per row, not dim x 4); rescore is a " +
     "broadcast semi-join") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val tmp = graft.operators.Scratch.newDir("pq").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val model = graft.queries.AnnQueries.fixturePqModel(spark)
     graft.operators.ProductQuantization.encode(emb, col("embedding"), model)
@@ -385,7 +385,7 @@ class PlanSpec extends AnyFunSuite {
     "scans only pq_codes + cell (never the embedding), the per-cell LUT " +
     "frame is a broadcast hash join, rescore is a broadcast semi-join") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-plan").toString
+    val tmp = graft.operators.Scratch.newDir("ivfpq-plan").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val cents = graft.queries.AnnQueries.fixtureCentroids(spark)
     val model = graft.queries.AnnQueries.fixturePqResidualModel(spark)
@@ -513,10 +513,8 @@ class PlanSpec extends AnyFunSuite {
       case p => p
     }
 
-  /** Each task cuts its rows to k per query BEFORE any shuffle on the
-    * query key: every exchange hashing on query_id has a PartialTopK below
-    * it, so the merge moves at most tasks x queries x k rows. (Exchanges
-    * exist only after AQE's preparation rules, hence `executedPlan`.) */
+  /** The plan as AQE's preparation rules leave it: the exchanges they
+    * insert are present, the stages not yet run. */
   private def adaptiveFinal(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.execution.SparkPlan =
     df.queryExecution.executedPlan match {
@@ -525,6 +523,10 @@ class PlanSpec extends AnyFunSuite {
       case p => p
     }
 
+  /** Each task cuts its rows to k per query BEFORE any shuffle on the
+    * query key: every exchange hashing on query_id has a per-task top-k
+    * (PartialTopK over scored rows, or VectorTopK scoring inside its heaps)
+    * below it, so the merge moves at most tasks x queries x k rows. */
   private def partialTopKBelowQueryExchanges(df: org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val p = adaptiveFinal(df)
@@ -533,37 +535,51 @@ class PlanSpec extends AnyFunSuite {
         if e.outputPartitioning.toString.startsWith("hashpartitioning(query_id") => e
     }
     assert(exchanges.nonEmpty, p.toString)
-    exchanges.foreach(e =>
-      assert(e.child.exists(_.isInstanceOf[graft.plans.PartialTopKExec]), p.toString))
+    exchanges.foreach(e => assert(e.child.exists {
+      case _: graft.plans.PartialTopKExec | _: graft.plans.VectorTopKExec => true
+      case _ => false
+    }, p.toString))
   }
 
-  test("one-query search: the top-k is ONE TakeOrderedAndProject — no " +
-    "per-query top-k, no shuffle on query_id; a two-query batch runs " +
-    "PartialTopK below its query_id exchange") {
-    val e = axisEngine(VectorEngine.IndexKindFlat)
+  test("one-query search: the top-k is ONE TakeOrderedAndProject over " +
+    "VectorTopK, no shuffle on query_id; a two-query flat or ivf batch " +
+    "scores in one VectorTopK below its query_id exchange, with no " +
+    "broadcast, nested loop or range sort") {
+    import graft.plans.VectorTopKExec
     val q = Seq(1f, 0.2f, 0f, 0f)
-    val single = e.search("axes", q, 2).queryExecution.executedPlan.toString
-    assert(single.contains("TakeOrderedAndProject"), single)
+    val flat = axisEngine(VectorEngine.IndexKindFlat)
+    val single = flat.search("axes", q, 2).queryExecution.executedPlan.toString
+    assert("TakeOrderedAndProject".r.findAllIn(single).size == 1, single)
+    assert("VectorTopK".r.findAllIn(single).size == 1, single)
     assert(!single.contains("WindowGroupLimit"), single)
     assert(!single.contains("PartialTopK"), single)
     assert(!single.contains("hashpartitioning(query_id"), single)
-    partialTopKBelowQueryExchanges(
-      e.searchBatch("axes", Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 0f)), 2))
+    Seq(flat, axisEngine(VectorEngine.IndexKindIvf)).foreach { e =>
+      val df = e.searchBatch("axes", Seq(0L -> q, 1L -> Seq(0f, 1f, 0f, 0f)), 2)
+      val p = adaptiveFinal(df)
+      assert(p.collect { case v: VectorTopKExec => v }.size == 1, p.toString)
+      partialTopKBelowQueryExchanges(df)
+      val s = p.toString
+      Seq("BroadcastNestedLoopJoin", "BroadcastExchange", "rangepartitioning")
+        .foreach(node => assert(!s.contains(node), s"$node in\n$s"))
+      assert(s.contains("TakeOrderedAndProject"), s)
+      assert(df.collect().map(_.getString(1)).toSeq == Seq("b0", "a0", "a1", "b1"))
+    }
   }
 
   test("TopK.perGroup plans and answers in a fresh session without " +
     "GraftExtensions; installing twice keeps one strategy; planning keeps " +
     "no reference to the session") {
     import org.apache.spark.sql.SparkSession
-    import graft.plans.{PartialTopKExec, PartialTopKStrategy}
+    import graft.plans.{PartialTopKExec, TopKStrategy}
     def planned(fresh: SparkSession) = {
       import fresh.implicits._
-      assert(!fresh.experimental.extraStrategies.contains(PartialTopKStrategy))
+      assert(!fresh.experimental.extraStrategies.contains(TopKStrategy))
       val df = Seq((0L, 3.0, 1L), (0L, 1.0, 2L), (0L, 2.0, 3L), (1L, 5.0, 4L))
         .toDF("g", "d", "id")
       graft.operators.TopK.perGroup(df, "g", "d", "id", 2)
       val top = graft.operators.TopK.perGroup(df, "g", "d", "id", 2)
-      assert(fresh.experimental.extraStrategies.count(_ eq PartialTopKStrategy) == 1)
+      assert(fresh.experimental.extraStrategies.count(_ eq TopKStrategy) == 1)
       assert(physical(top).exists(_.isInstanceOf[PartialTopKExec]))
       top
     }
@@ -582,33 +598,34 @@ class PlanSpec extends AnyFunSuite {
     assert(session.get == null, "a process-level structure keeps the session alive")
   }
 
-  test("one-query ivf search: the probe side is a driver-built local " +
-    "relation — no join under the broadcast") {
-    import org.apache.spark.sql.catalyst.optimizer.BuildRight
-    import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
-    def probeSide(df: org.apache.spark.sql.DataFrame) = {
-      val joins = physical(df).collect { case j: BroadcastHashJoinExec => j }
-      assert(joins.size == 1, physical(df).toString)
-      val j = joins.head
-      val side = if (j.buildSide == BuildRight) j.right else j.left
-      assert(side.collect { case j: BaseJoinExec => j }.isEmpty, side.toString)
-      assert(side.collect { case g: GenerateExec => g }.isEmpty, side.toString)
-      assert(side.collect { case l: LocalTableScanExec => l }.nonEmpty, side.toString)
+  test("one-query ivf and lsh search: the probe plan rides in VectorTopK " +
+    "over one chunk scan — no join, no broadcast; a reopened store's scan " +
+    "carries the pushed bucket filter") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.plans.VectorTopKExec
+    def probed(df: org.apache.spark.sql.DataFrame) = {
+      val p = adaptiveFinal(df)
+      assert(p.collect { case j: BaseJoinExec => j }.isEmpty, p.toString)
+      assert(p.collect { case b: BroadcastExchangeExec => b }.isEmpty, p.toString)
+      val nodes = p.collect { case v: VectorTopKExec => v }
+      assert(nodes.size == 1, p.toString)
+      assert(nodes.head.queries.probes.nonEmpty && nodes.head.queries.fallback.isEmpty,
+        nodes.head.queries.toString)
     }
     val e = axisEngine(VectorEngine.IndexKindIvf)
     val df = e.search("axes", Seq(1f, 0.2f, 0f, 0f), 2, nprobeOpt = Some(1))
-    probeSide(df)
+    probed(df)
     assert(df.collect().map(_.getString(0)).toSeq == Seq("b0", "a0"))
     // the single-bucket and Hamming-1 LSH probes take the same path: on a
     // reopened store the chunk scan carries the pushed bucket filter
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-planspec-lsh").toString
+    val stateDir = graft.operators.Scratch.newDir("planspec-lsh").toString
     axisEngine(VectorEngine.IndexKindLsh).save(stateDir)
     val lsh = VectorEngine.open(spark, stateDir)
     Seq(VectorEngine.ProbeSingle, VectorEngine.ProbeMulti).foreach { mode =>
       val ldf = lsh.search("axes", Seq(1f, 0f, 0f, 0f), 1, probe = mode)
-      probeSide(ldf)
+      probed(ldf)
       val pushed = physical(ldf).collect { case s: FileSourceScanExec => s }
         .map(_.metadata("PushedFilters"))
       assert(pushed.exists(_.contains("In(bucket")), s"$mode: $pushed")
@@ -617,7 +634,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("reopened engine scans partition-prune to the searched library") {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-planspec").toString
+    val stateDir = graft.operators.Scratch.newDir("planspec").toString
     val e = VectorEngine.create(spark)
     val lib = e.createLibrary("a", dim = 2, id = Some("libA"))
     val lib2 = e.createLibrary("b", dim = 2, id = Some("libB"))

@@ -342,6 +342,56 @@ object PropertySpec extends Properties("graft") {
     }
   }
 
+  property("VectorTopK == the unfused plan (cross join, round(distance, 6) " +
+    "+ 0.0, row_number window) on tied vectors, zero norms, NaN, -0.0, k > " +
+    "rows, probed/fallback/mixed queries, every metric") = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.plans.QueryProbes
+    val strIds = Seq("a", "b", "\uE000", "\uD83D\uDE00", "\uFFFF", "z")
+    val comp = Gen.frequency(4 -> Gen.oneOf(0f, 1f, -1f, 0.5f), 1 -> Gen.chooseNum(-1f, 1f))
+    val vec3 = Gen.listOfN(3, comp).map(_.toSeq)
+    // a small pool, so rows repeat vectors and tie on distance; the zero
+    // vector scores +Inf under cosine, the NaN one NaN under every metric
+    val pool = Gen.listOfN(3, vec3).map(_ ++ Seq(Seq(0f, 0f, 0f), Seq(1f, Float.NaN, 0f)))
+    val bucket = Gen.frequency(6 -> Gen.chooseNum(0L, 2L).map(Some(_)), 1 -> Gen.const(None))
+    // None: a fallback query; Some(buckets): a probed one
+    val probe = Gen.oneOf(Gen.const(None),
+      Gen.nonEmptyListOf(Gen.chooseNum(0L, 3L)).map(bs => Some(bs.distinct)))
+    val input = for {
+      vs <- pool
+      rows <- Gen.listOfN(24, Gen.zip(Gen.chooseNum(0, vs.size - 1), bucket))
+      qs <- Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, Gen.zip(Gen.oneOf(vs), probe)))
+      // mostly a cut that splits tied rows, sometimes k > rows
+      k <- Gen.frequency(3 -> Gen.chooseNum(1, 10), 1 -> Gen.chooseNum(25, 30))
+      metric <- Gen.oneOf("cosine", "euclidean", "dot_product")
+    } yield (vs, rows, qs, k, metric)
+    // no shrinking: a shrunk metric name is no metric
+    org.scalacheck.Prop.forAllNoShrink(input) { case (vs, rows, qs, k, metric) =>
+      val data = rows.zipWithIndex.map { case ((v, b), i) =>
+        (strIds(i % strIds.size) + (i / strIds.size), vs(v), b)
+      }
+      val frame = spark.sparkContext.parallelize(data, 3).toDF("id", "embedding", "bucket")
+      val plan = QueryProbes(qs.zipWithIndex.map { case ((q, _), i) => i * 10L -> q.toArray },
+        qs.zipWithIndex.flatMap { case ((_, p), i) => p.map(i * 10L -> _) })
+      val scan = if (plan.probes.isEmpty) frame.select("id", "embedding") else frame
+      def bits(out: org.apache.spark.sql.DataFrame) =
+        out.select("query_id", "id", "distance").collect()
+          .map(r => (r.getLong(0), r.getString(1),
+            java.lang.Double.doubleToLongBits(r.getDouble(2))))
+          .toSeq.sorted
+      val got = bits(graft.operators.TopK.nearest(scan, plan, metric, k))
+      val queries = qs.zipWithIndex.map { case ((q, p), i) => (i.toLong * 10, q, p.orNull) }
+        .toDF("query_id", "qvec", "probe")
+      val w = Window.partitionBy(col("query_id")).orderBy(col("distance"), col("id"))
+      val expect = bits(frame.crossJoin(queries)
+        .where(col("probe").isNull || array_contains(col("probe"), col("bucket")))
+        .withColumn("distance",
+          round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d))
+        .withColumn("rn", row_number().over(w)).where(col("rn") <= k))
+      got == expect
+    }
+  }
+
   property("as-of join == per-row brute-force latest-at-or-before") = {
     import graft.operators.AsOfJoin
     val tsGen = Gen.chooseNum(0L, 40L)

@@ -100,7 +100,7 @@ class ReferenceImportSpec extends AnyFunSuite {
     val qv = e.chunksDf.where(col("library_id") === flatLib)
       .orderBy("chunk_index", "id").select("embedding").head().getSeq[Float](0)
     val before = e.search(flatLib, qv, k = 10).collect().toSeq
-    val dir = Files.createTempDirectory("graft-import-spec").toString
+    val dir = graft.operators.Scratch.newDir("import-spec").toString
     e.save(dir)
     val e2 = VectorEngine.open(spark, dir)
     val after = e2.search(flatLib, qv, k = 10).collect().toSeq
@@ -180,7 +180,7 @@ class ReferenceImportSpec extends AnyFunSuite {
     e.addChunksBatch(d2.id, Seq(
       ChunkInput("gamma", Seq(0f, 1f, 0f, 0f), Map("page_str" -> "1"), 0, Some("x2")),
       ChunkInput("delta", Seq(0f, 0f, 1f, 0.25f), Map.empty, 1, Some("x3"))))
-    val out = Files.createTempDirectory("graft-export-spec").toString
+    val out = graft.operators.Scratch.newDir("export-spec").toString
     e.exportReferenceStore(out)
     val e2 = VectorEngine.create(spark)
     val sum = e2.importReferenceStore(out)
@@ -244,7 +244,7 @@ class ReferenceImportSpec extends AnyFunSuite {
           case _ => ()
         }
       }
-      val out = Files.createTempDirectory(s"graft-walk$seed").toString
+      val out = graft.operators.Scratch.newDir(s"walk$seed").toString
       e.exportReferenceStore(out)
       val e2 = VectorEngine.create(spark)
       e2.importReferenceStore(out)
@@ -276,7 +276,7 @@ class ReferenceImportSpec extends AnyFunSuite {
       col("vec_id").cast("int").as("chunk_index")))
     val n = e.chunkCount(lib.id)
     assert(n == 500, s"expected the sf0.001 embeddings table (500), got $n")
-    val out = Files.createTempDirectory("graft-bulk-export").toString
+    val out = graft.operators.Scratch.newDir("bulk-export").toString
     val sum = e.exportReferenceStore(out)
     assert(sum.chunks == n)
     val e2 = VectorEngine.create(spark)
@@ -297,7 +297,7 @@ class ReferenceImportSpec extends AnyFunSuite {
     e.setIvfCentroids(lib.id, Seq(0L -> Seq(1f, 0f, 0f, 0f), 1L -> Seq(0f, 1f, 0f, 0f)))
     val d = e.createDocument(lib.id, "d")
     e.addChunk(d.id, ChunkInput("a", Seq(1f, 0f, 0f, 0f), id = Some("v0")))
-    val out = Files.createTempDirectory("graft-export-ivf").toString
+    val out = graft.operators.Scratch.newDir("export-ivf").toString
     e.exportReferenceStore(out)
     val e2 = VectorEngine.create(spark)
     e2.importReferenceStore(out)
@@ -309,12 +309,12 @@ class ReferenceImportSpec extends AnyFunSuite {
 
   test("npy writer round-trips through the reader: f4 vectors widen " +
     "exactly, f8 projection matrices survive double-exact") {
-    val p4 = Files.createTempFile("npy-w4", ".npy")
+    val p4 = graft.operators.Scratch.newDir("npy-w4").resolve("npy-w4.npy")
     val data = Seq(Array(1.5f, -2f, 3f), Array(0.25f, 0f, -0.125f))
     assert(ReferenceStore.writeNpy(p4, data.iterator, 3) == 2L)
     assert(ReferenceStore.readNpyMatrix(p4).map(_.toSeq).toSeq ==
       data.map(_.map(_.toDouble).toSeq))
-    val p8 = Files.createTempFile("npy-w8", ".npy")
+    val p8 = graft.operators.Scratch.newDir("npy-w8").resolve("npy-w8.npy")
     // a double that does NOT fit float32 exactly must survive — this is
     // why the exported projection sidecar is written <f8
     val m = Seq(Array(0.1d, -1.0000000001d), Array(2.5d, 3.75d))
@@ -327,7 +327,7 @@ class ReferenceImportSpec extends AnyFunSuite {
     "leaves the engine empty — never partially hydrated") {
     // minimal store with one chunk whose metadata holds a JSON array —
     // a value the reference's Metadata type cannot contain
-    val bad = Files.createTempDirectory("graft-badstore")
+    val bad = graft.operators.Scratch.newDir("badstore")
     for (sub <- Seq("libraries", "documents", "chunks", "indexes"))
       Files.createDirectories(bad.resolve(sub))
     Files.writeString(bad.resolve("libraries/L1.json"),
@@ -385,7 +385,7 @@ class ReferenceImportSpec extends AnyFunSuite {
 
   test("import validates entity timestamps up front: a document or chunk " +
     "with a missing/unparseable created_at fails loudly AT IMPORT") {
-    val bad = Files.createTempDirectory("graft-badts")
+    val bad = graft.operators.Scratch.newDir("badts")
     for (sub <- Seq("libraries", "documents", "chunks", "indexes"))
       Files.createDirectories(bad.resolve(sub))
     Files.writeString(bad.resolve("libraries/L1.json"),
@@ -425,7 +425,7 @@ class ReferenceImportSpec extends AnyFunSuite {
 
   test("a corrupt LSH sidecar listing one chunk in two buckets fails " +
     "with a SIDECAR error, not a misdirected duplicate-chunk-ids error") {
-    val bad = Files.createTempDirectory("graft-badsidecar")
+    val bad = graft.operators.Scratch.newDir("badsidecar")
     for (sub <- Seq("libraries", "documents", "chunks", "indexes"))
       Files.createDirectories(bad.resolve(sub))
     Files.writeString(bad.resolve("libraries/L1.json"),
@@ -480,7 +480,7 @@ class ReferenceImportSpec extends AnyFunSuite {
       .putShort(full.length.toShort)
       .put(full.getBytes("US-ASCII"))
     Seq(1.5f, -2.25f, 3f, 0f, 42f, -0.5f).foreach(bb.putFloat)
-    val p = Files.createTempFile("npy-spec", ".npy")
+    val p = graft.operators.Scratch.newDir("npy-spec").resolve("npy-spec.npy")
     Files.write(p, bb.array())
     val m = ReferenceStore.readNpyMatrix(p)
     assert(m.map(_.toSeq).toSeq ==

@@ -14,7 +14,7 @@ class SettingsSpec extends AnyFunSuite {
   private def vec(xs: Double*): Seq[Float] = xs.map(_.toFloat)
 
   private def writeEnvFile(lines: String*): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempFile("graft-env", ".env")
+    val p = graft.operators.Scratch.newDir("env").resolve("settings.env")
     java.nio.file.Files.writeString(p, lines.mkString("\n"))
     p
   }
@@ -83,7 +83,7 @@ class SettingsSpec extends AnyFunSuite {
   test("boot(): disk storage creates fresh when the state dir is empty, " +
     "REOPENS it when it holds saved state; save() writes to the " +
     "configured dir (config.py storage_type/data_dir + ensure_data_dir)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-boot").toString
+    val dir = graft.operators.Scratch.newDir("boot").toString
     val opts = Map(
       GraftSettings.EnvStorageType -> GraftSettings.StorageDisk,
       GraftSettings.EnvStateDir -> dir)

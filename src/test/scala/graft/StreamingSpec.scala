@@ -46,7 +46,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsertBatch is idempotent on event_id (at-least-once -> no dupes)") {
-    val sink = java.nio.file.Files.createTempDirectory("graft-sink").toString + "/events"
+    val sink = graft.operators.Scratch.newDir("sink").toString + "/events"
     StreamingIngest.upsertBatch(events, sink)
     StreamingIngest.upsertBatch(events, sink) // redelivery
     val extra = Seq((4L, ts("2026-01-01 12:00:00"), 3L, "click", 4.0, "{}"),
@@ -166,7 +166,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("upsert anti-join reads ONLY the batch's date partitions " +
     "(bounded re-read on an unbounded sink)") {
-    val sink = java.nio.file.Files.createTempDirectory("graft-sink-pruned")
+    val sink = graft.operators.Scratch.newDir("sink-pruned")
       .toString + "/events"
     def batch(rows: Seq[(Long, Timestamp, Long, String, Double, String)]) =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -211,7 +211,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamDf = mem.toDF()
       .toDF("id", "document_id", "text", "embedding", "chunk_index")
       .withColumn("metadata", typedLit(Map.empty[String, String]))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-gated-ckpt").toString
+    val ckpt = graft.operators.Scratch.newDir("gated-ckpt").toString
     val q = StreamingIngest.startDedupGatedChunkIngest(
       e, "glib", streamDf, threshold = 0.05, ckpt)
     try {
@@ -305,8 +305,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.chunkCount("blib") == 5)
     // persistence: the filter survives save/open beside the other index
     // models — the reopened engine still gates without re-enabling
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-bloom-state").toString
+    val state = graft.operators.Scratch.newDir("bloom-state").toString
     e.save(state)
     val re = VectorEngine.open(spark, state)
     val bs = re.bloomGateState("blib")
@@ -365,7 +364,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamDf = mem.toDF()
       .toDF("id", "document_id", "text", "embedding", "chunk_index")
       .withColumn("metadata", typedLit(Map.empty[String, String]))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rec-ckpt").toString
+    val ckpt = graft.operators.Scratch.newDir("rec-ckpt").toString
     val q1 = StreamingIngest.startDedupGatedChunkIngest(
       e, "rlib", streamDf, threshold = 0.05, ckpt)
     try {
@@ -417,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(String, String, String, Seq[Float], Int)]
     val streamDf = mem.toDF()
       .toDF("id", "document_id", "text", "embedding", "chunk_index")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chunk-ckpt").toString
+    val ckpt = graft.operators.Scratch.newDir("chunk-ckpt").toString
     val q = streamDf.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -469,7 +468,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamDf = mem.toDF()
       .toDF("id", "document_id", "text", "embedding", "chunk_index")
       .withColumn("metadata", typedLit(Map.empty[String, String]))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cur-ckpt").toString
+    val ckpt = graft.operators.Scratch.newDir("cur-ckpt").toString
     val q = StreamingIngest.startCurationGatedChunkIngest(
       e, "clib", streamDf, threshold = 0.05, benchGrams, n = 3, ckpt)
     try {
@@ -518,7 +517,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamDf = mem.toDF()
       .toDF("id", "document_id", "text", "embedding", "chunk_index")
       .withColumn("metadata", typedLit(Map.empty[String, String]))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dsir-ckpt").toString
+    val ckpt = graft.operators.Scratch.newDir("dsir-ckpt").toString
     val q = StreamingIngest.startDsirGatedChunkIngest(
       e, "dlib", streamDf, threshold = 0.05, model, B, minLogweight = 0.0, ckpt)
     try {
@@ -559,7 +558,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamDf = mem.toDF()
       .toDF("id", "document_id", "text", "embedding", "chunk_index")
       .withColumn("metadata", typedLit(Map.empty[String, String]))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-qcur-ckpt").toString
+    val ckpt = graft.operators.Scratch.newDir("qcur-ckpt").toString
     val q = StreamingIngest.startCurationGatedChunkIngest(
       e, "qlib", streamDf, threshold = 0.05, benchGrams, n = 3, ckpt,
       qualityMin = 0.5, maxDupNgramFrac = 0.5)

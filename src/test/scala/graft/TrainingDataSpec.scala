@@ -257,7 +257,7 @@ class TrainingDataSpec extends AnyFunSuite {
     val packed = TrainingData.packAssignments(rows.toDF("id", "n"),
       col("id"), col("n"), budget = 16L, shards = 4)
     val seqRows = TrainingData.sequenceRows(packed, budget = 16L)
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = graft.operators.Scratch.newDir("shards").toString
     val m1 = TrainingData.writeShards(seqRows, s"$dir/a", seqsPerShard = 4,
       maxRecordsPerFile = 10).orderBy("shard")
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -311,7 +311,7 @@ class TrainingDataSpec extends AnyFunSuite {
       j => s"t$i-$j")))
     val seqs = TrainingData.packedTokenSequences(docs.toDF("id", "toks"),
       col("id"), col("toks"), budget = 8L, shards = 2)
-    val dir = java.nio.file.Files.createTempDirectory("payload-shards")
+    val dir = graft.operators.Scratch.newDir("payload-shards")
       .toString
     val manifest = TrainingData.writeShards(seqs, dir, seqsPerShard = 3,
         tokenCol = "n_tokens")
