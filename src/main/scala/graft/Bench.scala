@@ -150,10 +150,10 @@ object Bench {
     // the ladder point; r100 is the storage="bq" FACADE DEFAULT
     // (VectorEngine.DefaultBqRescore), so that line is the gate the
     // default is justified by.
-    val bqEnc = graft.operators.BinaryQuantization
-      .withCodes(emb, col("embedding"), 64).localCheckpoint()
+    val bqEnc = emb.withColumn("codes", graft.operators.BinaryQuantization
+      .encodeWordsInt(col("embedding"), 64)).localCheckpoint()
     def bqRecall(r: Int): Double = avg(queries.map { case (id, q) =>
-      val got = topIds(graft.operators.BinaryQuantization.search(
+      val got = topIds(graft.operators.BinaryQuantization.searchStored(
         bqEnc, "embedding", "vec_id", q, k = 10, rescore = r,
         metric = "cosine"))
       (flatCos(id) intersect got).size.toDouble / flatCos(id).size

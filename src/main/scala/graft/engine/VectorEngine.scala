@@ -4,10 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.functions.{MetadataFunctions, VectorExpressions}
-import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, TopK, TrainingData}
+import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, TrainingData, VectorSearch}
 import graft.plans.QueryProbes
-import org.apache.spark.sql.catalyst.expressions.InSet
-import org.apache.spark.sql.graftshim.ColumnBridge
 import java.sql.Timestamp
 import java.nio.file.{Files, Paths}
 
@@ -1335,35 +1333,26 @@ final class VectorEngine private (val spark: SparkSession,
     * (query_id, distance, chunk_id). Query ids must be distinct. A filter
     * whose allow-set is empty yields no rows (vector_store.py:256-258).
     *
-    * Every index kind is a candidate generator; float32 storage scores
-    * exactly, every compact storage kind is an approximate score plus one
-    * exact rescore:
-    *   - lsh / ivf: each query's probe buckets (LSH buckets or IVF cells)
-    *     are computed on the driver and reach the scan as a bucket filter.
-    *     The reference's two-phase semantics hold per query: its candidate
-    *     count is the allow-set's bucket histogram summed over its probe
-    *     buckets, and a query with < k candidates scans the full allow-set
-    *     instead, so never fewer results than flat search. Unfiltered,
-    *     that histogram is the maintained index metadata (bucketHistogram
-    *     — no Spark job before the result job); filtered, it is the
-    *     adaptive probe's bounded allow-set aggregate, or one aggregate
-    *     restricted to the probed buckets;
+    * The index kind plans the probes, the storage kind picks the scorer,
+    * and [[graft.operators.VectorSearch.nearest]] — the one search body,
+    * shared with every operator search — runs them:
+    *   - lsh / ivf: each query's probe buckets (LSH buckets from
+    *     [[graft.operators.LshIndex.probes]], IVF cells from
+    *     [[graft.operators.IvfIndex.nearestCentroids]]) are computed on the
+    *     driver and reach the scan as a bucket filter. The reference's
+    *     two-phase semantics hold per query: its candidate count is the
+    *     allow-set's bucket histogram summed over its probe buckets, and a
+    *     query with < k candidates scans the full allow-set instead
+    *     ([[graft.operators.VectorSearch.probedWithK]]), so never fewer
+    *     results than flat search. Unfiltered, that histogram is the
+    *     maintained index metadata (bucketHistogram — no Spark job before
+    *     the result job); filtered, it is the adaptive probe's bounded
+    *     allow-set aggregate, or one aggregate restricted to the probed
+    *     buckets;
     *   - flat (and ivf before its centroid model): no probe, so every
-    *     query takes the fallback — every allow-set row;
-    *   - float32: ONE scan of the allow-set (of the probed buckets when no
-    *     query falls back) through [[graft.operators.TopK.nearest]]: each
-    *     task scores each row against the queries the probe plan assigns
-    *     it, inside one bounded heap of k per query, so no (query, row)
-    *     pair is materialized and the queries ride in the plan, not in a
-    *     broadcast;
-    *   - sq8 / bq / pq: top-R per query on the stored codes over the
-    *     (query, row) candidate pairs, then the exact distance of the R
-    *     survivors.
-    * Each top-n cut is a global ordered limit (TakeOrderedAndProject) for
-    * one query and per-task heaps merged after a hash exchange on the
-    * query (operators.TopK) for more, so no query's candidate set ever
-    * funnels through a single reduce slot. The final (query_id, distance,
-    * chunk_id) order is one TakeOrderedAndProject over the <= Q x k rows.
+    *     query takes the fallback — every allow-set row.
+    * The final (query_id, distance, chunk_id) order is one
+    * TakeOrderedAndProject over the <= Q x k rows.
     *
     * `probe` (LSH libraries): how wide the bucket probe goes.
     *   - ProbeAdaptive (DEFAULT): query-directed adaptive probing
@@ -1401,6 +1390,25 @@ final class VectorEngine private (val spark: SparkSession,
                   nprobeOpt: Option[Int] = None,
                   adaptiveMultiplier: Int = settings.adaptiveMultiplier,
                   rescoreOpt: Option[Int] = None): DataFrame = {
+    val ranked = nearestRows(libraryId, queries, k, filters, probe, nprobeOpt,
+      adaptiveMultiplier, rescoreOpt)
+    if (queries.size <= 1) ranked
+    else {
+      // at most Q x k rows by construction, so the limit drops nothing; it
+      // plans the sort as TakeOrderedAndProject, whose collect merges the
+      // per-partition cuts on the driver — no range sample, no exchange
+      ranked.orderBy(col("query_id"), col("distance"), col("chunk_id"))
+        .limit((queries.size.toLong * k).toInt)
+    }
+  }
+
+  /** [[searchBatch]]'s rows before its final order: (query_id, chunk_id,
+    * distance), top-k per query, unordered (in (distance, chunk_id) order
+    * for one query). */
+  private def nearestRows(libraryId: String, queries: Seq[(Long, Seq[Float])], k: Int,
+                          filters: Map[String, Any], probe: String,
+                          nprobeOpt: Option[Int], adaptiveMultiplier: Int,
+                          rescoreOpt: Option[Int]): DataFrame = {
     val lib = getLibrary(libraryId)
     // residual IVFPQ resolves WIDER defaults than its parts (see the
     // DefaultIvfPq* scaladoc): nprobe 6 + R 150 vs ivf's 4 / flat pq's 100
@@ -1428,8 +1436,6 @@ final class VectorEngine private (val spark: SparkSession,
         throw SearchError(
           s"query $qid dimension ${q.length} != library dimension ${lib.embedding_dimension}")
     }
-    val metric = lib.distance_metric
-    val pqModel = if (lib.storage == StoragePq) pqModels.get(libraryId) else None
     val metaPred = MetadataFunctions.filterPredicate(col("metadata"), filters)
     val scoped = chunks.where(col("library_id") === libraryId).where(metaPred)
       .toDF()
@@ -1447,22 +1453,10 @@ final class VectorEngine private (val spark: SparkSession,
     val probes: Seq[(Long, Seq[Long])] = lib.index_kind match {
       case IndexKindLsh =>
         val m = matrices(libraryId).matrix.map(_.toArray).toArray
-        val margins = queries.map { case (qid, q) => qid -> LshIndex.margins(m, q) }
-        // the query's bucket AND every Hamming-1 neighbor (P+1 distinct
-        // values — a chunk matches at most one probe per query, so no
-        // candidate duplicates)
-        def hamming1 = margins.map { case (qid, ms) =>
-          val b = LshIndex.bucketOf(ms)
-          qid -> (b +: m.indices.map(i => b ^ (1L << i)))
-        }
-        (probe, knownHist) match {
-          case (ProbeAdaptive, Some(hist)) =>
-            val target = math.max(k.toLong, k.toLong * adaptiveMultiplier)
-            margins.map { case (qid, ms) =>
-              qid -> LshIndex.probePrefix(hist.toSeq, LshIndex.bucketOf(ms), ms, target)
-            }
-          case (ProbeAdaptive | ProbeMulti, _) => hamming1
-          case _ => margins.map { case (qid, ms) => qid -> Seq(LshIndex.bucketOf(ms)) }
+        val target = math.max(k.toLong, k.toLong * adaptiveMultiplier)
+        queries.map { case (qid, q) =>
+          val ms = LshIndex.margins(m, q)
+          qid -> LshIndex.probes(probe, LshIndex.bucketOf(ms), m.length, knownHist, ms, target)
         }
       case IndexKindIvf if cellModels.contains(libraryId) =>
         queries.map { case (qid, q) =>
@@ -1470,165 +1464,21 @@ final class VectorEngine private (val spark: SparkSession,
         }
       case _ => Nil
     }
-    // The `< k` rule (see the scaladoc). A filtered probe with no known
-    // histogram counts its probed buckets with ONE aggregate, whose
-    // collect is bounded by their number.
-    val hist = knownHist.getOrElse(
-      if (probes.isEmpty) Map.empty[Long, Long]
-      else inBuckets(scoped, probes.flatMap(_._2)).groupBy("bucket").count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val probed = probes.filter(_._2.iterator.map(hist.getOrElse(_, 0L)).sum >= k)
-    val fallbackQs = queries.map(_._1).filterNot(probed.map(_._1).toSet)
-    val top =
-      if (lib.storage == StorageSq8 || lib.storage == StorageBq || pqModel.isDefined)
-        compactSearch(lib, queries, k, rescore, scoped, probed, fallbackQs, pqModel)
-      else {
-        // float32 (and a pq library with no codebooks yet) scores exactly,
-        // inside the per-task heaps: one scan of the allow-set, or of the
-        // probed buckets when no query falls back
-        val scan = if (fallbackQs.isEmpty) inBuckets(scoped, probed.flatMap(_._2)) else scoped
-        TopK.nearest(scan.select(Seq(col("id"), col("embedding")) ++
-            (if (probed.isEmpty) Nil else Seq(col("bucket"))): _*),
-          QueryProbes(queries.map { case (qid, q) => qid -> q.toArray }, probed), metric, k)
-      }
-    val ranked = top.withColumnRenamed("id", "chunk_id")
-    if (queries.size == 1) ranked
-    else {
-      // at most Q x k rows by construction, so the limit drops nothing; it
-      // plans the sort as TakeOrderedAndProject, whose collect merges the
-      // per-partition cuts on the driver — no range sample, no exchange
-      ranked.orderBy(col("query_id"), col("distance"), col("chunk_id"))
-        .limit((queries.size.toLong * k).toInt)
+    val scorer = (lib.storage, pqModels.get(libraryId)) match {
+      case (StorageSq8, _) => VectorSearch.Sq8(rescore)
+      case (StorageBq, _) => VectorSearch.Bq(rescore)
+      case (StoragePq, Some(model)) =>
+        if (residualPq)
+          VectorSearch.ResidualPq(model, cellModels.getOrElse(libraryId, Nil), rescore)
+        else VectorSearch.Pq(model, rescore)
+      // float32 (and a pq library with no codebooks yet) scores exactly
+      case _ => VectorSearch.Exact
     }
-  }
-
-  /** The stored bucket column restricted to a driver-known bucket set: a
-    * filter pushed to the scan, so a reopened store skips parquet row
-    * groups. An InSet, not `isin`: its generated code references the set
-    * instead of inlining each value, so searches with different probe sets
-    * share one compiled class. */
-  private def inBuckets(df: DataFrame, buckets: Iterable[Long]): DataFrame =
-    df.where(ColumnBridge.column(InSet(ColumnBridge.expression(col("bucket")),
-      buckets.toSet[Any])))
-
-  /** The sq8 / bq / pq leg of [[searchBatch]]: top-R per query on the
-    * stored codes over the (query, row) candidate pairs, then ONE exact
-    * rescore of the O(Q x R) survivors. Output: (query_id, id, distance),
-    * top-k per query, unordered. */
-  private def compactSearch(lib: LibraryRow, queries: Seq[(Long, Seq[Float])], k: Int,
-                            rescore: Int, scoped: DataFrame,
-                            probed: Seq[(Long, Seq[Long])], fallbackQs: Seq[Long],
-                            pqModel: Option[ProductQuantization.Model]): DataFrame = {
-    val libraryId = lib.id
-    val metric = lib.distance_metric
-    val residualPq = lib.storage == StoragePq && pqResidual(lib)
-    val qvecs = queries.toMap
-    def local(rows: Seq[(Long, Seq[Float], Long)]): DataFrame =
-      rows.toDF("query_id", "qvec", "qbucket")
-        .withColumn("qvec", col("qvec").cast("array<float>"))
-    val qDf = queries.toDF("query_id", "qvec")
-      .withColumn("qvec", col("qvec").cast("array<float>"))
-    // the approximate pass reads the compact columns and NEVER the float32
-    // embedding bytes — those are read once, for the O(Q x R) rescore
-    // survivors only
-    val dataCols: Seq[Column] =
-      if (lib.storage == StorageSq8)
-        Seq(col("codes"), col("qmin"), col("qmax"))
-      else if (lib.storage == StorageBq)
-        Seq(col("codes"))
-      else
-        Seq(col("codes")) ++
-          (if (residualPq) Seq(col("bucket")) else Nil) ++
-          (if (metric == "cosine") Seq(col("qmin")) else Nil)
-    val pairCols = Seq(col("query_id"), col("id")) ++ dataCols :+ col("qvec")
-    // (query, row) candidate pairs: the probed queries join the stored
-    // bucket column through ONE local relation of (query_id, qvec,
-    // qbucket) rows; the fallback queries cross the whole allow-set
-    val pairs = Seq(
-      if (probed.isEmpty) None
-      else Some(inBuckets(scoped, probed.flatMap(_._2))
-        .join(broadcast(local(probed.flatMap { case (qid, bs) =>
-          bs.map(b => (qid, qvecs(qid), b)) })), col("bucket") === col("qbucket"))
-        .select(pairCols: _*)),
-      if (fallbackQs.isEmpty) None
-      else Some(scoped.crossJoin(broadcast(
-          if (probed.isEmpty) qDf else qDf.where(col("query_id").isin(fallbackQs: _*))))
-        .select(pairCols: _*))
-    ).flatten.reduce(_ unionByName _)
-    // each compact storage kind supplies only its approximate score over
-    // the candidate pairs
-    val approx: DataFrame =
-      if (lib.storage == StorageBq)
-        // Hamming over the stored int words (the query's words re-packed
-        // in-plan from qvec — a handful of 31-bit words, e.g. 3 at dim
-        // 64; cheaper than another broadcast join)
-        pairs.withColumn("approx", BinaryQuantization.hamming(
-          col("codes"), BinaryQuantization.encodeWordsInt(
-            col("qvec"), lib.embedding_dimension)))
-      else if (lib.storage == StorageSq8)
-        pairs.withColumn("approx", VectorExpressions.sq8DistanceBatch(
-          col("codes"), col("qmin"), col("qmax"), col("qvec"), metric))
-      else {
-        val model = pqModel.get
-        // ADC: each query's lookup table rides in as a broadcast column
-        // (added in the same order as ProductQuantization.search's
-        // literal tables). Residual (IVFPQ) tables are keyed by (query_id,
-        // cell) over each query's probed cells, joined on the stored
-        // bucket cell: O(nprobe · M · K) doubles per query (euclidean) or
-        // O(M · K + nprobe) (dot/cosine — the LUT is cell-independent).
-        // Cosine additionally divides by the stored qmin norm and the
-        // per-query norm riding in the same broadcast frame.
-        val terms = model.indices.map { m =>
-          element_at(element_at(col("__lut"), m + 1),
-            col("codes").getItem(m).cast("int") + lit(1))
-        }
-        val (withLut, lutSum) =
-          if (residualPq) {
-            // LUTs only for the cell-pruned queries; a FALLBACK query
-            // scans every cell and goes straight to the exact rescore —
-            // per-cell LUTs for all C cells would be O(C·M·K) driver work
-            val lutRows = probed.flatMap {
-              case (qid, cells) =>
-                val qn = ProductQuantization.normLocal(qvecs(qid))
-                ProductQuantization.residualLutRows(model, cellModels(libraryId),
-                  cells, qvecs(qid).toArray, metric)
-                  .map { case (cell, const, luts) => (qid, cell, const, luts, qn) }
-            }
-            (pairs.join(broadcast(lutRows.toDF("query_id", "__cell", "__const",
-                "__lut", "__qnorm")), Seq("query_id"))
-              .where(col("bucket") === col("__cell")),
-              terms.foldLeft(col("__const"))(_ + _))
-          } else {
-            val luts = queries.map { case (qid, q) =>
-              (qid, ProductQuantization.adcLut(model, q.toArray, metric)
-                .map(_.toSeq).toSeq, ProductQuantization.normLocal(q))
-            }
-            (pairs.join(broadcast(luts.toDF("query_id", "__lut", "__qnorm")),
-                Seq("query_id")),
-              terms.reduce(_ + _))
-          }
-        withLut.withColumn("approx", ProductQuantization.approxColumn(
-          lutSum, metric,
-          if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm")))
-      }
-    def topN(df: DataFrame, score: String, n: Int): DataFrame =
-      if (queries.size == 1) df.orderBy(col(score), col("id")).limit(n)
-      else TopK.perGroup(df, "query_id", score, "id", n)
-    val cut = topN(approx.select(col("query_id"), col("id"), col("approx")),
-      "approx", math.max(k, rescore)).select(col("query_id"), col("id"))
-    // a residual-pq fallback query has no LUT rows: EVERY candidate
-    // survives to the exact rescore
-    val survivors =
-      if (!residualPq || fallbackQs.isEmpty) cut
-      else cut.unionByName(pairs.where(col("query_id").isin(fallbackQs: _*))
-        .select(col("query_id"), col("id")))
-    // ONE exact-rescore join touching O(Q x R) embedding rows
-    topN(scoped.select(col("id"), col("embedding"))
-      .join(broadcast(survivors), Seq("id"))
-      .join(broadcast(qDf), Seq("query_id"))
-      .withColumn("distance",
-        round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d))
-      .select(col("query_id"), col("id"), col("distance")), "distance", k)
+    VectorSearch.nearest(scoped,
+      QueryProbes(queries.map { case (qid, q) => qid -> q.toArray },
+        VectorSearch.probedWithK(scoped, probes, k, knownHist)),
+      lib.distance_metric, k, scorer)
+      .withColumnRenamed("id", "chunk_id")
   }
 
   /** HYBRID retrieval at the facade — BM25 lexical ranking over the
@@ -1728,8 +1578,9 @@ final class VectorEngine private (val spark: SparkSession,
       .select(col("id").as("chunk_id"), col("text"))
     val lex = Lexical.bm25Batch(lexCorpus.toDF(), "chunk_id", "text",
       queries.map(q => (q._1, q._2)))
-    val vec = searchBatch(libraryId, queries.map(q => (q._1, q._3)),
-      candidates, filters, probe)
+    // the funnel's unordered rows: fusion ranks them per query anyway
+    val vec = nearestRows(libraryId, queries.map(q => (q._1, q._3)),
+      candidates, filters, probe, None, settings.adaptiveMultiplier, None)
     Lexical.hybridRrfBatch(lex, vec, "query_id", "chunk_id", k, candidates,
         rrfK)
       .orderBy(col("query_id"), col("rrf").desc, col("chunk_id"))
@@ -3070,10 +2921,11 @@ object VectorEngine {
     else DefaultSq8Rescore
 
   /** LSH probe modes for `search`/`searchBatch` (adaptive is the default;
-    * single-bucket is the reference's strict parity semantics). */
-  val ProbeSingle = "single"
-  val ProbeMulti = "multiprobe"
-  val ProbeAdaptive = "adaptive"
+    * single-bucket is the reference's strict parity semantics) — the
+    * modes of the one planner, [[graft.operators.LshIndex.probes]]. */
+  val ProbeSingle: String = LshIndex.ProbeSingle
+  val ProbeMulti: String = LshIndex.ProbeMulti
+  val ProbeAdaptive: String = LshIndex.ProbeAdaptive
   val SupportedProbes: Set[String] = Set(ProbeSingle, ProbeMulti, ProbeAdaptive)
 
   /** Default number of IVF cells probed by `search` on an ivf library. */

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions._
 import graft.functions.VectorExpressions
 
 /** IVF-style approximate nearest-neighbor search: vectors are assigned to
@@ -32,9 +31,6 @@ import graft.functions.VectorExpressions
 object IvfIndex {
 
   final case class Centroid(id: Long, vec: Array[Float])
-
-  private def litVec(v: Array[Float]): Column =
-    array(v.toIndexedSeq.map(x => lit(x)): _*).cast("array<float>")
 
   /** Cell id = argmin over centroids of euclidean distance, ties broken by
     * centroid id — one codegen'd expression node regardless of C. */
@@ -141,19 +137,15 @@ object IvfIndex {
   }
 
   /** Probe-limited top-k over a table with a STORED `cell` column (from
-    * `withCell` at ingest): filter to the probed cells — partition-
-    * prunable at scale — score with `metric`, take k.
-    * Output: (idCol, distance). */
+    * `withCell` at ingest): the `nprobe` nearest cells — a bucket filter,
+    * partition-prunable at scale — scored exactly by
+    * [[VectorSearch.nearest]]; no `< k` fallback.
+    * Output: (idCol, distance) in (distance, id) order. */
   def search(indexed: DataFrame, embCol: String, idCol: String,
              centroids: Seq[Centroid], query: Array[Float],
-             nprobe: Int, metric: String, k: Int): DataFrame = {
-    val probed = nearestCentroids(query, centroids, nprobe)
-    indexed
-      .where(col("cell").isin(probed: _*))
-      .withColumn("distance",
-        round(distance(metric)(col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
-  }
+             nprobe: Int, metric: String, k: Int): DataFrame =
+    VectorSearch.single(
+      indexed.select(col(idCol).as("id"), col(embCol).as("embedding"), col("cell").as("bucket")),
+      idCol, query, Some(nearestCentroids(query, centroids, nprobe)), metric, k,
+      VectorSearch.Exact)
 }

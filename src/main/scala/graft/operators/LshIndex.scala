@@ -11,19 +11,21 @@ import graft.functions.VectorFunctions._
   * on the vector table, computed from a small seeded Gaussian projection
   * matrix that is broadcast as plan literals. At scale the table is
   * `repartition($"bucket")`-ed (or bucketed parquet) so a bucket probe is a
-  * partition-pruned scan; here the probe is a broadcast equi-join on bucket.
+  * partition-pruned scan; here the probe is a bucket filter pushed to the
+  * scan.
   *
-  * Search is the reference's two-phase semantics (vector_db/indexes.py:206-234):
-  * scan only the query's bucket; if the candidate set has fewer than k
-  * members, fall back to scanning the full (allow-)set — never fewer
-  * results than flat search would give, and exactly equal when the
-  * fallback triggers.
+  * [[probes]] is the one LSH probe planner; the searches below run its
+  * plan through [[VectorSearch.nearest]] under the reference's two-phase
+  * semantics (vector_db/indexes.py:206-234): scan only the probed
+  * buckets; if they hold fewer than k rows, fall back to scanning the
+  * full (allow-)set — never fewer results than flat search would give,
+  * and exactly equal when the fallback triggers.
   */
 object LshIndex {
 
   /** Hard ceiling on sign-bit projections: buckets pack into one LONG
     * (62 keeps every value non-negative under the portable `acc*2+bit`
-    * fold — the same cap the simhash/BQ word packing uses). */
+    * fold — the same cap the simhash word packing uses). */
   val MaxProjections = 62
 
   /** The projection count that bounds EXPECTED bucket occupancy at
@@ -59,6 +61,51 @@ object LshIndex {
   def withBucket(df: DataFrame, emb: Column, cfg: Config): DataFrame =
     df.withColumn("bucket", lshBucket(emb, cfg.matrix))
 
+  /** Probe modes of [[probes]]. */
+  val ProbeSingle = "single"
+  val ProbeMulti = "multiprobe"
+  val ProbeAdaptive = "adaptive"
+
+  /** THE LSH probe planner: one query's probe buckets under `mode`.
+    *   - ProbeSingle: the query's own `bucket` (the reference's strict
+    *     two-phase semantics, indexes.py:206-234);
+    *   - ProbeMulti: that bucket and every Hamming-1 neighbor (P+1
+    *     distinct values — a row matches at most one probe, so no
+    *     candidate duplicates);
+    *   - ProbeAdaptive: with the (bucket -> rows) histogram `hist`, the
+    *     [[probePrefix]] of the query's `margins` holding >= `target`
+    *     rows; with no histogram, Hamming-1. */
+  def probes(mode: String, bucket: Long, numProjections: Int,
+             hist: Option[Iterable[(Long, Long)]] = None,
+             margins: Array[Double] = Array.emptyDoubleArray,
+             target: Long = 0L): Seq[Long] = (mode, hist) match {
+    case (ProbeAdaptive, Some(h)) => probePrefix(h.toSeq, bucket, margins, target)
+    case (ProbeAdaptive | ProbeMulti, _) =>
+      bucket +: (0 until numProjections).map(i => bucket ^ (1L << i))
+    case _ => Seq(bucket)
+  }
+
+  /** One query's exact top-k over the `buckets` of `indexed` under the
+    * `< k` rule ([[VectorSearch.probedWithK]], from `hist` when known).
+    * Output: (idCol, distance) in (distance, id) order. */
+  private def searchBuckets(indexed: DataFrame, embCol: String, idCol: String,
+                            q: Array[Float], buckets: Seq[Long], metric: String,
+                            k: Int, hist: Option[Map[Long, Long]]): DataFrame = {
+    val rows = indexed.select(col(idCol).as("id"), col(embCol).as("embedding"), col("bucket"))
+    VectorSearch.single(rows, idCol, q,
+      VectorSearch.probedWithK(rows, Seq(0L -> buckets), k, hist).headOption.map(_._2),
+      metric, k, VectorSearch.Exact)
+  }
+
+  /** The (qvec, qbucket) of a one-row query frame — a bounded collect
+    * that fails unless the frame holds exactly one row. */
+  private def queryRow(query: DataFrame): (Array[Float], Long) = {
+    val rows = query.select(col("qvec"), col("qbucket")).limit(2).collect()
+    require(rows.length == 1,
+      s"the query frame must hold exactly one row, got ${if (rows.length > 1) "more" else "none"}")
+    (rows(0).getSeq[Float](0).toArray, rows(0).getLong(1))
+  }
+
   /** Two-phase bucketed k-NN (reference: vector_db/indexes.py:206-234).
     *
     * @param indexed vector table with a `bucket` column (any pre-filters —
@@ -68,17 +115,15 @@ object LshIndex {
     * @param query   one-row DataFrame with `qvec` and `qbucket`
     * @param embCol  name of the embedding column in `indexed`
     *
-    * Phase 1 counts bucket candidates with an early-stop `limit(k).count()`
-    * — the count can stop at k, we only need to know "< k or not".
-    * Phase 2 picks the plan: bucket probe (broadcast equi-join on bucket)
-    * or full scan of the allow-set. Driver-side two-phase is deliberate:
-    * a Catalyst rule cannot see row counts (SURVEY.md §7.6).
+    * One aggregate counts the query's bucket, and the `< k` rule picks
+    * the plan: the bucket probe or the full scan of the allow-set.
+    * Driver-side two-phase is deliberate: a Catalyst rule cannot see row
+    * counts (SURVEY.md §7.6).
     */
   def searchTwoPhase(indexed: DataFrame, query: DataFrame, embCol: String,
                      metric: String, k: Int, idCol: String = "vec_id"): DataFrame = {
-    val cand = indexed.join(broadcast(query),
-      indexed("bucket") === query("qbucket"))
-    finish(cand, indexed, query, embCol, metric, k, idCol)
+    val (q, b) = queryRow(query)
+    searchBuckets(indexed, embCol, idCol, q, probes(ProbeSingle, b, 0), metric, k, None)
   }
 
   /** MULTI-PROBE two-phase k-NN: candidates come from the query's bucket
@@ -93,11 +138,9 @@ object LshIndex {
   def searchMultiProbe(indexed: DataFrame, query: DataFrame, embCol: String,
                        metric: String, k: Int, numProjections: Int,
                        idCol: String = "vec_id"): DataFrame = {
-    val probed = query.withColumn("probe",
-      explode(hamming1Probes(col("qbucket"), numProjections))).drop("qbucket")
-    val cand = indexed.join(broadcast(probed), indexed("bucket") === col("probe"))
-      .drop("probe")
-    finish(cand, indexed, query, embCol, metric, k, idCol)
+    val (q, b) = queryRow(query)
+    searchBuckets(indexed, embCol, idCol, q, probes(ProbeMulti, b, numProjections),
+      metric, k, None)
   }
 
   /** Default adaptive candidate target, as a multiple of k: probing stops
@@ -139,9 +182,9 @@ object LshIndex {
 
   /** The Hamming-<=1 probe set of a bucket expression: the bucket itself
     * plus every value at one flipped projection bit — THE multi-probe
-    * contract, shared by every path that blocks or probes on sign-bit
-    * buckets (single/batch search, batch and incremental embedding
-    * near-dup), so the paths cannot silently diverge. */
+    * contract of the paths that block on sign-bit buckets (batch and
+    * incremental embedding near-dup); [[probes]] is its driver-side twin
+    * for search, in the same order. */
   def hamming1Probes(bucket: Column, numProjections: Int): Column =
     array((lit(0L) +: (0 until numProjections).map(i => lit(1L << i)))
       .map(m => bucket.bitwiseXOR(m)): _*)
@@ -197,8 +240,8 @@ object LshIndex {
     sel.result()
   }
 
-  /** Adaptive multi-probe k-NN: probe the `probePrefix` buckets (an
-    * `isin` filter — partition-prunable at scale, like every other probe
+  /** Adaptive multi-probe k-NN: probe the `probePrefix` buckets (a
+    * bucket filter — partition-prunable at scale, like every other probe
     * here), exact distances, top-k. The query vector arrives driver-side
     * (the facade's search signature), so margins and the probe set are
     * driver math.
@@ -222,37 +265,9 @@ object LshIndex {
                      maxHistBuckets: Int = MaxAdaptiveHistBuckets): DataFrame = {
     val ms = margins(matrix, q)
     val h = hist.orElse(boundedHistogram(indexed, maxHistBuckets))
-      .getOrElse {
-        // histogram too wide to collect: fixed multi-probe fallback
-        val qvec0 = array(q.map(x => lit(x)): _*).cast("array<float>")
-        val query = indexed.sparkSession.range(1)
-          .select(qvec0.as("qvec"), lshBucket(qvec0, matrix).as("qbucket"))
-        return searchMultiProbe(indexed, query, embCol, metric, k,
-          matrix.length, idCol)
-      }
-    val sel = probePrefix(h, bucketOf(ms), ms,
-      math.max(k.toLong, k.toLong * multiplier))
-    val qvec = array(q.map(x => lit(x)): _*).cast("array<float>")
-    indexed.where(col("bucket").isin(sel: _*))
-      .withColumn("distance",
-        round(distance(metric)(col(embCol), qvec), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
-  }
-
-  /** Shared phase 2: early-stop candidate count picks bucket-probe vs
-    * full (allow-set) scan, then exact distances + top-k. */
-  private def finish(cand: DataFrame, indexed: DataFrame, query: DataFrame,
-                     embCol: String, metric: String, k: Int,
-                     idCol: String): DataFrame = {
-    val enough = cand.limit(k).count() >= k
-    val base = if (enough) cand else indexed.crossJoin(broadcast(query.drop("qbucket")))
-    base
-      .withColumn("distance",
-        round(distance(metric)(col(embCol), col("qvec")), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    searchBuckets(indexed, embCol, idCol, q.toArray,
+      probes(ProbeAdaptive, bucketOf(ms), matrix.length, h, ms,
+        math.max(k.toLong, k.toLong * multiplier)),
+      metric, k, h.map(_.toMap))
   }
 }

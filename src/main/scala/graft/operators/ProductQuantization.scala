@@ -26,11 +26,12 @@ import graft.operators.IvfIndex.Centroid
   *     same metric-independent-codes contract as SQ8, and FAISS practice;
   *   - SEARCH: asymmetric distance computation (ADC) — the query is NOT
   *     quantized: a driver-side lookup table lut[m][c] (numSub x K
-  *     doubles, plan literals) turns the approximate distance into
-  *     `numSub` array lookups + adds per row, whole-stage codegen,
-  *     scanning ONLY the codes column; the top-`rescore` survivors are
-  *     rescored exactly against float32, top-k — the same two-phase shape
-  *     as `Quantization.search`.
+  *     doubles, one broadcast column per query) turns the approximate
+  *     distance into `numSub` array lookups + adds per row, whole-stage
+  *     codegen, scanning ONLY the codes column; the top-`rescore`
+  *     survivors are rescored exactly against float32, top-k — the
+  *     compact leg of [[VectorSearch.nearest]], shared with
+  *     `Quantization.search`.
   *
   * METRICS. Squared L2 decomposes over concatenated subvectors, so
   * euclidean ADC is the textbook LUT of per-subspace squared distances
@@ -58,9 +59,6 @@ object ProductQuantization {
   /** model(m) = subspace m's K centroids, ID-SORTED with cids 0..K-1
     * (see the Model invariant above). */
   type Model = Seq[Seq[Centroid]]
-
-  private def litVec(v: Array[Float]): Column =
-    array(v.toIndexedSeq.map(x => lit(x)): _*).cast("array<float>")
 
   /** Metrics ADC can serve (cosine additionally needs the stored norm). */
   val SupportedMetrics: Set[String] = Set("euclidean", "dot_product", "cosine")
@@ -212,9 +210,8 @@ object ProductQuantization {
 
   /** The approximate-distance column over stored codes given per-subspace
     * LUT columns summed ascending m — the ONE home of the cosine
-    * zero-norm contract, shared by the literal-LUT single paths (qnorm a
-    * literal) and the broadcast-LUT batch paths (qnorm a per-query
-    * column), which must stay bit-identical. For cosine, `norm` is the
+    * zero-norm contract ([[VectorSearch.nearest]]'s compact leg passes
+    * the per-query norm as a broadcast column). For cosine, `norm` is the
     * stored row norm column and `qnorm` the query's — zero norms rank
     * +Inf, like cosine_distance. */
   def approxColumn(sumLut: Column, metric: String,
@@ -323,14 +320,25 @@ object ProductQuantization {
     }
   }
 
-  /** Two-phase residual ADC search over a table with STORED residual
-    * `pq_codes` and a cell column: the per-cell LUT frame rides in as a
-    * broadcast inner join on the cell (which also prunes the scan to
-    * `cells`), approx = const + Σ_m lut[m][code] summed ascending m
-    * (left-associated from the constant — the order a SQL oracle's
+  /** The contract columns of [[VectorSearch.nearest]]: id, embedding,
+    * the stored codes, `extra`, and — cosine only — the stored row norm
+    * as `qmin`. */
+  private def pqRows(encoded: DataFrame, embCol: String, idCol: String,
+                     codesCol: String, extra: Seq[Column], metric: String,
+                     normCol: Option[String]): DataFrame =
+    encoded.select(Seq(col(idCol).as("id"), col(embCol).as("embedding"),
+        col(codesCol).as("codes")) ++ extra ++
+      (if (metric == "cosine") Seq(col(normCol.getOrElse("pq_norm")).as("qmin")) else Nil): _*)
+
+  /** Two-phase residual ADC search ([[VectorSearch.ResidualPq]]) over a
+    * table with STORED residual `pq_codes` and a cell column: the per-cell
+    * LUT frame joins the probed `cells` (which also prunes the scan),
+    * approx = const + Σ_m lut[m][code] summed ascending m (left-
+    * associated from the constant — the order a SQL oracle's
     * `c + ts[1] + ... + ts[M]` chain replays), exact rescore under
     * `metric`. Callers pass the PROBED cells (or every cell for an
-    * exhaustive fallback). */
+    * exhaustive search); none falls back. Output: (idCol, distance) in
+    * (distance, id) order. */
   def searchResidual(encoded: DataFrame, embCol: String, idCol: String,
                      model: Model, centroids: Seq[Centroid],
                      cells: Seq[Long], query: Array[Float], k: Int,
@@ -340,43 +348,18 @@ object ProductQuantization {
                      normCol: Option[String] = None): DataFrame = {
     require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
     require(cells.nonEmpty, "need at least one cell to probe")
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val lutDf = broadcast(
-      residualLutRows(model, centroids, cells, query, metric)
-        .toDF("__cell", "__const", "__lut"))
-    val sumLut = model.indices.map { m =>
-      element_at(element_at(col("__lut"), m + 1),
-        col(codesCol).getItem(m).cast("int") + lit(1))
-    }.foldLeft(col("__const"))(_ + _)
-    val approx = approxColumn(sumLut, metric,
-      normCol.orElse(if (metric == "cosine") Some("pq_norm") else None)
-        .map(col), lit(normLocal(query.toIndexedSeq)))
-    val phase1Cols = Seq(col(idCol), col(codesCol), col(cellCol)) ++
-      (if (metric == "cosine")
-        Seq(col(normCol.getOrElse("pq_norm"))) else Nil)
-    val candidates = encoded
-      .select(phase1Cols: _*)
-      .join(lutDf, col(cellCol) === col("__cell"))
-      .withColumn("approx", approx)
-      .orderBy(col("approx"), col(idCol))
-      .limit(rescore)
-      .select(col(idCol))
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    VectorSearch.single(
+      pqRows(encoded, embCol, idCol, codesCol, Seq(col(cellCol).as("bucket")), metric, normCol),
+      idCol, query, Some(cells), metric, k, VectorSearch.ResidualPq(model, centroids, rescore))
   }
 
-  /** Two-phase ADC search over a table with STORED `pq_codes`: phase 1
-    * scans ONLY the compact columns (numSub lookups + adds per row,
-    * codegen'd; at scale that is numSub bytes-ish per row instead of
-    * dim x 4 — plus one stored double for cosine), phase 2 rescores the
-    * `rescore` survivors exactly under `metric` (rounded like every other
-    * search path). Output: (idCol, distance). */
+  /** Two-phase ADC search ([[VectorSearch.Pq]]) over a table with STORED
+    * `pq_codes`: phase 1 scans ONLY the compact columns (numSub lookups +
+    * adds per row, codegen'd; at scale that is numSub bytes-ish per row
+    * instead of dim x 4 — plus one stored double for cosine), phase 2
+    * rescores the `rescore` survivors exactly under `metric` (rounded
+    * like every other search path). Output: (idCol, distance) in
+    * (distance, id) order. */
   def search(encoded: DataFrame, embCol: String, idCol: String,
              model: Model, query: Array[Float], k: Int,
              rescore: Int, metric: String = "euclidean",
@@ -384,34 +367,7 @@ object ProductQuantization {
              normCol: Option[String] = None): DataFrame = {
     require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
     require(SupportedMetrics(metric), s"unsupported PQ metric: $metric")
-    val lut = adcLut(model, query, metric)
-    // sum over subspaces, ascending m, left-associated — the oracle's
-    // explicit + chain adds in the same order. Each subspace's K doubles
-    // ride as ONE array literal (typedLit), not K literal nodes — at
-    // K=256 that keeps the plan at O(M) nodes, like the batch path's
-    // broadcast frame.
-    val sumLut = lut.zipWithIndex.map { case (l, m) =>
-      element_at(typedLit(l.toIndexedSeq),
-        col(codesCol).getItem(m).cast("int") + lit(1))
-    }.reduce(_ + _)
-    val approx = approxColumn(sumLut, metric,
-      normCol.orElse(if (metric == "cosine") Some("pq_norm") else None)
-        .map(col), lit(normLocal(query.toIndexedSeq)))
-    val phase1Cols = Seq(col(idCol), col(codesCol)) ++
-      (if (metric == "cosine")
-        Seq(col(normCol.getOrElse("pq_norm"))) else Nil)
-    val candidates = encoded
-      .select(phase1Cols: _*)
-      .withColumn("approx", approx)
-      .orderBy(col("approx"), col(idCol))
-      .limit(rescore)
-      .select(col(idCol))
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    VectorSearch.single(pqRows(encoded, embCol, idCol, codesCol, Nil, metric, normCol),
+      idCol, query, None, metric, k, VectorSearch.Pq(model, rescore))
   }
 }

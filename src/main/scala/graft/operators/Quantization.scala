@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExpressions
 
 /** SQ8 scalar quantization for embedding columns: each float32 vector is
   * stored as uint8 codes + a per-vector (min, max) pair — 4x smaller than
@@ -15,22 +14,14 @@ import graft.functions.VectorExpressions
   * bit-for-bit (floor(+0.5) instead of round() dodges engine-specific
   * rounding-mode differences; all arithmetic is double, left-to-right).
   *
-  * Search is TWO-PHASE, the shape that matters at 100 TB:
-  *   1. approximate top-R over the COMPACT columns only (id, codes,
-  *      min, max — the full embedding is never read), the library METRIC
-  *      scored over the decoded codes by the fused codegen kernel
-  *      Sq8DistanceExpr (codes are metric-independent: the same stored
-  *      representation serves euclidean, cosine, and dot_product);
-  *   2. exact rescore of the R survivors with the SAME metric — a
-  *      broadcast semi-join back to the full table touches R rows of
-  *      float32 data, then top-k.
-  * At scale phase 1 scans 1/4 the bytes of a flat scan (plus pruned
-  * columns), and phase 2's read is O(R), not O(table).
+  * Search ([[search]]) runs the shared compact leg of
+  * [[VectorSearch.nearest]]: an approximate top-R over the COMPACT
+  * columns only, the library METRIC scored over the decoded codes (codes
+  * are metric-independent: the same stored representation serves
+  * euclidean, cosine, and dot_product), then an exact rescore of the R
+  * survivors with the same metric.
   */
 object Quantization {
-
-  private def litVec(v: Array[Float]): Column =
-    array(v.toIndexedSeq.map(x => lit(x)): _*).cast("array<float>")
 
   /** Add (qmin, qmax, codes) columns quantizing `emb`. A constant vector
     * (max == min) encodes to all-zero codes and decodes to min exactly. */
@@ -47,9 +38,10 @@ object Quantization {
               + lit(0.5)).cast("int"))))
   }
 
-  /** Two-phase quantized search: approximate `metric` top-`rescore` on
-    * the codes, exact `metric` top-`k` on the survivors.
-    * Output: (idCol, distance), distance = round(exact, 6) + 0.0.
+  /** Two-phase quantized search ([[VectorSearch.Sq8]]): approximate
+    * `metric` top-`rescore` on the codes, exact `metric` top-`k` on the
+    * survivors. Output: (idCol, distance) in (distance, id) order,
+    * distance = round(exact, 6) + 0.0.
     *
     * `metric` has NO default on purpose: both phases score with it, so a
     * caller that forgot to thread the library metric through would
@@ -59,22 +51,8 @@ object Quantization {
              query: Array[Float], k: Int, rescore: Int,
              metric: String): DataFrame = {
     require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
-    // phase 1 reads ONLY the compact representation
-    val candidates = encoded
-      .select(col(idCol), col("codes"), col("qmin"), col("qmax"))
-      .withColumn("approx",
-        VectorExpressions.sq8Distance(col("codes"), col("qmin"), col("qmax"),
-          query, metric))
-      .orderBy(col("approx"), col(idCol))
-      .limit(rescore)
-      .select(col(idCol))
-    // phase 2: exact distances for the R survivors only
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(graft.functions.VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    VectorSearch.single(encoded.select(col(idCol).as("id"), col(embCol).as("embedding"),
+        col("codes"), col("qmin"), col("qmax")),
+      idCol, query, None, metric, k, VectorSearch.Sq8(rescore))
   }
 }

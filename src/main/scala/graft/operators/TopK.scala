@@ -51,16 +51,19 @@ object TopK {
   /** The k nearest rows of `scan` to each query under `metric`: exactly
     * the per-query top-k (distance, id) of `round(distance(metric)(
     * embedding, qvec), 6) + 0.0` over the (row, query) pairs the probe
-    * plan assigns. `scan` is (id: string, embedding: array<float>) plus
-    * `bucket: long` when `queries` probes buckets. One query is cut by
-    * one TakeOrderedAndProject, more by [[merge]].
-    * Output: (query_id, id, distance), unordered. */
+    * plan assigns. `scan` is (id: string or bigint, embedding:
+    * array<float>) plus `bucket: long` when `queries` probes buckets. One
+    * query is cut by one TakeOrderedAndProject, whose rows come back in
+    * (distance, id) order; more are cut by [[merge]].
+    * Output: (query_id, id, distance), unordered for more than one query. */
   def nearest(scan: DataFrame, queries: QueryProbes, metric: String,
               k: Int): DataFrame = {
     val session = scan.sparkSession
     TopKStrategy.install(session)
     val plan = scan.queryExecution.analyzed
-    val expected = Seq("id" -> StringType, "embedding" -> ArrayType(FloatType)) ++
+    val idType = plan.output.headOption.map(_.dataType).filter(LongType == _)
+      .getOrElse(StringType)
+    val expected = Seq("id" -> idType, "embedding" -> ArrayType(FloatType)) ++
       (if (queries.probes.nonEmpty) Seq("bucket" -> LongType) else Nil)
     val got = plan.output.map(a => a.name -> a.dataType)
     require(got.map(_._1) == expected.map(_._1) && got.zip(expected).forall {
@@ -68,7 +71,7 @@ object TopK {
       case ((_, t), (_, e)) => t == e
     }, s"scan must be ${expected.map(_._1).mkString("(", ", ", ")")}, got $got")
     val output = Seq(AttributeReference("query_id", LongType, nullable = false)(),
-      AttributeReference("id", StringType, nullable = false)(),
+      AttributeReference("id", idType, nullable = false)(),
       AttributeReference("distance", DoubleType, nullable = false)())
     val scored = ColumnBridge.dataFrame(session,
       VectorTopK(queries, metric, k, plan.output, output, plan))

@@ -47,7 +47,7 @@ object QueryProbes {
 }
 
 /** Batch k-NN scoring fused with the per-task top-k: over a scan of
-  * `input` = (id: string, embedding: array<float>[, bucket: long]) it
+  * `input` = (id: string | bigint, embedding: array<float>[, bucket: long]) it
   * scores each row against the queries the probe plan assigns to it and
   * keeps one bounded heap of k (distance, id) per query. Output is
   * (query_id, id, distance), at most queries x k rows per task — the same
@@ -65,7 +65,10 @@ case class VectorTopK(queries: QueryProbes, metric: String, k: Int,
 
 /** Per task and query, one bounded max-heap of k (distance, id) under
   * PartialTopKExec's order: distance ascending as Spark compares doubles
-  * (NaN largest, -0.0 == 0.0), then id in UTF8String byte order.
+  * (NaN largest, -0.0 == 0.0), then id as `orderBy` compares its type —
+  * a string id in UTF8String byte order, a bigint id numerically (9
+  * before 10). The id comparator is picked once per task from the id
+  * column's type.
   *
   * Distances are bit-identical to `round(distance(metric)(embedding,
   * qvec), 6) + 0.0`: the same float32-to-double left-to-right folds as
@@ -87,8 +90,9 @@ case class VectorTopKExec(queries: QueryProbes, metric: String, k: Int,
     require(!ords.contains(-1), s"$input not in ${child.output}")
     val (idOrd, embOrd) = (ords(0), ords(1))
     val bucketOrd = if (ords.size > 2) ords(2) else -1
+    val idType = input.head.dataType
     child.execute().mapPartitions { rows =>
-      val scorer = new VectorTopKExec.Scorer(qs, metric, k)
+      val scorer = new VectorTopKExec.Scorer(qs, metric, k, idType)
       rows.foreach { row =>
         if (!row.isNullAt(embOrd)) { // ingest never stores one
           val probed =
@@ -109,17 +113,33 @@ case class VectorTopKExec(queries: QueryProbes, metric: String, k: Int,
 object VectorTopKExec {
   private val NoQueries = Array.empty[Int]
 
-  private def compare(d1: Double, id1: UTF8String, d2: Double, id2: UTF8String): Int = {
-    val c = SQLOrderingUtil.compareDoubles(d1, d2)
-    if (c != 0) c else id1.compareTo(id2)
+  /** How the heaps read and order the ids of one id type. */
+  private sealed abstract class Ids {
+    /** An owned copy of the id of `row`. */
+    def read(row: InternalRow, ord: Int): AnyRef
+    def compare(a: AnyRef, b: AnyRef): Int
+  }
+  private object StringIds extends Ids {
+    def read(row: InternalRow, ord: Int): AnyRef = row.getUTF8String(ord).clone()
+    def compare(a: AnyRef, b: AnyRef): Int =
+      a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
+  }
+  private object LongIds extends Ids {
+    def read(row: InternalRow, ord: Int): AnyRef = java.lang.Long.valueOf(row.getLong(ord))
+    def compare(a: AnyRef, b: AnyRef): Int =
+      java.lang.Long.compare(a.asInstanceOf[java.lang.Long], b.asInstanceOf[java.lang.Long])
   }
 
   /** A max-heap of at most k (distance, id), root = the current k-th. */
-  private final class Heap(k: Int) {
+  private final class Heap(k: Int, idOrder: Ids) {
     val dist = new Array[Double](k)
-    val ids = new Array[UTF8String](k)
+    val ids = new Array[AnyRef](k)
     var size = 0
 
+    private def compare(d1: Double, id1: AnyRef, d2: Double, id2: AnyRef): Int = {
+      val c = SQLOrderingUtil.compareDoubles(d1, d2)
+      if (c != 0) c else idOrder.compare(id1, id2)
+    }
     private def above(i: Int, j: Int): Boolean = compare(dist(i), ids(i), dist(j), ids(j)) > 0
     private def swap(i: Int, j: Int): Unit = {
       val d = dist(i); dist(i) = dist(j); dist(j) = d
@@ -129,14 +149,13 @@ object VectorTopKExec {
     /** Whether a row at raw (unrounded) distance `raw` may enter. */
     def admits(raw: Double): Boolean = size < k || !(raw > dist(0) + 1e-6)
 
-    /** `id` is a view into the input row: copied only when kept. */
-    def offer(d: Double, id: UTF8String): Unit =
+    def offer(d: Double, id: AnyRef): Unit =
       if (size < k) {
-        dist(size) = d; ids(size) = id.clone()
+        dist(size) = d; ids(size) = id
         var i = size; size += 1
         while (i > 0 && above(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
       } else if (compare(d, id, dist(0), ids(0)) < 0) {
-        dist(0) = d; ids(0) = id.clone()
+        dist(0) = d; ids(0) = id
         var i = 0; var done = false
         while (!done) {
           val l = 2 * i + 1; val r = l + 1
@@ -150,8 +169,13 @@ object VectorTopKExec {
 
   /** One task's scoring state: a float buffer for the current row and a
     * lazily created heap per query ordinal. */
-  private final class Scorer(qs: QueryProbes, metric: String, k: Int) {
+  private final class Scorer(qs: QueryProbes, metric: String, k: Int, idType: DataType) {
     private val heaps = new Array[Heap](qs.ids.length)
+    private val idOrder: Ids = idType match {
+      case StringType => StringIds
+      case LongType => LongIds
+      case other => throw new IllegalArgumentException(s"id must be string or bigint, got $other")
+    }
     private val row = new Array[Float](qs.dim)
     private val (name, kind) = metric match {
       case "cosine" => ("cosine_distance", 0)
@@ -175,13 +199,14 @@ object VectorTopKExec {
           while (j < n) { s += row(j).toDouble * row(j).toDouble; j += 1 }
           math.sqrt(s)
         }
-      var id: UTF8String = null
+      var id: AnyRef = null
       def one(q: Int): Unit = {
         var heap = heaps(q)
-        if (heap == null) { heap = new Heap(k); heaps(q) = heap }
+        if (heap == null) { heap = new Heap(k, idOrder); heaps(q) = heap }
         val raw = distance(q, rowNorm)
         if (heap.admits(raw)) {
-          if (id == null) id = in.getUTF8String(idOrd)
+          // read once per admitted row, shared by every heap that keeps it
+          if (id == null) id = idOrder.read(in, idOrd)
           heap.offer(graft.operators.MmrRerank.round6Out(raw), id)
         }
       }
@@ -215,7 +240,7 @@ object VectorTopKExec {
 
     /** Every heap's rows as (query_id, id, distance). */
     def rows: Iterator[InternalRow] = {
-      val proj = UnsafeProjection.create(Array[DataType](LongType, StringType, DoubleType))
+      val proj = UnsafeProjection.create(Array[DataType](LongType, idType, DoubleType))
       val out = new GenericInternalRow(3)
       heaps.indices.iterator.filter(heaps(_) != null).flatMap { q =>
         val h = heaps(q)

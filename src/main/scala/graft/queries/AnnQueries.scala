@@ -84,23 +84,25 @@ object AnnQueries {
   private val IvfPqRescore = graft.engine.VectorEngine.DefaultIvfPqRescore
 
   /** Binary (1-bit) quantization search — the cheapest compression
-    * rung: packed sign-bit words (62 dims/BIGINT), Hamming top-R over
-    * the words only, exact cosine rescore. The oracle replays the
-    * MSB-first packing fold (list_reduce over a prepended 0 seed — the
-    * identical acc*2+bit chain), the per-word XOR bit_count, the
-    * (hamming, id) cut, and the rescore. */
+    * rung: packed sign-bit words (31 dims/INT, the storage kind's
+    * packing), Hamming top-R over the words only, exact cosine rescore.
+    * The oracle is an INDEPENDENT packing: it replays a 62-dims-per-BIGINT
+    * MSB-first fold (list_reduce over a prepended 0 seed — the acc*2+bit
+    * chain), whose per-word XOR bit_count sums to the same Hamming
+    * distance (it counts the same differing sign bits at any word
+    * width), then the (hamming, id) cut and the rescore. */
   private val bqTopk: QueryFn = (s, dir) => {
     val emb = table(s, dir, "embeddings")
     val query = emb.where(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).toArray
-    val encoded = graft.operators.BinaryQuantization.withCodes(
-      emb, col("embedding"), query.length)
-    graft.operators.BinaryQuantization.search(encoded, "embedding", "vec_id",
+    val encoded = emb.withColumn("codes", graft.operators.BinaryQuantization
+      .encodeWordsInt(col("embedding"), query.length))
+    graft.operators.BinaryQuantization.searchStored(encoded, "embedding", "vec_id",
       query, K, Rescore, metric = "cosine")
   }
 
   private val bqTopkSql: String = {
-    val bpw = graft.operators.BinaryQuantization.BitsPerWord
+    val bpw = 62
     val dim = 64
     val nWords = (dim + bpw - 1) / bpw
     val exactCos = VectorSearchQueries.distSql("cosine", "e.v", "q.qv")

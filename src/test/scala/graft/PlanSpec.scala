@@ -301,6 +301,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("least(")) // the round-2 O(C*dim)-node design
   }
 
+  /** The exact rescore reads float32 rows through ONE broadcast hash join
+    * on id against the approximate pass's survivor keys — unique per
+    * query, so the join keeps exactly the R survivors (a semi-join in
+    * effect; the (query_id, id) keys carry the query to its rescore). */
+  private def rescoreJoinsSurvivors(p: String): Unit =
+    assert("BroadcastHashJoin \\[id#".r.findAllIn(p).size == 1, p)
+
   test("sq8 search on a STORED-codes table: approx phase scans only the " +
     "compact columns; rescore is a broadcast semi-join touching R rows") {
     import org.apache.spark.sql.functions.col
@@ -320,7 +327,7 @@ class PlanSpec extends AnyFunSuite {
     val p = result.queryExecution.executedPlan.toString
     assert(p.contains("sq8_euclidean"))
     assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
+    rescoreJoinsSurvivors(p)
     // phase 1's scan must NOT carry the float32 embedding column: the
     // whole point of SQ8 is scanning 1/4 the bytes. The embedding column
     // appears only in the rescore branch's scan.
@@ -348,7 +355,7 @@ class PlanSpec extends AnyFunSuite {
       metric = "cosine")
     val p = result.queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
+    rescoreJoinsSurvivors(p)
     // phase 1's scan must NOT carry the float32 embedding column — the
     // embedding appears only in the rescore branch's scan
     val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
@@ -374,7 +381,7 @@ class PlanSpec extends AnyFunSuite {
       stored, "embedding", "vec_id", model, q, k = 10, rescore = 50)
     val p = result.queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
+    rescoreJoinsSurvivors(p)
     val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
     assert(scans.exists(l => l.contains("pq_codes") && !l.contains("embedding")),
       s"no codes-only scan — the ADC phase reads full vectors:\n${scans.mkString("\n")}")
@@ -403,7 +410,7 @@ class PlanSpec extends AnyFunSuite {
       "embedding", "vec_id", model, cents, probed, q, k = 10, rescore = 50)
     val p = result.queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
+    rescoreJoinsSurvivors(p)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"))
     val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
@@ -479,6 +486,9 @@ class PlanSpec extends AnyFunSuite {
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("SinglePartition, ENSURE_REQUIREMENTS"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // the vector leg is the funnel's unordered rows: fusion re-partitions
+    // them by query_id, so no ordered tail funnels them through one slot
+    assert(!p.contains("TakeOrderedAndProject"), p)
   }
 
   test("pipeline_pack_payloads: payload assembly shuffles on the high-" +
@@ -630,6 +640,45 @@ class PlanSpec extends AnyFunSuite {
         .map(_.metadata("PushedFilters"))
       assert(pushed.exists(_.contains("In(bucket")), s"$mode: $pushed")
       assert(ldf.collect().map(_.getString(0)).toSeq == Seq("a0"), mode)
+    }
+  }
+
+  test("operator ivf and lsh searches: one VectorTopK under one " +
+    "TakeOrderedAndProject — no join, broadcast or sort over the scored rows") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec}
+    import graft.operators.{IvfIndex, LshIndex}
+    import graft.plans.VectorTopKExec
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val q = emb.where(col("vec_id") === 0)
+      .select("embedding").head().getSeq[Float](0).toArray
+    val cfg = LshIndex.Config(numProjections = 4, dim = 64, seed = 42L)
+    val indexed = LshIndex.withBucket(emb, col("embedding"), cfg)
+    val qdf = indexed.where(col("vec_id") === 0)
+      .select(col("embedding").as("qvec"), col("bucket").as("qbucket"))
+    val cents = graft.queries.AnnQueries.fixtureCentroids(spark)
+    Map(
+      "ivf" -> IvfIndex.search(IvfIndex.withCell(emb, col("embedding"), cents),
+        "embedding", "vec_id", cents, q, 4, "cosine", 10),
+      "two-phase" -> LshIndex.searchTwoPhase(indexed, qdf, "embedding", "cosine", 10),
+      "multi-probe" -> LshIndex.searchMultiProbe(indexed, qdf, "embedding", "cosine",
+        10, cfg.numProjections),
+      "adaptive" -> LshIndex.searchAdaptive(indexed, q.toSeq, cfg.matrix, "cosine", 10,
+        multiplier = 2)
+    ).foreach { case (name, df) =>
+      val p = adaptiveFinal(df)
+      val tops = p.collect { case t: TakeOrderedAndProjectExec => t }
+      assert(tops.size == 1, s"$name:\n$p")
+      assert(tops.head.collect { case v: VectorTopKExec => v }.size == 1, s"$name:\n$p")
+      assert(p.collect { case v: VectorTopKExec => v }.size == 1, s"$name:\n$p")
+      val banned = p.collect {
+        case n @ (_: BroadcastNestedLoopJoinExec | _: BroadcastHashJoinExec | _: SortExec) =>
+          n.nodeName
+      }
+      assert(banned.isEmpty, s"$name: $banned in\n$p")
+      assert(df.count() == 10, name)
     }
   }
 

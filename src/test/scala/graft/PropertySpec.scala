@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -344,7 +345,18 @@ object PropertySpec extends Properties("graft") {
 
   property("VectorTopK == the unfused plan (cross join, round(distance, 6) " +
     "+ 0.0, row_number window) on tied vectors, zero norms, NaN, -0.0, k > " +
-    "rows, probed/fallback/mixed queries, every metric") = {
+    "rows, probed/fallback/mixed queries, every metric") =
+    vectorTopKMatchesUnfused(longIds = false)
+
+  property("VectorTopK over bigint ids == the unfused plan, ids 9 and 10 " +
+    "tied (numeric order: 9 before 10)") =
+    vectorTopKMatchesUnfused(longIds = true)
+
+  /** TopK.nearest against the unfused cross join + `round(…, 6) + 0.0` +
+    * `row_number` window, over string ids (UTF-8 byte order) or bigint
+    * ids (numeric order; rows 9 and 10 share a vector and a bucket, so
+    * they tie on distance and only the id orders them). */
+  private def vectorTopKMatchesUnfused(longIds: Boolean): org.scalacheck.Prop = {
     import org.apache.spark.sql.expressions.Window
     import graft.plans.QueryProbes
     val strIds = Seq("a", "b", "\uE000", "\uD83D\uDE00", "\uFFFF", "z")
@@ -364,19 +376,21 @@ object PropertySpec extends Properties("graft") {
       // mostly a cut that splits tied rows, sometimes k > rows
       k <- Gen.frequency(3 -> Gen.chooseNum(1, 10), 1 -> Gen.chooseNum(25, 30))
       metric <- Gen.oneOf("cosine", "euclidean", "dot_product")
-    } yield (vs, rows, qs, k, metric)
+    } yield (vs, if (longIds) rows.updated(10, rows(9)) else rows, qs, k, metric)
     // no shrinking: a shrunk metric name is no metric
     org.scalacheck.Prop.forAllNoShrink(input) { case (vs, rows, qs, k, metric) =>
       val data = rows.zipWithIndex.map { case ((v, b), i) =>
-        (strIds(i % strIds.size) + (i / strIds.size), vs(v), b)
+        (i, strIds(i % strIds.size) + (i / strIds.size), vs(v), b)
       }
-      val frame = spark.sparkContext.parallelize(data, 3).toDF("id", "embedding", "bucket")
+      val frame = spark.sparkContext.parallelize(data, 3).toDF("i", "sid", "embedding", "bucket")
+        .select((if (longIds) col("i").cast("long") else col("sid")).as("id"),
+          col("embedding"), col("bucket"))
       val plan = QueryProbes(qs.zipWithIndex.map { case ((q, _), i) => i * 10L -> q.toArray },
         qs.zipWithIndex.flatMap { case ((_, p), i) => p.map(i * 10L -> _) })
       val scan = if (plan.probes.isEmpty) frame.select("id", "embedding") else frame
       def bits(out: org.apache.spark.sql.DataFrame) =
         out.select("query_id", "id", "distance").collect()
-          .map(r => (r.getLong(0), r.getString(1),
+          .map(r => (r.getLong(0), String.valueOf(r.get(1)),
             java.lang.Double.doubleToLongBits(r.getDouble(2))))
           .toSeq.sorted
       val got = bits(graft.operators.TopK.nearest(scan, plan, metric, k))
@@ -390,6 +404,126 @@ object PropertySpec extends Properties("graft") {
         .withColumn("rn", row_number().over(w)).where(col("rn") <= k))
       got == expect
     }
+  }
+
+  // VectorSearch.nearest's compact leg, one property per scorer, against
+  // an unfused reference written here: per query, its candidate rows
+  // (every row, or its probe buckets), orderBy(approx, id).limit(R), a
+  // semi-join back, the exact distance, orderBy(distance, id).limit(k).
+  // The engine and operator searches share that leg, so this reference
+  // shares none of its code — only the approximate kernels.
+
+  private val pqCents: Seq[graft.operators.IvfIndex.Centroid] =
+    Seq(Array(1f, 0.5f, 0f, -0.5f), Array(-0.5f, 0f, 1f, 0.5f)).zipWithIndex
+      .map { case (v, i) => graft.operators.IvfIndex.Centroid(i.toLong, v) }
+  // 2 subspaces x 2 centroids over dim 4
+  private val pqModel: graft.operators.ProductQuantization.Model =
+    Seq(Seq(Array(0.5f, 0f), Array(-1f, 0.5f)), Seq(Array(0f, 1f), Array(0.5f, -0.5f)))
+      .map(_.zipWithIndex.map { case (v, i) => graft.operators.IvfIndex.Centroid(i.toLong, v) })
+
+  private def qLit(q: Array[Float]) =
+    array(q.toSeq.map(x => lit(x)): _*).cast("array<float>")
+
+  /** `encode` turns (id: bigint, embedding, bucket) into the scorer's
+    * stored columns (and may rewrite bucket); `approx` scores one query's
+    * candidate rows, or None when every candidate survives. */
+  private def compactMatchesReference(
+      scorer: Int => graft.operators.VectorSearch.Scorer,
+      encode: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame,
+      approx: (org.apache.spark.sql.DataFrame, Array[Float], String, Option[Seq[Long]]) =>
+        Option[org.apache.spark.sql.DataFrame]): org.scalacheck.Prop = {
+    import graft.plans.QueryProbes
+    val comp = Gen.frequency(4 -> Gen.oneOf(0f, 1f, -1f, 0.5f), 1 -> Gen.chooseNum(-1f, 1f))
+    val vec4 = Gen.listOfN(4, comp).map(_.toArray)
+    val probe = Gen.oneOf(Gen.const(None),
+      Gen.nonEmptyListOf(Gen.chooseNum(0L, 1L)).map(bs => Some(bs.distinct)))
+    val input = for {
+      vs <- Gen.listOfN(4, vec4) // a small pool: rows tie on both scores
+      rows <- Gen.listOfN(16, Gen.zip(Gen.chooseNum(0, vs.size - 1), Gen.chooseNum(0L, 1L)))
+      qs <- Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, Gen.zip(vec4, probe)))
+      k <- Gen.chooseNum(1, 5)
+      rescore <- Gen.chooseNum(1, 12)
+      metric <- Gen.oneOf("cosine", "euclidean", "dot_product")
+    } yield (vs, rows, qs, k, rescore, metric)
+    org.scalacheck.Prop.forAllNoShrink(input) { case (vs, rows, qs, k, rescore, metric) =>
+      val enc = encode(rows.zipWithIndex.map { case ((v, b), i) => (i.toLong, vs(v).toSeq, b) }
+        .toDF("id", "embedding", "bucket")
+        .withColumn("embedding", col("embedding").cast("array<float>")), metric)
+        .localCheckpoint()
+      def bits(out: org.apache.spark.sql.DataFrame) =
+        out.select("query_id", "id", "distance").collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            java.lang.Double.doubleToLongBits(r.getDouble(2))))
+          .toSeq.sorted
+      val plan = QueryProbes(qs.zipWithIndex.map { case ((q, _), i) => i.toLong -> q },
+        qs.zipWithIndex.flatMap { case ((_, p), i) => p.map(i.toLong -> _) })
+      val got = bits(graft.operators.VectorSearch.nearest(enc, plan, metric, k, scorer(rescore)))
+      val expect = qs.zipWithIndex.flatMap { case ((q, p), i) =>
+        val cands = p.fold(enc)(bs => enc.where(col("bucket").isin(bs: _*)))
+        val survivors = approx(cands, q, metric, p).fold(cands.select("id"))(
+          _.orderBy(col("approx"), col("id")).limit(math.max(k, rescore)).select("id"))
+        bits(enc.join(survivors, Seq("id"), "left_semi")
+          .withColumn("distance",
+            round(distance(metric)(col("embedding"), qLit(q)), 6) + lit(0.0d))
+          .orderBy(col("distance"), col("id")).limit(k)
+          .select(lit(i.toLong).as("query_id"), col("id"), col("distance")))
+      }.sorted
+      got == expect
+    }
+  }
+
+  property("VectorSearch.nearest Sq8 == unfused approx cut + semi-join rescore") =
+    compactMatchesReference(graft.operators.VectorSearch.Sq8(_),
+      (df, _) => graft.operators.Quantization.encode(df, col("embedding")),
+      (cands, q, metric, _) => Some(cands.withColumn("approx",
+        graft.functions.VectorExpressions.sq8Distance(
+          col("codes"), col("qmin"), col("qmax"), q, metric))))
+
+  property("VectorSearch.nearest Bq == unfused approx cut + semi-join rescore") = {
+    import graft.operators.BinaryQuantization
+    compactMatchesReference(graft.operators.VectorSearch.Bq(_),
+      (df, _) => df.withColumn("codes", BinaryQuantization.encodeWordsInt(col("embedding"), 4)),
+      (cands, q, _, _) => Some(cands.withColumn("approx", BinaryQuantization.hamming(
+        col("codes"), BinaryQuantization.encodeWordsInt(qLit(q), 4)))))
+  }
+
+  /** PQ's ADC approx over literal per-subspace LUTs: `const` + Σ_m
+    * lut[m][code], ascending m, then the cosine norm division. */
+  private def adcApprox(luts: Seq[Column], metric: String, q: Array[Float]): Column = {
+    import graft.operators.ProductQuantization
+    ProductQuantization.approxColumn(luts.reduce(_ + _), metric,
+      if (metric == "cosine") Some(col("qmin")) else None,
+      lit(ProductQuantization.normLocal(q.toSeq)))
+  }
+
+  property("VectorSearch.nearest Pq == unfused approx cut + semi-join rescore") = {
+    import graft.operators.ProductQuantization
+    compactMatchesReference(graft.operators.VectorSearch.Pq(pqModel, _),
+      (df, _) => ProductQuantization.encode(df, col("embedding"), pqModel, withNorm = true)
+        .withColumnRenamed("pq_codes", "codes").withColumnRenamed("pq_norm", "qmin"),
+      (cands, q, metric, _) => Some(cands.withColumn("approx", adcApprox(
+        ProductQuantization.adcLut(pqModel, q, metric).toSeq.zipWithIndex.map { case (l, m) =>
+          element_at(typedLit(l.toSeq), col("codes").getItem(m).cast("int") + lit(1))
+        }, metric, q))))
+  }
+
+  property("VectorSearch.nearest ResidualPq == unfused approx cut + " +
+    "semi-join rescore (a fallback query rescores every row)") = {
+    import graft.operators.{IvfIndex, ProductQuantization}
+    compactMatchesReference(graft.operators.VectorSearch.ResidualPq(pqModel, pqCents, _),
+      (df, _) => ProductQuantization.encodeResidual(
+          IvfIndex.withCell(df.drop("bucket"), col("embedding"), pqCents),
+          col("embedding"), col("cell"), pqCents, pqModel, withNorm = true)
+        .withColumnRenamed("cell", "bucket")
+        .withColumnRenamed("pq_codes", "codes").withColumnRenamed("pq_norm", "qmin"),
+      (cands, q, metric, probe) => probe.map { cells =>
+        val luts = ProductQuantization.residualLutRows(pqModel, pqCents, cells, q, metric)
+          .toDF("__cell", "__const", "__lut")
+        cands.join(luts, col("bucket") === col("__cell")).withColumn("approx", adcApprox(
+          col("__const") +: pqModel.indices.map { m =>
+            element_at(element_at(col("__lut"), m + 1), col("codes").getItem(m).cast("int") + lit(1))
+          }, metric, q))
+      })
   }
 
   property("as-of join == per-row brute-force latest-at-or-before") = {

@@ -69,40 +69,41 @@ class QuantizationSpec extends AnyFunSuite {
       assert(recall >= 0.95, f"$metric recall@10 $recall%.3f < 0.95")
     }
 
-  test("binary quantization: word packing is the MSB-first 62-bit fold " +
+  test("binary quantization: word packing is the MSB-first 31-bit fold " +
     "(hand case), hamming is symmetric/zero-on-self") {
     import graft.operators.BinaryQuantization
-    // dim 3: bits 1,0,1 then 59 zero slots -> 2^61 + 2^59
+    // dim 3: bits 1,0,1 then 28 zero slots -> 2^30 + 2^28
     val df = Seq((1L, Seq(1.0f, -1.0f, 2.0f))).toDF("id", "v")
-    val words = df.select(BinaryQuantization.encodeWords(col("v"), 3))
-      .as[Seq[Long]].head()
-    assert(words == Seq((1L << 61) + (1L << 59)))
+    val words = df.select(BinaryQuantization.encodeWordsInt(col("v"), 3))
+      .as[Seq[Int]].head()
+    assert(words == Seq((1 << 30) + (1 << 28)))
     // zero counts as non-positive (x > 0 strictly)
     val z = Seq((1L, Seq(0.0f, 0.5f))).toDF("id", "v")
-      .select(BinaryQuantization.encodeWords(col("v"), 2)).as[Seq[Long]].head()
-    assert(z == Seq(1L << 60))
+      .select(BinaryQuantization.encodeWordsInt(col("v"), 2)).as[Seq[Int]].head()
+    assert(z == Seq(1 << 29))
     // hamming: zero on self, counts flipped signs
     val pair = Seq((Seq(1.0f, -1.0f, 1.0f, -1.0f), Seq(1.0f, 1.0f, -1.0f, -1.0f)))
       .toDF("a", "b")
       .select(BinaryQuantization.hamming(
-        BinaryQuantization.encodeWords(col("a"), 4),
-        BinaryQuantization.encodeWords(col("b"), 4)).as("h"),
+        BinaryQuantization.encodeWordsInt(col("a"), 4),
+        BinaryQuantization.encodeWordsInt(col("b"), 4)).as("h"),
         BinaryQuantization.hamming(
-          BinaryQuantization.encodeWords(col("a"), 4),
-          BinaryQuantization.encodeWords(col("a"), 4)).as("self"))
+          BinaryQuantization.encodeWordsInt(col("a"), 4),
+          BinaryQuantization.encodeWordsInt(col("a"), 4)).as("self"))
       .as[(Long, Long)].head()
     assert(pair == ((2L, 0L)))
-    // dims past one word spill into the next (65 dims -> 2 words)
+    // dims past one word spill into the next (65 dims -> 3 words)
     val wide = Seq((1L, Seq.fill(65)(1.0f))).toDF("id", "v")
-      .select(BinaryQuantization.encodeWords(col("v"), 65)).as[Seq[Long]].head()
-    assert(wide.length == 2)
-    assert(wide(1) == (7L << 59))   // dims 63,64,65 -> top 3 bits of word 1
+      .select(BinaryQuantization.encodeWordsInt(col("v"), 65)).as[Seq[Int]].head()
+    assert(wide.length == 3)
+    assert(wide(0) == Int.MaxValue && wide(1) == Int.MaxValue) // 31 set bits each
+    assert(wide(2) == (7 << 28))   // dims 63,64,65 -> top 3 bits of word 2
     // a query packed for a DIFFERENT dimension fails LOUDLY (null-padded
     // hammings would otherwise silently rank an arbitrary subset)
-    val enc128 = BinaryQuantization.withCodes(
-      Seq((1L, Seq.fill(128)(1.0f))).toDF("id", "v"), col("v"), 128)
+    val enc128 = Seq((1L, Seq.fill(128)(1.0f))).toDF("id", "v")
+      .withColumn("codes", BinaryQuantization.encodeWordsInt(col("v"), 128))
     val thrown = intercept[Exception] {
-      BinaryQuantization.search(enc128, "v", "id", Array.fill(64)(1.0f),
+      BinaryQuantization.searchStored(enc128, "v", "id", Array.fill(64)(1.0f),
         k = 1, rescore = 1, metric = "cosine").collect()
     }
     assert(thrown.getMessage != null)
@@ -113,7 +114,8 @@ class QuantizationSpec extends AnyFunSuite {
     import graft.operators.BinaryQuantization
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val n = emb.count().toInt
-    val encoded = BinaryQuantization.withCodes(emb, col("embedding"), 64)
+    val encoded = emb.withColumn("codes",
+        BinaryQuantization.encodeWordsInt(col("embedding"), 64))
       .localCheckpoint()
     val queries = emb.where(col("vec_id") < 20)
       .select("vec_id", "embedding").collect()
@@ -126,7 +128,7 @@ class QuantizationSpec extends AnyFunSuite {
           6) + lit(0.0d))
         .orderBy("distance", "vec_id").limit(10)
         .select("vec_id").as[Long].collect().toSet
-      val bq = BinaryQuantization.search(encoded, "embedding", "vec_id", q,
+      val bq = BinaryQuantization.searchStored(encoded, "embedding", "vec_id", q,
         k = 10, rescore = 50, metric = "cosine")
         .select("vec_id").as[Long].collect().toSet
       (flat intersect bq).size.toDouble / flat.size
@@ -145,7 +147,7 @@ class QuantizationSpec extends AnyFunSuite {
         6) + lit(0.0d))
       .orderBy("distance", "vec_id").limit(10)
       .select("vec_id").as[Long].collect().toSeq
-    val full = BinaryQuantization.search(encoded, "embedding", "vec_id", q0,
+    val full = BinaryQuantization.searchStored(encoded, "embedding", "vec_id", q0,
       k = 10, rescore = n, metric = "cosine")
       .select("vec_id").as[Long].collect().toSeq
     assert(full == flat0)
