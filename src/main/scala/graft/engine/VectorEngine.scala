@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.functions.{MetadataFunctions, VectorExpressions}
@@ -209,6 +212,30 @@ final class VectorEngine private (val spark: SparkSession,
       chunks = chunks.localCheckpoint()
       mutationsSinceCompact = 0
     }
+  }
+
+  /** A bulk batch's prepared rows, pinned ONCE (localCheckpoint — O(batch),
+    * distributed): the validation aggregate, the appended rows and any
+    * index upkeep then read one materialization of the caller's plan, so
+    * a non-deterministic input cannot store rows other than those
+    * validated, and no later read of the table re-runs that plan. An
+    * input that is already materialized — a local relation or a
+    * checkpoint, under column renames only — is not copied again when
+    * `rows` derives nothing from it but casts and literals. */
+  private def pinBatch[T](rows: Dataset[T], input: DataFrame,
+                          derives: Boolean): Dataset[T] = {
+    def materialized(p: LogicalPlan): Boolean = p match {
+      case Project(list, child) =>
+        list.forall {
+          case _: Attribute | Alias(_: Attribute, _) => true
+          case _ => false
+        } && materialized(child)
+      case _: LocalRelation => true
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
+    if (!derives && materialized(input.queryExecution.analyzed)) rows
+    else rows.localCheckpoint()
   }
 
   /** Parent-timestamp refresh (reference entities.py:93-99,148-166: the
@@ -428,13 +455,23 @@ final class VectorEngine private (val spark: SparkSession,
     * after set-based validation (no driver row loop). */
   def addDocumentsDf(libraryId: String, df: DataFrame): Long = {
     getLibrary(libraryId)
+    val t = now()
+    // the batch is pinned once: the aggregate validates the rows the
+    // documents table keeps (see pinBatch)
+    val rows = pinBatch(df.select(
+      col("id").cast("string"),
+      lit(libraryId).as("library_id"),
+      col("name").cast("string"),
+      col("metadata").cast("map<string,string>"),
+      lit(t).as("created_at"),
+      lit(t).as("updated_at")).as[DocumentRow], df, derives = false)
     // ONE validation action: name guard, within-batch duplicate ids, and
     // conflicts against the existing docs table (broadcast-joinable: the
     // conflict side is id-only) folded into a single aggregate. coalesce
     // keeps the empty-batch case a clean no-op instead of a NULL unbox.
-    val stats = df
+    val stats = rows
       .join(docs.select(col("id").as("__existing")),
-        df("id") === col("__existing"), "left_outer")
+        rows("id") === col("__existing"), "left_outer")
       .select(
         coalesce(sum(when(length(col("name")).between(1, MaxNameLen), 0)
           .otherwise(1)), lit(0L)).as("bad_name"),
@@ -450,15 +487,7 @@ final class VectorEngine private (val spark: SparkSession,
     if (stats.getAs[Long]("conflicts") > 0 ||
         stats.getAs[Long]("distinct_ids") != total)
       throw ConflictError("document id already exists")
-    val t = now()
-    val prepared = df.select(
-      col("id").cast("string"),
-      lit(libraryId).as("library_id"),
-      col("name").cast("string"),
-      col("metadata").cast("map<string,string>"),
-      lit(t).as("created_at"),
-      lit(t).as("updated_at")).as[DocumentRow]
-    docs = docs.unionByName(prepared)
+    docs = docs.unionByName(rows)
     touchLibrary(libraryId, t)
     afterMutation()
     total
@@ -592,10 +621,9 @@ final class VectorEngine private (val spark: SparkSession,
   }
 
   /** The IVF cell column for a library with a centroid model. */
-  private def cellColumn(libId: String): Column = {
+  private def cellColumn(libId: String, emb: Column = col("embedding")): Column = {
     val cs = cellModels(libId)
-    VectorExpressions.nearestCell(col("embedding"),
-      cs.map(_.id).toArray, cs.map(_.vec).toArray)
+    VectorExpressions.nearestCell(emb, cs.map(_.id).toArray, cs.map(_.vec).toArray)
   }
 
   /** Whether a pq library's codes are RESIDUAL-encoded (classic IVFADC:
@@ -616,23 +644,26 @@ final class VectorEngine private (val spark: SparkSession,
   /** The stored-codes expression of a pq library: residual codes when
     * [[pqResidual]] (reading the stored `bucket` cell column), raw codes
     * otherwise. */
-  private def pqCodesColumnFor(lib: LibraryRow): Column = {
-    val model = pqModels.getOrElse(lib.id, throw ValidationError(
-      "install PQ codebooks (setPqCodebooks/trainPqCodebooks) before ingest"))
+  private def pqCodesColumnFor(lib: LibraryRow,
+                               emb: Column = col("embedding")): Column = {
+    val model = pqModel(lib)
     if (pqResidual(lib))
-      ProductQuantization.residualCodesColumn(col("embedding"), col("bucket"),
+      ProductQuantization.residualCodesColumn(emb, col("bucket"),
         cellModels(lib.id), model).cast("array<int>")
     else
-      ProductQuantization.codesColumn(col("embedding"), model)
-        .cast("array<int>")
+      ProductQuantization.codesColumn(emb, model).cast("array<int>")
   }
+
+  /** A pq library's installed codebooks; ingest requires them. */
+  private def pqModel(lib: LibraryRow): ProductQuantization.Model =
+    pqModels.getOrElse(lib.id, throw ValidationError(
+      "install PQ codebooks (setPqCodebooks/trainPqCodebooks) before ingest"))
 
   /** Driver-side twin of [[pqCodesColumnFor]] for single-row adds
     * (`cell` is the row's just-derived bucket value). */
   private def pqEncodeLocal(lib: LibraryRow, cell: Option[Long],
                             v: Seq[Float]): Seq[Int] = {
-    val model = pqModels.getOrElse(lib.id, throw ValidationError(
-      "install PQ codebooks (setPqCodebooks/trainPqCodebooks) before ingest"))
+    val model = pqModel(lib)
     val input = (pqResidual(lib), cell) match {
       case (true, Some(c)) =>
         ProductQuantization.residualLocal(cellModels(lib.id), c, v)
@@ -703,22 +734,83 @@ final class VectorEngine private (val spark: SparkSession,
   def addChunksDf(libraryId: String, df: DataFrame): Long = {
     val lib = getLibrary(libraryId)
     val dim = lib.embedding_dimension
+    val t = now()
+    val nonFinite = exists(col("embedding"),
+      x => isnan(x) || x === lit(Float.PositiveInfinity) ||
+        x === lit(Float.NegativeInfinity))
+    // the bucket and the codes are derived only from an embedding the
+    // checks below accept: a row they reject derives nulls, so no
+    // derivation can throw before the batch's verdict is in
+    val emb = when(size(col("embedding")) === dim && !nonFinite,
+      col("embedding"))
+    val derives = bucketed(lib) || lib.storage != StorageFloat32
+    val bucketCol =
+      if (lib.index_kind == IndexKindLsh)
+        lshBucket(emb, matrices(libraryId).matrix.map(_.toArray).toArray)
+      else if (lib.index_kind == IndexKindIvf && cellModels.contains(libraryId))
+        cellColumn(libraryId, emb)
+      else lit(null).cast("long")
+    val base = df.select(
+      col("id").cast("string"),
+      col("document_id").cast("string"),
+      lit(libraryId).as("library_id"),
+      col("text").cast("string"),
+      col("embedding").cast("array<float>"),
+      col("metadata").cast("map<string,string>"),
+      col("chunk_index").cast("int"),
+      bucketCol.as("bucket"))
+    // sq8 libraries derive the quantized representation INSIDE the ingest
+    // plan (Quantization.encode — same expressions the oracle replays);
+    // float32 libraries carry nulls.
+    val withCodes =
+      if (lib.storage == StorageSq8) Quantization.encode(base, emb)
+      else if (lib.storage == StoragePq) base
+        // PQ codes live in the shared `codes` column (RESIDUAL-encoded
+        // off the just-derived bucket cell on an ivf library — classic
+        // IVFADC) and the row's L2 norm in the shared `qmin` slot (the
+        // cosine ADC denominator — the library row's storage kind says
+        // how to read them); ingest REQUIRES installed codebooks, like
+        // ivf requires a model before cells can be derived — refused
+        // below, after the row checks, so an empty batch stays a no-op
+        .withColumn("qmin", ProductQuantization.normColumn(emb))
+        .withColumn("qmax", lit(null).cast("double"))
+        .withColumn("codes",
+          if (pqModels.contains(libraryId)) pqCodesColumnFor(lib, emb)
+          else lit(null).cast("array<int>"))
+      else if (lib.storage == StorageBq) base
+        // bq packs the sign bits into the shared codes column — the
+        // same in-plan derivation discipline as sq8/pq, no model needed
+        .withColumn("qmin", lit(null).cast("double"))
+        .withColumn("qmax", lit(null).cast("double"))
+        .withColumn("codes", BinaryQuantization.encodeWordsInt(emb, dim))
+      else base
+        .withColumn("qmin", lit(null).cast("double"))
+        .withColumn("qmax", lit(null).cast("double"))
+        .withColumn("codes", lit(null).cast("array<int>"))
+    // ONE pin: the validation aggregate, the chunks table, the histogram
+    // and the Bloom filter all read the same rows (see pinBatch). The
+    // histogram and the filter must fold in exactly the rows the table
+    // keeps: aggregating a re-execution of a non-deterministic caller
+    // frame would skew every later adaptive probe, or miss ids that did
+    // land (a Bloom false negative, breaking the gate's exactness).
+    val rows = pinBatch(withCodes
+      .withColumn("created_at", lit(t))
+      .withColumn("updated_at", lit(t))
+      .as[ChunkRow], df, derives)
     // ONE validation action for the whole batch: the text/index/dimension/
     // finiteness guards, the orphan check (left join against the library's
     // doc ids), and the duplicate-id checks (within the batch via
     // count_distinct, against the existing chunks table via a second id-only
     // left join) all fold into a single aggregate — same per-row guards as
-    // addChunksBatch's validateChunk, set-based. coalesce keeps an empty
+    // addChunksBatch's validateChunk, set-based — which also returns the
+    // batch's document ids for the parent refresh. coalesce keeps an empty
     // batch a clean no-op.
-    val nonFinite = exists(col("embedding"),
-      x => isnan(x) || x === lit(Float.PositiveInfinity) ||
-        x === lit(Float.NegativeInfinity))
-    val stats = df
+    val stats = rows
       .join(docs.where(col("library_id") === libraryId)
         .select(col("id").as("__doc")),
-        df("document_id") === col("__doc"), "left_outer")
+        rows("document_id") === col("__doc"), "left_outer")
       .join(chunks.select(col("id").as("__chunk")),
-        df("id") === col("__chunk"), "left_outer")
+        rows("id") === col("__chunk"), "left_outer")
       .select(
         coalesce(sum(when(length(col("text")).between(1, MaxTextLen), 0)
           .otherwise(1)), lit(0L)).as("bad_text"),
@@ -732,7 +824,8 @@ final class VectorEngine private (val spark: SparkSession,
         coalesce(sum(when(col("__chunk").isNotNull, 1).otherwise(0)), lit(0L))
           .as("conflicts"),
         count(lit(1)).as("total"),
-        coalesce(count_distinct(df("id")), lit(0L)).as("distinct_ids"))
+        coalesce(count_distinct(rows("id")), lit(0L)).as("distinct_ids"),
+        collect_set(rows("document_id")).as("doc_ids"))
       .head()
     val total = stats.getAs[Long]("total")
     if (total == 0) return 0L
@@ -749,91 +842,32 @@ final class VectorEngine private (val spark: SparkSession,
     if (stats.getAs[Long]("conflicts") > 0 ||
         stats.getAs[Long]("distinct_ids") != total)
       throw ConflictError("chunk id already exists")
-    val t = now()
-    val bucketCol =
-      if (lib.index_kind == IndexKindLsh)
-        lshBucket(col("embedding"), matrices(libraryId).matrix.map(_.toArray).toArray)
-      else if (lib.index_kind == IndexKindIvf && cellModels.contains(libraryId))
-        cellColumn(libraryId)
-      else lit(null).cast("long")
-    val base = df.select(
-      col("id").cast("string"),
-      col("document_id").cast("string"),
-      lit(libraryId).as("library_id"),
-      col("text").cast("string"),
-      col("embedding").cast("array<float>"),
-      col("metadata").cast("map<string,string>"),
-      col("chunk_index").cast("int"),
-      bucketCol.as("bucket"))
-    // sq8 libraries derive the quantized representation INSIDE the ingest
-    // plan (Quantization.encode — same expressions the oracle replays);
-    // float32 libraries carry nulls.
-    val withCodes =
-      if (lib.storage == StorageSq8) Quantization.encode(base, col("embedding"))
-      else if (lib.storage == StoragePq) base
-        // PQ codes live in the shared `codes` column (RESIDUAL-encoded
-        // off the just-derived bucket cell on an ivf library — classic
-        // IVFADC) and the row's L2 norm in the shared `qmin` slot (the
-        // cosine ADC denominator — the library row's storage kind says
-        // how to read them); ingest REQUIRES installed codebooks, like
-        // ivf requires a model before cells can be derived
-        .withColumn("qmin", ProductQuantization.normColumn(col("embedding")))
-        .withColumn("qmax", lit(null).cast("double"))
-        .withColumn("codes", pqCodesColumnFor(lib))
-      else if (lib.storage == StorageBq) base
-        // bq packs the sign bits into the shared codes column — the
-        // same in-plan derivation discipline as sq8/pq, no model needed
-        .withColumn("qmin", lit(null).cast("double"))
-        .withColumn("qmax", lit(null).cast("double"))
-        .withColumn("codes",
-          BinaryQuantization.encodeWordsInt(col("embedding"), dim))
-      else base
-        .withColumn("qmin", lit(null).cast("double"))
-        .withColumn("qmax", lit(null).cast("double"))
-        .withColumn("codes", lit(null).cast("array<int>"))
-    val derived = withCodes
-      .withColumn("created_at", lit(t))
-      .withColumn("updated_at", lit(t))
-      .as[ChunkRow]
-    // For histogram-maintained (LSH) libraries the batch is PINNED
-    // (localCheckpoint — O(batch), distributed) so the histogram aggregate
-    // below and the rows the chunks table keeps are the SAME
-    // materialization: aggregating a re-execution of the caller's
-    // DataFrame would silently desync the histogram on a
-    // non-deterministic input df and skew every later adaptive probe.
-    // bloom-maintained libraries need the SAME pin as histogram ones:
-    // the filter must fold in exactly the ids the chunks table keeps —
-    // re-executing a non-deterministic caller frame could set bits for
-    // ids that never landed (harmless) or MISS ids that did (a false
-    // negative, breaking the gate's exactness)
-    val prepared =
-      if (hists.contains(libraryId) || blooms.contains(libraryId))
-        derived.localCheckpoint()
-      else derived
-    chunks = chunks.unionByName(prepared)
+    // a pq library refuses a non-empty batch until codebooks are installed
+    if (lib.storage == StoragePq) pqModel(lib)
+    chunks = chunks.unionByName(rows)
     // histogram upkeep: ONE O(batch) aggregate over the ingested rows (the
     // pinned batch frame, never the chunks table) keeps the LSH histogram
     // exact
     if (hists.contains(libraryId))
-      histUpdate(libraryId, prepared.groupBy("bucket").count().collect()
+      histUpdate(libraryId, rows.groupBy("bucket").count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)))
     // bloom upkeep: OR the batch's id bits into the filter (one O(batch)
     // pack aggregate + an O(m/64) bounded collect, the build discipline)
     blooms.get(libraryId).foreach { bs =>
       val add = graft.operators.BloomFilter.build(
-        prepared.toDF().select(col("id")), col("id"), bs.m, bs.k)
+        rows.toDF().select(col("id")), col("id"), bs.m, bs.k)
       var i = 0
       while (i < add.length) { bs.words(i) |= add(i); i += 1 }
     }
     // set-based parent refresh: every document referenced by the batch gets
     // its updated_at bumped (reference increments its chunk_count per row),
-    // as does the library — no driver row loop.
-    val touched = df.select(col("document_id").as("__tid")).distinct()
-    docs = docs.toDF()
-      .join(touched, col("id") === col("__tid"), "left_outer")
-      .withColumn("updated_at",
-        when(col("__tid").isNotNull, lit(t)).otherwise(col("updated_at")))
-      .drop("__tid")
+    // as does the library — no driver row loop. A projection over the
+    // batch's ids (at most one per row), so the documents table holds no
+    // reference to the caller's plan.
+    val touched = stats.getAs[scala.collection.Seq[String]]("doc_ids")
+    docs = docs.withColumn("updated_at",
+        when(col("id").isInCollection(touched), lit(t))
+          .otherwise(col("updated_at")))
       .as[DocumentRow]
     touchLibrary(libraryId, t)
     markDirty(libraryId)
@@ -1925,8 +1959,10 @@ final class VectorEngine private (val spark: SparkSession,
     * Scale shape per call: the document batch is chunked and pinned
     * once (O(batch)); each gate is one pass over the (shrinking) batch
     * with only broadcast-sized state (the benchmark shingle set, the
-    * per-stage counts); the corpus is touched exactly once, by the
-    * near-dup gate's bucket-blocked scan — never shuffled. Requires a
+    * per-stage counts). The corpus is touched three times: by the
+    * replay gate's anti-join on chunk ids, by the near-dup gate's
+    * bucket-blocked scan (never shuffled), and by the append's
+    * id-conflict join. Requires a
     * random_projection library (the near-dup gate blocks on the stored
     * sign-bit buckets).
     *
@@ -2080,7 +2116,10 @@ final class VectorEngine private (val spark: SparkSession,
     * Layout: the small entity tables (libraries/documents/matrices — all
     * O(entities), never O(vectors)) are rewritten in full into a fresh
     * `v<ts>` directory and committed by writing MANIFEST last, exactly as
-    * before. The chunks table — the O(100 TB) one — lives at a STABLE
+    * before. The model tables beside them (`centroids`, `pq_codebooks`,
+    * `histograms`, `blooms`) are written only when they hold rows; load
+    * reads an absent one as empty, so each costs no job while unused. The
+    * chunks table — the O(100 TB) one — lives at a STABLE
     * `dir/chunks` path partitioned by library_id; a save to the same
     * directory as the previous save rewrites ONLY the partitions of
     * libraries mutated since then (dynamic partition overwrite), deleting
@@ -2112,33 +2151,34 @@ final class VectorEngine private (val spark: SparkSession,
       docs.toDF().write.mode("overwrite").parquet(s"$base/documents.parquet")
       matrices.values.toSeq.toDS().toDF().write.mode("overwrite")
         .parquet(s"$base/matrices.parquet")
-      cellModels.toSeq
-        .flatMap { case (lid, cs) => cs.map(ct => CentroidRow(lid, ct.id, ct.vec.toSeq)) }
-        .toDS().toDF().write.mode("overwrite")
-        .parquet(s"$base/centroids.parquet")
-      pqModels.toSeq
+      // the optional model tables are written only when they hold rows:
+      // load reads an absent one as empty
+      def writeOptional[T: Encoder](rows: Seq[T], name: String): Unit =
+        if (rows.nonEmpty)
+          rows.toDS().write.mode("overwrite").parquet(s"$base/$name.parquet")
+      writeOptional(cellModels.toSeq
+        .flatMap { case (lid, cs) => cs.map(ct => CentroidRow(lid, ct.id, ct.vec.toSeq)) },
+        "centroids")
+      writeOptional(pqModels.toSeq
         .flatMap { case (lid, model) =>
           model.zipWithIndex.flatMap { case (cb, m) =>
-            cb.map(c => PqRow(lid, m, c.id, c.vec.toSeq)) } }
-        .toDS().toDF().write.mode("overwrite")
-        .parquet(s"$base/pq_codebooks.parquet")
+            cb.map(c => PqRow(lid, m, c.id, c.vec.toSeq)) } },
+        "pq_codebooks")
       // flush stale histograms (once per cascade-deleted library), then
       // persist them as index metadata beside the matrices — a reopened
       // engine's adaptive probes never aggregate the chunks table
       staleHists.foreach(bucketHistogram)
-      hists.toSeq
-        .flatMap { case (lid, h) => h.toSeq.map { case (b, n) => HistRow(lid, b, n) } }
-        .toDS().toDF().write.mode("overwrite")
-        .parquet(s"$base/histograms.parquet")
+      writeOptional(hists.toSeq
+        .flatMap { case (lid, h) => h.toSeq.map { case (b, n) => HistRow(lid, b, n) } },
+        "histograms")
       // Bloom filters: sparse non-zero words + a header row per library
       // (w = -1) so (m, k) survive an all-zero filter
-      blooms.toSeq.flatMap { case (lid, bs) =>
+      writeOptional(blooms.toSeq.flatMap { case (lid, bs) =>
         BloomRow(lid, bs.m, bs.k, -1, 0L) +:
           bs.words.zipWithIndex.collect {
             case (wd, w) if wd != 0L => BloomRow(lid, bs.m, bs.k, w, wd)
           }.toSeq
-      }.toDS().toDF().write.mode("overwrite")
-        .parquet(s"$base/blooms.parquet")
+      }, "blooms")
       val chunksPath = s"$dir/chunks"
       val out = chunks.toDF()
       // does the live chunks plan reference files under THIS dir?

@@ -194,10 +194,8 @@ object StreamingIngest {
         corpusSurvivors, col("id"), col("embedding"),
         engine.lshProjectionMatrix(libraryId), threshold)
       .select(col("id_b").as("id")).distinct()
-    // no third pin: with corpusSurvivors materialized, re-executing this
-    // anti-join per addChunksDf action costs O(batch) — the corpus scan
-    // behind corpusLosers never re-runs — and addChunksDf pins its own
-    // derived batch for the histogram path anyway
+    // no third pin: addChunksDf pins its batch once, so this anti-join
+    // runs once per call
     val fresh = corpusSurvivors.join(intraLosers, Seq("id"), "left_anti")
     GatedIngestReport(nBloomDefiniteNew, engine.addChunksDf(libraryId, fresh))
   }

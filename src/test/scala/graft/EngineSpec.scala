@@ -629,6 +629,71 @@ class EngineSpec extends AnyFunSuite {
     assert(jobs <= 5, s"expected <= 5 jobs for bulk ingest, got $jobs")
   }
 
+  /** n distributed 4-d chunk rows under `doc`, ids `<prefix><i>`. */
+  private def rangeBatch(n: Int, doc: String, prefix: String,
+                         text: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.functions._
+    spark.range(n).select(
+      concat(lit(prefix), col("id")).as("id"),
+      lit(doc).as("document_id"),
+      text.as("text"),
+      array((1 to 4).map(j => sin(col("id") * j + 1).cast("float")): _*)
+        .as("embedding"),
+      typedLit(Map.empty[String, String]).as("metadata"),
+      col("id").cast("int").as("chunk_index"))
+  }
+
+  test("bulk chunk ingest runs the caller's plan once: validation, the " +
+    "stored rows, the parent refresh, counts and save read one pin") {
+    for (kind <- Seq("flat", "random_projection")) {
+      val (e, lib, doc) = freshWithData(kind)
+      val runs = spark.sparkContext.longAccumulator(s"rows-$kind")
+      val counted = org.apache.spark.sql.functions.udf { (i: Long) =>
+        runs.add(1L); s"text $i"
+      }
+      val n = 40
+      assert(e.addChunksDf(lib, rangeBatch(n, doc, "u", counted(col("id")))) == n)
+      assert(e.getDocument(doc).id == doc)
+      assert(e.chunkCount(lib) == 4 + n)
+      e.save(Files.tmp(s"graft-pin-once-$kind"))
+      assert(runs.value == n, s"kind=$kind: the caller's plan ran ${runs.value / n}x")
+    }
+  }
+
+  test("a non-deterministic bulk batch stores exactly the rows it validated " +
+    "and counted") {
+    import org.apache.spark.sql.functions._
+    val (e, lib, doc) = freshWithData()
+    // rand() is fixed per plan; the UDF filter differs per execution
+    val keep = udf(() => scala.util.Random.nextBoolean()).asNondeterministic()
+    val batch = rangeBatch(200, doc, "r", lit("t"))
+      .withColumn("embedding", array((1 to 4).map(_ => rand().cast("float")): _*))
+      .where(keep())
+    val total = e.addChunksDf(lib, batch)
+    def stored = e.chunksDf.where(col("id").startsWith("r"))
+      .orderBy("id").collect().toSeq
+    val first = stored
+    assert(first.length == total)
+    assert(stored == first)
+    assert(e.chunkCount(lib) == 4 + total)
+  }
+
+  test("after a bulk ingest, getDocument runs exactly one job: the " +
+    "documents table carries no reference to the batch's plan") {
+    val (e0, lib, doc) = freshWithData()
+    val dir = Files.tmp("graft-getdoc-jobs")
+    e0.save(dir)
+    val e = VectorEngine.open(spark, dir)
+    // a shuffling caller plan, like the dedup gates' anti-joins
+    val batch = rangeBatch(30, doc, "g", lit("t"))
+    val gated = batch.join(batch.select(col("id")).where(col("chunk_index") % 3 === 0),
+      Seq("id"), "left_anti")
+    e.addChunksDf(lib, gated)
+    val (row, jobs) = jobsOf("getdoc-after-ingest")(e.getDocument(doc))
+    assert(row.id == doc)
+    assert(jobs == 1, s"expected 1 job for getDocument, got $jobs")
+  }
+
   test("ivf library: explicit centroid model, stored cells, nprobe search " +
     "with < k fallback, batch parity, persistence round-trip, self-train") {
     val (e, lib, doc) = freshWithData("ivf")

@@ -133,4 +133,59 @@ class PersistenceLayoutSpec extends AnyFunSuite {
       e2.chunksDf.groupBy("bucket").count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
+
+  /** Every entity table of `e`, each collected in id order with its
+    * columns by name (a reopened chunks table puts its partition column
+    * last), and the libraries' histograms. */
+  private def state(e: VectorEngine, libs: Seq[String]) = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col): _*).orderBy("id").collect().toSeq
+    (rows(e.librariesDf), rows(e.documentsDf), rows(e.chunksDf),
+      libs.map(e.bucketHistogram))
+  }
+
+  /** A flat and an LSH library with rows, and no ivf, pq or Bloom model. */
+  private def modelFreeEngine(): (VectorEngine, Seq[String]) = {
+    val e = VectorEngine.create(spark)
+    val libs = Seq(VectorEngine.IndexKindFlat, VectorEngine.IndexKindLsh).map { kind =>
+      val lib = e.createLibrary(kind, dim = 8, indexKind = kind, lshProjections = 4)
+      val doc = e.createDocument(lib.id, "d")
+      e.addChunksDf(lib.id, synthBatch(50, 8, doc.id, kind))
+      lib.id
+    }
+    (e, libs)
+  }
+
+  private def versionDir(dir: String): String =
+    s"$dir/" + java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/MANIFEST")).trim
+
+  test("save writes no parquet for an empty model table; the reopened " +
+    "engine equals the saved one") {
+    val (e, libs) = modelFreeEngine()
+    val dir = graft.operators.Scratch.newDir("layout-optional").toString
+    e.save(dir)
+    val base = versionDir(dir)
+    def written(table: String) =
+      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$table.parquet"))
+    Seq("centroids", "pq_codebooks", "blooms").foreach(t => assert(!written(t), t))
+    Seq("libraries", "documents", "matrices", "histograms").foreach(t => assert(written(t), t))
+    assert(state(VectorEngine.open(spark, dir), libs) == state(e, libs))
+  }
+
+  test("a state dir whose model tables exist but hold no rows still opens " +
+    "and equals the saved engine") {
+    import spark.implicits._
+    val (e, libs) = modelFreeEngine()
+    val dir = graft.operators.Scratch.newDir("layout-empty-models").toString
+    e.save(dir)
+    val base = versionDir(dir)
+    // the layout earlier builds wrote: every model table present, empty
+    def writeEmpty(ds: org.apache.spark.sql.Dataset[_], table: String): Unit =
+      ds.write.mode("overwrite").parquet(s"$base/$table.parquet")
+    writeEmpty(Seq.empty[VectorEngine.CentroidRow].toDS(), "centroids")
+    writeEmpty(Seq.empty[VectorEngine.PqRow].toDS(), "pq_codebooks")
+    writeEmpty(Seq.empty[VectorEngine.HistRow].toDS(), "histograms")
+    writeEmpty(Seq.empty[VectorEngine.BloomRow].toDS(), "blooms")
+    assert(state(VectorEngine.open(spark, dir), libs) == state(e, libs))
+  }
 }
